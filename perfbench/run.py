@@ -4,11 +4,11 @@
     python3 perfbench/run.py --workload dashboard --seed 1 --seconds 20 --trace 0
 
 Builds the engine and the harness from source on first use (into
-`perfbench/target` and `.bench_build/`), writes the fixed input tables,
-runs one workload in one JVM with a single client thread in a closed loop
-on `local[nproc]`, checks the outputs, and prints a report: one line per
-metric with its unit and sample count, then one JSON line with
-`correct`, `attempted`, `failed` and `metrics`. `--trace 0` gives the
+`perfbench/target` and `.bench_build/`), runs one workload over the tables
+in `perfbench/data/sf0.01` in one JVM with a single client thread in a
+closed loop on `local[nproc]`, checks the outputs, and prints a report:
+one line per metric with its unit and sample count, then one JSON line
+with `correct`, `attempted`, `failed` and `metrics`. `--trace 0` gives the
 end-to-end metrics, `--trace 1` the per-layer ones. See
 `perfbench/NOTES.md` for the workloads, metrics and layers.
 """
@@ -25,8 +25,8 @@ import sys
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, HERE)
-import gen_data  # noqa: E402
+# The engine's sf0.01 test tables, byte for byte (see NOTES.md)
+DATA_DIR = os.path.join(HERE, "data", "sf0.01")
 
 WORKLOADS = ("dashboard", "car_ingest")
 BUILD_DIR = ".bench_build"
@@ -128,17 +128,6 @@ def build(root, build_dir):
     return cp, True
 
 
-def tables(build_dir):
-    """The fixed input tables, written once per checkout."""
-    data = os.path.join(build_dir, f"data-v{gen_data.VERSION}")
-    if not os.path.isdir(data):
-        tmp = data + ".partial"
-        shutil.rmtree(tmp, ignore_errors=True)
-        gen_data.main(tmp)
-        os.rename(tmp, data)
-    return data
-
-
 def run_jvm(cp, tmp, args, deadline):
     """Run one harness JVM; its output goes to stderr, stdout stays ours."""
     cmd = (["java"] + JVM_OPTS + [f"-Djava.io.tmpdir={tmp}", "-cp", cp, "perfbench.Main"]
@@ -224,7 +213,6 @@ def main(argv=None):
     build_dir = os.path.join(root, BUILD_DIR)
     os.makedirs(build_dir, exist_ok=True)
     cp, built = build(root, build_dir)
-    data = tables(build_dir)
     run_id = f"{args.workload}-seed{args.seed}-trace{args.trace}"
     work = os.path.join(build_dir, "work", run_id)
     shutil.rmtree(work, ignore_errors=True)
@@ -235,7 +223,7 @@ def main(argv=None):
         os.remove(out)
     deadline = start + (BUILD_LIMIT_S if built else RUN_LIMIT_S)
     jvm_args = [args.workload, str(args.seed), str(args.seconds), str(args.trace),
-                data, work, out, os.path.join(HERE, "digests.json")]
+                DATA_DIR, work, out, os.path.join(HERE, "digests.json")]
     if args.record_digests:
         jvm_args.append("record")
     try:

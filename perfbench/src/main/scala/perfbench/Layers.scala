@@ -2,6 +2,9 @@ package perfbench
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+
 /** Per-layer metrics of a traced run, from its spans and the Spark work
   * attributed to them. Span names are the layers the harness wraps:
   * `op` (one closed-loop operation), `operators` (building a `SparkEntry` query),
@@ -13,7 +16,9 @@ import scala.jdk.CollectionConverters._
   * phases of each query execution). */
 object Layers {
 
-  /** Forcing actions: their jobs are the `exec` layer's work. */
+  /** Forcing actions: their time, jobs and task metrics are the `exec`
+    * layer's. `sources.api_s`, `sources.append_s` and `sources.compact_s`
+    * break the same spans down by call; they are parts of `exec.s`. */
   val forcing = Set("exec", "api", "append", "compact")
   val selfTimed = Seq("op", "operators", "tables", "car", "exec", "api", "append", "compact")
 
@@ -37,7 +42,7 @@ object Layers {
       "operators.build_jobs" -> sum(build)(_.jobs),
       "plans.s" -> sum(all)(_.planNanos) / 1e9,
       "plans.codegen_fallback_ops" -> sum(all)(_.codegenFallback),
-      "exec.s" -> (total("exec") + total("api")),
+      "exec.s" -> forcing.toSeq.map(total).sum,
       "exec.jobs" -> sum(exec)(_.jobs),
       "exec.stages" -> sum(exec)(_.stages),
       "exec.tasks" -> sum(exec)(_.tasks),
@@ -59,6 +64,24 @@ object Layers {
       "sources.files_after_compact", "sources.api_rows", "sources.bytes_per_row")
       .map(k => k -> loop.counters(k)) ++
       self.map { case (name, s) => s"self.${name.replace('.', '_')}_s" -> s }
+  }
+
+  /** The `cache` layer: persisted RDDs, their bytes and checkpoint files
+    * still held by the context. The harness counts them after the loop,
+    * before anything is unpersisted or cleaned. */
+  def cacheLeft(sc: SparkContext): Map[String, Double] = {
+    val checkpointFiles = sc.getCheckpointDir.map { d =>
+      val p = new Path(d)
+      val fs = p.getFileSystem(sc.hadoopConfiguration)
+      val it = fs.listFiles(p, true)
+      var n = 0L
+      while (it.hasNext) { it.next(); n += 1 }
+      n
+    }.getOrElse(0L)
+    Map(
+      "cache.rdds_left" -> sc.getPersistentRDDs.size.toDouble,
+      "cache.bytes_left" -> sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum.toDouble,
+      "cache.checkpoint_files_left" -> checkpointFiles.toDouble)
   }
 
   /** Self time per layer: a span's duration minus the part of it that its

@@ -9,7 +9,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.management.GarbageCollectionNotificationInfo
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.Tables
@@ -41,9 +40,6 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  val tables = Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
-    "region", "events", "documents", "embeddings")
 
   /** Heap in use after each collection during the loop; the peak is kept. */
   object Heap {
@@ -84,7 +80,7 @@ object Main {
       val spark = session(workDir)
       var gen = 0.0
       if (workload == "dashboard")
-        tables.foreach(t => Tables(spark, dataDir, t).limit(1).write.format("noop")
+        Dashboard.tables.foreach(t => Tables(spark, dataDir, t).limit(1).write.format("noop")
           .mode("overwrite").save())
       else {
         val g0 = System.nanoTime()
@@ -136,19 +132,7 @@ object Main {
       ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
     }.min
 
-    val sc = spark.sparkContext
-    val checkpointFiles = sc.getCheckpointDir.map { d =>
-      val p = new Path(d)
-      val fs = p.getFileSystem(sc.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      n
-    }.getOrElse(0L)
-    val cache = Map(
-      "cache.rdds_left" -> sc.getPersistentRDDs.size.toDouble,
-      "cache.bytes_left" -> sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum.toDouble,
-      "cache.checkpoint_files_left" -> checkpointFiles.toDouble)
+    val cache = Layers.cacheLeft(spark.sparkContext)
 
     val gens = setupRuns.map(_._2).sorted
     val layers =

@@ -44,6 +44,18 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(layers("operators.build_jobs") == build.jobs.toDouble)
   }
 
+  test("state a persisting operator leaves in the session counts in the cache layer") {
+    val before = Layers.cacheLeft(spark.sparkContext)
+    graft.operators.Relational.keySkewProfile(
+      spark.range(1000).toDF("k").selectExpr("k % 7 as k"), org.apache.spark.sql.functions.col("k"))
+      .collect()
+    val after = Layers.cacheLeft(spark.sparkContext)
+    assert(after("cache.rdds_left") == before("cache.rdds_left") + 1)
+    assert(after("cache.bytes_left") > before("cache.bytes_left"))
+    spark.catalog.clearCache()
+    assert(Layers.cacheLeft(spark.sparkContext)("cache.rdds_left") == 0)
+  }
+
   test("the digest ignores row order and last-ulp noise but rejects a perturbed row") {
     val rows = Seq(Row(1L, "a", 0.1 + 0.2, Seq(1, 2)), Row(2L, "b", 3.0, Seq.empty[Int]))
     val digest = Checks.digestRows(rows)

@@ -5,6 +5,7 @@ summarise each metric, from the root of a checkout:
     python3 perfbench/steady.py --seeds 1-10 --trace 0 --out untraced.json
     python3 perfbench/steady.py --seeds 1-3 --trace 1 --out traced.json
     python3 perfbench/steady.py --compare untraced.json traced.json
+    python3 perfbench/steady.py --seeds 21-24 --paired --out overhead.json
 
 Runs are placed back to back and interleaved across workloads (seed 1 of
 every workload, then seed 2, ...), so a drift of the machine during the
@@ -15,6 +16,11 @@ load average before it and the CPU steal share during it (from
 /proc/stat). For each workload and metric the summary gives the median, the
 quartiles (statistics.quantiles, n=4) and the quartile spread as a share of
 the median.
+
+`--paired` runs each seed untraced and traced back to back (which one goes
+first alternates with the seed), so that the tracing overhead, the median
+of the per-pair differences, is not confounded by a drift of the machine
+between two receipts.
 
 `--compare A B` prints, per workload and end-to-end metric, the median of B
 minus the median of A (the tracing overhead when A is untraced and B
@@ -113,12 +119,32 @@ def compare(path_a, path_b):
                       f"{ {k: rb['layers'][k] for k in DETERMINISTIC} }")
 
 
+def paired_overhead(runs):
+    """Per workload and end-to-end metric: the median untraced and traced
+    values and the median of the traced-minus-untraced pair differences."""
+    out = {}
+    for w in sorted({r["workload"] for r in runs}):
+        pairs = {}
+        for r in runs:
+            if r["workload"] == w:
+                pairs.setdefault(r["seed"], {})[r["trace"]] = r["metrics"]
+        pairs = [p for p in pairs.values() if len(p) == 2]
+        out[w] = {m: {"untraced": statistics.median(p[0][m] for p in pairs),
+                      "traced": statistics.median(p[1][m] for p in pairs),
+                      "diff": statistics.median(p[1][m] - p[0][m] for p in pairs),
+                      "pairs": len(pairs)}
+                  for m in pairs[0][0]}
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workloads", default=",".join(run.WORKLOADS))
     ap.add_argument("--seeds", default="1-10")
     ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", type=int, default=0)
+    ap.add_argument("--paired", action="store_true",
+                    help="run every seed untraced and traced, for the tracing overhead")
     ap.add_argument("--out")
     ap.add_argument("--compare", nargs=2, metavar=("A", "B"))
     args = ap.parse_args()
@@ -128,14 +154,24 @@ def main():
     runs = []
     for seed in seed_range(args.seeds):
         for w in args.workloads.split(","):
-            r = run_once(w, seed, args.seconds, args.trace)
-            runs.append(r)
-            print(json.dumps(r), flush=True)
-    report = {"runs": runs, "summary": summarise(runs)}
+            traces = ((0, 1) if seed % 2 else (1, 0)) if args.paired else (args.trace,)
+            for trace in traces:
+                r = run_once(w, seed, args.seconds, trace)
+                runs.append(r)
+                print(json.dumps(r), flush=True)
+    if args.paired:
+        report = {"runs": runs, "overhead": paired_overhead(runs)}
+        for w, ms in report["overhead"].items():
+            for m, o in ms.items():
+                print(f"{w:11s} {m:16s} untraced {o['untraced']:.4g} traced {o['traced']:.4g} "
+                      f"overhead {o['diff']:+.4g} ({o['diff'] / o['untraced']:+.1%}, "
+                      f"{o['pairs']} pairs)")
+    else:
+        report = {"runs": runs, "summary": summarise(runs)}
     os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     with open(args.out, "w") as fh:
         json.dump(report, fh, indent=1)
-    for w, ms in report["summary"].items():
+    for w, ms in report.get("summary", {}).items():
         for m, s in ms.items():
             print(f"{w:11s} {m:16s} median {s['median']:.4g} q1 {s['q1']:.4g} "
                   f"q3 {s['q3']:.4g} spread {s['spread']:.3f}")
