@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main. Forces each query with the `noop` sink —
   * every row and every column of the result is materialized (VERDICT r1:
   * `.count()` let Catalyst prune all columns and flatter scan-heavy
@@ -230,16 +228,8 @@ object Bench {
   private def runInProcess(
       only: Option[Set[String]], printLine: Boolean = true): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEATS", "5").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     val loadBefore = loadAvg()
     // untimed warmup: pay session/codegen/parquet-footer init once, not
@@ -281,19 +271,10 @@ object Bench {
           // stop the clock BEFORE cleanup: billing the GC pause of the
           // just-finished query to its own sample biased even min-of-N up
           val elapsed = (System.nanoTime() - t0) / 1e9
-          // drop per-query artifacts (broadcast blocks, codegen refs) so
-          // later runs aren't taxed by earlier ones' heap residue
-          spark.sharedState.cacheManager.clearCache()
-          // ALSO release orphaned persisted/localCheckpoint blocks: an
-          // operator's eager checkpoint frees only when its RDD is
-          // GC'd, asynchronously — at 9 reps × several checkpointing
-          // queries the block manager filled with dead 26×-scale blocks
-          // and a later query's shuffle paid for it (r10: ext_semdedup
-          // 55.9 s inside the 8-query heavy receipt vs 10.6 s isolated,
-          // self-ratio 1.006 — deterministic harness residue, not the
-          // operator)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          // drop per-query artifacts (cached plans, persisted and
+          // checkpointed blocks, codegen refs) so later runs aren't taxed
+          // by earlier ones' heap residue
+          Session.release(spark)
           System.gc()
           elapsed
         }

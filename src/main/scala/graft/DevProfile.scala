@@ -1,24 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: time one query (twice) and print its physical plan. */
 object DevProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // extra confs: SPARK_GRAFT_CONF="k=v;k=v" (dev bisection)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+    val spark = Session.local(conf = conf)
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     (1 to sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt).foreach { i =>

@@ -455,7 +455,7 @@ object ExtQueries {
     //    UNCORRELATED keys — then filtered on a box over both. The
     //    layout is semantically invisible (oracle: the plain SQL over
     //    raw events); its value is the receipt
-    //    (bench/zorder_receipt_r14.txt, tools/ZorderReceiptProbe):
+    //    (bench/zorder_receipt_r14.txt):
     //    per-file min/max boxes overlap the predicate box on ~√files
     //    under z-order vs ALL files on the non-sorted key under
     //    single-key range clustering — at 100 TB, two-predicate
@@ -753,9 +753,10 @@ object ExtQueries {
     //    r=2 planes per band). If the bucketed candidate generation
     //    recovers every true neighbor, this equals the exact top-10 —
     //    which DuckDB computes independently; ANY dropped neighbor
-    //    breaks rows+hash. Measured (tools/AnnRecallProbe): recall@10 =
-    //    1.000 at sf0.01 (the gate), 0.980 at sf0.1, vs 0.38/0.44 at the
-    //    cost-oriented default banding.
+    //    breaks rows+hash. Measured (AnnRecallProbe,
+    //    `git show d7412f5:src/main/scala/graft/tools/AnnRecallProbe.scala`):
+    //    recall@10 = 1.000 at sf0.01 (the gate), 0.980 at sf0.1, vs
+    //    0.38/0.44 at the cost-oriented default banding.
     "ext_ann_lsh_recall" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val corpus = e.select("vec_id", "embedding")
@@ -804,7 +805,7 @@ object ExtQueries {
     //    at sf0.01 — no planted twins), so the true top-10's cell
     //    membership is near-uniform and recall ≈ nprobe/nCells plus
     //    the ranked-probe bonus. Measured surface
-    //    (tools/AnnRecallProbe, nCells=16): nprobe 4/8/12/14/16 →
+    //    (AnnRecallProbe, nCells=16): nprobe 4/8/12/14/16 →
     //    0.50/0.70/0.88/0.98/1.00 at sf0.01; sf0.1 in the scaladoc of
     //    ivfTopK. Structured corpora (the semdedup planted-cluster
     //    regime) saturate far earlier — a twin at cosine ≈ 1 shares
@@ -840,7 +841,7 @@ object ExtQueries {
     // ── PQ recall CERTIFICATE — same contract as ext_ann_ivf_recall
     //    for pqTopK (8×16 codebooks, refine=40): DuckDB replays exact
     //    top-10 + the whole sample→codes→LUT→coarse→re-rank pipeline
-    //    and counts overlap. Measured surface (tools/AnnRecallProbe,
+    //    and counts overlap. Measured surface (AnnRecallProbe,
     //    refine 40/80/160/320/640): 0.60/0.78/0.90/0.98/1.00 at
     //    sf0.01 — on isotropic random vectors full recall needs
     //    refine ≳ corpus (the ADC quantization error exceeds the
@@ -867,7 +868,8 @@ object ExtQueries {
     //    pair sets vs r=4) at ~12× less candidate-verify cost, because
     //    every true pair here has J >= 0.928. The cost-oriented
     //    corpus-calibrated regime (Dedup.calibrateMinhashBands) is
-    //    receipted in tools/LshSizing + SCALE.md and ScalaTest.
+    //    receipted in SCALE.md (LshSizing,
+    //    `git show d7412f5:src/main/scala/graft/tools/LshSizing.scala`) and ScalaTest.
     // ── Chapman capture–recapture corpus-size estimate — [EXT r14]:
     //    two seeded md5-thresholded "crawls" of documents → how much
     //    content neither saw (the buy-a-third-crawl question); the
@@ -1042,7 +1044,9 @@ object ExtQueries {
     //    r9): bands satisfy the (1−p^bits)^bands ≤ 1e-4 miss bound AT
     //    the 0.9 threshold — planted pairs sit at cos ≥ 0.9486, well
     //    above it; verified 50/50 at sf0.01, sf0.1 AND the
-    //    10× replica by tools/PlantedNearDupProbe). The r7 lesson
+    //    10× replica by PlantedNearDupProbe,
+    //    `git show d7412f5:src/main/scala/graft/tools/PlantedNearDupProbe.scala`).
+    //    The r7 lesson
     //    lives here: the original 16 planes / 8 bands meant 2-bit
     //    bands = 4 buckets/band — 89 % of the full quadratic surfaced
     //    as "candidates" at sf0.1, and at 10× every bucket blew past
@@ -1627,7 +1631,7 @@ object ExtQueries {
     //    >= 0.9 vs 0.513 background max, so the >= 0.9 ground truth over
     //    the union is exactly the 50 planted pairs — recovered ONLY if
     //    SemDeDup's cluster-candidate generation co-clusters every
-    //    planted pair (verified 50/50, tools/PlantedNearDupProbe; a
+    //    planted pair (verified 50/50, PlantedNearDupProbe; a
     //    cluster split = a missing row = red). k stays CORPUS-SIZED
     //    (Clustering.sizedK) so cluster width is scale-constant.
     "ext_semdedup" -> ((s, dir) => {

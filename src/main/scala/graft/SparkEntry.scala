@@ -596,7 +596,8 @@ object SparkEntry {
     //    extendedprice per returnflag) — actual data elements at rank
     //    ⌈p·n⌉, no interpolation (see Relational.exactQuantiles; the
     //    at-scale approximate twin is g3-style approx_percentile).
-    //    materialize=true is the LOCAL-bench choice (r10 G6Probe A/B:
+    //    materialize=true is the LOCAL-bench choice (r10 G6Probe A/B,
+    //    `git show d7412f5:src/main/scala/graft/tools/G6Probe.scala`:
     //    min wall 1.97 s vs 2.71 s rescan at sf0.1, ties at 10×,
     //    crosses over only by 26× where the checkpoint write starts to
     //    track n); the operator default stays rescan — the cluster

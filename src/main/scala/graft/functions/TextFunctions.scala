@@ -57,11 +57,8 @@ object TextFunctions {
     hits.cast("double") / size(tokens(c))
   }
 
-  /** Fraction of characters that are digits / punctuation — boilerplate
-    * and OCR-noise signals. */
-  def digitRatio(c: Column): Column =
-    length(regexp_replace(c, "[^0-9]", "")).cast("double") / length(c)
-
+  /** Fraction of characters that are punctuation — a boilerplate and
+    * OCR-noise signal. */
   def punctRatio(c: Column): Column =
     length(regexp_replace(c, "[^.,;:!?]", "")).cast("double") / length(c)
 

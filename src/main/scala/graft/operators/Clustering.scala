@@ -219,7 +219,9 @@ object Clustering {
     * [[kmeansTwoLevel]] at or above it — so callers that auto-size k
     * with [[sizedK]] get the tractable algorithm automatically as the
     * corpus (and therefore k) grows. The default threshold of 128 comes
-    * from a measured crossover (tools/KmeansCrossoverProbe, sf0.1,
+    * from a measured crossover (KmeansCrossoverProbe,
+    * `git show d7412f5:src/main/scala/graft/tools/KmeansCrossoverProbe.scala`;
+    * sf0.1,
     * maxIters=5): single vs two-level wall = 3.8 s vs 1.9 s at k=128,
     * 6.4 vs 2.5 at k=256, 9.2 vs 1.9 at k=512 — the O(n·k·dim)
     * assignment pass dominates from the low hundreds of k. Note

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
 import java.util.concurrent.atomic.AtomicLong
-import scala.util.Random
 
 /** [EXT] Deduplication operators for a training-data pipeline.
   *
@@ -199,12 +198,6 @@ object Dedup {
     * sets. */
   private val MinhashPrime = 1000000007L
 
-  def minhashCoefficients(k: Int, seed: Long): Array[(Long, Long)] = {
-    val rnd = new Random(seed)
-    Array.fill(k)((1L + rnd.nextInt((MinhashPrime - 1).toInt),
-      rnd.nextInt(MinhashPrime.toInt).toLong))
-  }
-
   /** k-permutation MinHash signature over a shingle array column.
     * h_i(s) = (a_i * (xxhash64(s) mod p) + b_i) mod p, minimized over
     * shingles. Both the shingle array and its base hashes are let-bound
@@ -250,8 +243,7 @@ object Dedup {
       bucketCap: Int = 1000,
       topK: Option[Int] = None,
       estimateMargin: Double = Double.PositiveInfinity,
-      rehydrateFrom: Option[DataFrame] = None,
-      cacheProxy: Boolean = true): DataFrame = {
+      rehydrateFrom: Option[DataFrame] = None): DataFrame = {
     val rowsPerBand = numHashes / bands
     val named = df.select(id.as("id"), text.as("txt"))
     // `rehydrateFrom`: optional (id, text) SUPERSET of `df` (same id →
@@ -279,24 +271,22 @@ object Dedup {
         }: _*)
       }).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-    // LAZY persist (gated on `cacheProxy`): this tiny (id, band, bhash)
-    // proxy (bands rows/doc, ~24 B each) is consumed up to four times in
-    // one action — the skew-guard sizes aggregate, its anti-join probe,
-    // and both sides of the candidate self-join — and each consumer
+    // LAZY persist: this tiny (id, band, bhash) proxy (bands rows/doc,
+    // ~24 B each) is consumed up to four times in one action — the
+    // skew-guard sizes aggregate, its anti-join probe, and both sides
+    // of the candidate self-join — and each consumer
     // otherwise re-runs the scan + shingle + k-hash signature pass, the
     // operator's single most expensive stage (measured: the sig pass
     // alone is ~0.5 s of ext_pipeline_e2e's 2.4 s pairs stage at sf0.1,
     // and it ran 3-4x). LIFECYCLE (ADVICE r17): Dataset.persist registers
     // the plan in CacheManager, which holds a strong reference —
     // ContextCleaner only reaps GC'd raw RDDs, so the MEMORY_AND_DISK
-    // entry lives until the session ends or the caller sweeps
-    // (spark.catalog.clearCache(), or the bench's per-query unpersist
-    // pass). A long-lived session invoking this operator many times
-    // should pass cacheProxy = false or sweep between calls.
+    // entry lives until the session ends or the caller sweeps. A
+    // long-lived session invoking this operator many times should call
+    // graft.Session.release between calls (the sweep Bench runs after
+    // every query).
     val bandedShared =
-      if (cacheProxy)
-        banded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else banded
+      banded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // skew guard: drop degenerate hot buckets, observably (see capBuckets)
     val pruned = capBuckets(bandedShared, Seq("band", "bhash"), bucketCap, "minhash")
     val pairs = pruned.select(col("band"), col("bhash"), col("id").as("id_a"))
@@ -849,7 +839,9 @@ object Dedup {
     * corpus-sized. `maxModP` floors the expected fingerprints per doc
     * (detection needs SOME samples even on short docs): at the 32 cap
     * the testdata's ~300-char docs keep ~8 samples, which the 26×
-    * WinnowSizingProbe measured at ≥ 97% recall of strong pairs
+    * WinnowSizingProbe (SCALE.md;
+    * `git show d7412f5:src/main/scala/graft/tools/WinnowSizingProbe.scala`)
+    * measured at ≥ 97% recall of strong pairs
     * (n_shared ≥ 4 at base density) — the same probe put the 64 cap at
     * ~4 samples/doc and 89–92%, the wrong side of the trade.
     *
@@ -1131,8 +1123,6 @@ object Dedup {
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       it += 1
-      if (sys.env.contains("GRAFT_DEBUG_CLUSTERS"))
-        System.err.println(s"[clusters] round $it sum=$s t=${System.nanoTime()}")
     }
     edges.unpersist()
     // no silent caps: a partially-converged labeling is NOT a clustering
@@ -1165,7 +1155,8 @@ object Dedup {
     * p ≈ 0.897, per-band p⁸ ≈ 0.42) is missed by all 16 bands with
     * probability (1−0.42)¹⁶ ≈ 1.7e-4. Measured at sf0.1: candidates
     * 1.87 M → ~60 k, wall 4.45 → 1.19 s, planted recall 50/50 at
-    * sf0.01, sf0.1 and the 10× replica (tools/EmbNearDupProbe).
+    * sf0.01, sf0.1 and the 10× replica (EmbNearDupProbe,
+    * `git show d7412f5:src/main/scala/graft/tools/EmbNearDupProbe.scala`).
     *
     * Scale shape mirrors the MinHash path exactly: the bucket self-join
     * carries only (bucket, id) — vectors are rehydrated by id at the
@@ -1218,7 +1209,8 @@ object Dedup {
     // The banded table feeds THREE plan branches (skew-guard sizes +
     // both self-join sides); left lazy, Catalyst re-derives the subtree
     // per branch — re-running the bands·bits·dim signature fold and the
-    // band explode three times (the PlanProbe re-derivation trap;
+    // band explode three times (the re-derivation trap PlanProbe found,
+    // SCALE.md; `git show d7412f5:src/main/scala/graft/tools/PlanProbe.scala`;
     // measured ~2× the operator wall at the 10× replica).
     // localCheckpoint materializes it ONCE — executor-local
     // MEMORY_AND_DISK, bands·n slim rows, linear — and all branches

@@ -957,7 +957,9 @@ object Eval {
     * pairwise-complete would need per-pair n and is a different
     * operator).
     *
-    * Arithmetic (the r14 CorrMomentsProbe receipt — this formulation
+    * Arithmetic (the r14 CorrMomentsProbe receipt, SCALE.md and
+    * `git show d7412f5:src/main/scala/graft/tools/CorrMomentsProbe.scala`
+    * — this formulation
     * is ~7× faster than per-row round→DECIMAL(38) moment sums, 0.88 s
     * vs 6.07 s median at sf0.1×32c, because the hot loop is long
     * multiplies instead of BigDecimal rounds): each value becomes a

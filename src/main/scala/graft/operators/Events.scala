@@ -1111,8 +1111,7 @@ object Events {
     * action over the returned frame — construction stays side-effect
     * free like every other operator here) instead of re-running the
     * scan + distinct shuffle per reach — but the forked fresh-JVM A/B
-    * (StickinessPersistProbe,
-    * bench/stickiness_persist_receipt_r15.txt) says re-scan WINS at
+    * (bench/stickiness_persist_receipt_r15.txt) says re-scan WINS at
     * every probe scale: min-of-3 0.75 s vs 1.04 s at sf0.1 and
     * 1.08 s vs 1.79 s at 26×. Writing |users×days| rows to
     * executor-local disk costs more than three codegen'd re-scans of

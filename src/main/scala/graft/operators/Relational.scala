@@ -141,17 +141,6 @@ object Relational {
       .select(keys.map(col) ++ nonKeys.map(c => col(s"__m.$c").as(c)): _*)
   }
 
-  /** Exact sum that is bitwise-reproducible across engines and partition
-    * orders: doubles are summed in fixed-point DECIMAL (associative,
-    * order-independent) and the exact total is cast back to double.
-    * Plain sum(double) differs in the last bits between Spark's
-    * partial-aggregate tree and a serial oracle. */
-  def exactSum(c: Column): Column = sum(c.cast("decimal(18,6)")).cast("double")
-
-  /** Exact average built the same way (exact sum / count). */
-  def exactAvg(c: Column): Column =
-    sum(c.cast("decimal(18,6)")).cast("double") / count(c)
-
   /** Exact DISCRETE per-group quantiles: for each probability p the
     * returned value is the ACTUAL data element at rank ⌈p·n⌉ among the
     * group's non-null values — no interpolation, so the output is an
@@ -212,7 +201,8 @@ object Relational {
     // `materialize` cuts the double evaluation of this lineage (pass-1
     // count + pass-2 rank-pick both scan it) via an eager
     // localCheckpoint — the Graph.pageRank discipline. G6Probe A/B
-    // (r10): it wins at sf0.1 (min 1.97 s vs 2.71 s), ties at 10×,
+    // (r10, `git show d7412f5:src/main/scala/graft/tools/G6Probe.scala`):
+    // it wins at sf0.1 (min 1.97 s vs 2.71 s), ties at 10×,
     // and crosses over by 26× as the checkpoint write tracks n.
     // Re-scan stays the DEFAULT: at cluster scale re-reading columnar
     // parquet beats writing n rows to executor-local disk, and

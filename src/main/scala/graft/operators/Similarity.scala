@@ -260,7 +260,8 @@ object Similarity {
     * while strongly-similar token pairs (the matches MaxSim retrieval
     * exists for — same-cluster cosine ≫ background) keep colliding:
     * candidate volume stays ~flat per query as n grows (receipt:
-    * MaxSimScreenProbe planted-cluster mode).
+    * SCALE.md, MaxSimScreenProbe planted-cluster mode,
+    * `git show d7412f5:src/main/scala/graft/tools/MaxSimScreenProbe.scala`).
     *
     * ONE bounded action (a token count — the documented index-build
     * class) picks the banding. On an ISOTROPIC corpus (no cluster
@@ -326,7 +327,9 @@ object Similarity {
     * replays exact top-10 AND this whole pipeline and counts overlap,
     * so the number is hash-verified, not asserted): at the default
     * (nCells=16, nprobe=4) recall@10 = 0.50 at sf0.01 / 0.60 at sf0.1.
-    * Measured surface (tools/AnnRecallProbe, nCells=16, nprobe
+    * Measured surface (AnnRecallProbe,
+    * `git show d7412f5:src/main/scala/graft/tools/AnnRecallProbe.scala`;
+    * nCells=16, nprobe
     * 8/12/14/16): 0.70/0.88/0.98/1.00 at sf0.01, 0.84/0.88/0.90/1.00
     * at sf0.1. The test embeddings are isotropic random (max pairwise
     * cosine 0.513 at sf0.01 — no neighbor structure), the worst case
@@ -689,7 +692,7 @@ object Similarity {
     * RECALL (certified by `ext_ann_pq_recall` — DuckDB replays exact
     * top-10 AND sample→codes→LUT→coarse→re-rank and counts overlap):
     * at the default refine=40, recall@10 = 0.60 at sf0.01 / 0.36 at
-    * sf0.1. Measured surface (tools/AnnRecallProbe, refine
+    * sf0.1. Measured surface (AnnRecallProbe, see [[ivfTopK]]; refine
     * 80/160/320/640): 0.78/0.90/0.98/1.00 at sf0.01,
     * 0.52/0.66/0.86/0.98 at sf0.1. Isotropic random embeddings are
     * PQ's worst case — true-neighbor cosine margins (max pairwise

@@ -214,9 +214,22 @@ object TextPipeline {
     * hash their partitions into partial bit-arrays, the driver ORs
     * them); driver memory holds one bit-array of
     * ~1.44·log2(1/fpp)·expectedGrams bits — 120 MB at 10^8 grams /
-    * 1 % — not the gram strings themselves. */
+    * 1 % — not the gram strings themselves.
+    *
+    * Runs the aggregate `stat.bloomFilter` runs, in one job, but an
+    * empty build side yields an empty filter (every probe misses)
+    * instead of the NullPointerException `stat.bloomFilter` throws when
+    * the aggregate returns null. */
   def gramBloom(grams: DataFrame, expectedGrams: Long, fpp: Double): Array[Byte] = {
-    val bloom = grams.stat.bloomFilter(grams.columns.head, expectedGrams, fpp)
+    import org.apache.spark.util.sketch.BloomFilter
+    val numBits = BloomFilter.optimalNumOfBits(expectedGrams, fpp)
+    val bytes = grams
+      .select(org.apache.spark.sql.graftbridge.ColumnBridge.internalFn(
+        "bloom_filter_agg", col(grams.columns.head), lit(expectedGrams),
+        lit(numBits)))
+      .head().getAs[Array[Byte]](0)
+    val bloom = Option(bytes).map(BloomFilter.readFrom)
+      .getOrElse(BloomFilter.create(expectedGrams, numBits))
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
     bos.toByteArray
@@ -1358,7 +1371,8 @@ object TextPipeline {
     * (lexicographic); counts are distinct shared grams, not row pairs.
     *
     * Scale shape: ONE corpus scan, and NOT a gram self-join (which
-    * would re-derive the gram scan per side — the PlanProbe lesson —
+    * would re-derive the gram scan per side — the PlanProbe lesson,
+    * SCALE.md —
     * and shuffle a candidate row PAIR per gram-match): one gram-keyed
     * aggregate builds each gram's sorted distinct source set
     * (collect_set partial-aggregates map-side; the set is bounded by
@@ -1464,7 +1478,8 @@ object TextPipeline {
     * global window anywhere: pass 1 aggregates per-shard weight totals
     * (map-side partial sums; 16^`hexDigits` result rows, pulled once —
     * the bounded index-build-budget class, and the ONLY way to avoid
-    * the re-derived-subtree trap PlanProbe measured on bigramLift);
+    * the re-derived-subtree trap PlanProbe measured on bigramLift,
+    * `git show d7412f5:src/main/scala/graft/tools/PlanProbe.scala`);
     * exclusive shard offsets and the grand total fold locally and join
     * back broadcast. Pass 2 runs the per-shard cumulative windows in
     * parallel and filters map-side. Only (id, weight, 32-char rank)

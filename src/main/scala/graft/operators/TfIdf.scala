@@ -308,7 +308,9 @@ object TfIdf {
     *    "the" would funnel a corpus fraction through one partition);
     *  - V folds the pair table into a single-row broadcast scalar;
     *  - the scoring join BROADCASTS the model (`broadcastModel`,
-    *    default on): the r9 10×-replica shoot-out (BigramProbe) read
+    *    default on): the r9 10×-replica shoot-out (BigramProbe,
+    *    `git show d7412f5:src/main/scala/graft/tools/BigramProbe.scala`)
+    *    read
     *    3.2 s for the broadcast-hint formulation vs 16.8 s for the
     *    unhinted one — the static size estimate of an
     *    aggregate-over-corpus subtree is corpus-sized, so Spark picks

@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named contract queries to
   * files — the before/after plan evidence the optimization rounds commit
   * under plans/rNN/ (judge checks plan claims against these files).
   *
-  * Bench-matched session settings (32 shuffle partitions, AQE on, UTC)
-  * so the dumped plan is the one the bench actually runs — except
-  * master local[4]: plan shape does not depend on core count.
+  * Bench session settings (graft.Session: AQE on, UTC) with 32 shuffle
+  * partitions, the count the committed plans/rNN dumps were taken at;
+  * plan shape does not depend on the core count.
   *
   * Usage: runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> <q1,q2,...>
   * Writes <outDir>/<query>_<suffix>.txt
@@ -18,14 +16,7 @@ object ExplainDump {
     require(args.length == 4,
       "usage: ExplainDump <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, qlist) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(shufflePartitions = Some(32))
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     try qlist.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>

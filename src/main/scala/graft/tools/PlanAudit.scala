@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: assert the plan-shape claims the new-operator scaladocs
   * make — no cartesian/broadcast-nested-loop joins anywhere, and the
   * operators that promise a broadcast (query-table BM25, CDC-screen
@@ -17,13 +15,7 @@ object PlanAudit {
         "ext_group_trend", "ext_winsorized_mean", "ext_quality_keeper",
         "ext_kmv_rollup", "ext_token_entropy", "ext_event_ngrams",
         "ext_collapse_runs", "ext_cdc_chunks", "ext_ppr")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     var bad = 0
     queries.foreach { q =>

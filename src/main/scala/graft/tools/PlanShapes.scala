@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
@@ -134,18 +133,11 @@ object PlanShapes {
     val names =
       if (args.length > 2) args(2).split(",").map(_.trim).toSeq
       else DefaultQueries
-    // master core count never affects plan shape (shuffle.partitions is
-    // pinned); GRAFT_PLANSHAPES_CPUS only speeds up the rt=all full-
-    // surface EXECUTION capture
-    val cpus = sys.env.getOrElse("GRAFT_PLANSHAPES_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false") // static gate — see scaladoc
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the core count never affects plan shape (shuffle.partitions is
+    // pinned); SPARK_GRAFT_CPUS only speeds up the rt=all full-surface
+    // EXECUTION capture. AQE off: static gate — see scaladoc
+    val spark = graft.Session.local(
+      shufflePartitions = Some(32), adaptive = false)
     spark.sparkContext.setLogLevel("ERROR")
 
     // the structural families the gate watches, summed over exec classes
@@ -192,9 +184,7 @@ object PlanShapes {
               // full-surface executions leave per-query artifacts
               // (persisted proxies, checkpoint blocks) — the Bench
               // hygiene sweep, so 278 executions don't tax each other
-              spark.sharedState.cacheManager.clearCache()
-              spark.sparkContext.getPersistentRDDs.values
-                .foreach(_.unpersist(blocking = false))
+              graft.Session.release(spark)
               rts
             }
           val scans = scanFacts(plan).zipWithIndex.map { case (sf, i) =>

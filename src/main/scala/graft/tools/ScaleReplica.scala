@@ -66,13 +66,7 @@ object ScaleReplica {
     // 104 ≈ the ask-#4 "~100×" target with headroom below the bound.
     require(factor >= 1 && factor <= 126,
       s"factor must be in [1, 126] to keep per-copy content distinct (got $factor)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // dimension tables: copy once, unshifted

@@ -11,4 +11,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** A Spark-internal function by name (e.g. `bloom_filter_agg`, the
+    * aggregate behind `stat.bloomFilter`). */
+  def internalFn(name: String, inputs: Column*): Column =
+    Column.internalFn(name, inputs: _*)
 }

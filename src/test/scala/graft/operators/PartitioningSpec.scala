@@ -47,7 +47,7 @@ class PartitioningSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("salting bounds the hot-key straggler partition (skew receipt)") {
-    // companion to tools.SkewReceiptProbe (SCALE.md "skew receipt"):
+    // companion to bench/skew_receipt_104x.txt (SCALE.md "skew receipt"):
     // AQE off for a deterministic reducer histogram, broadcast off to
     // force the shuffle-join regime the receipt is about
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -199,6 +199,15 @@ class PartitioningSpec extends AnyFunSuite with SparkSpec {
     val plan = got.queryExecution.analyzed.toString.toLowerCase
     assert(plan.contains("bloommightcontain"),
       s"bloom probe missing from the analyzed plan:\n$plan")
+  }
+
+  test("bloomSemiJoin: an empty small side gives the plain (empty) join") {
+    val big = (1L to 2000L).map(i => (i % 97L, i)).toDF("k", "payload")
+    val small = spark.range(0).selectExpr("id as dk", "cast(id as string) attr")
+    val got = Partitioning.bloomSemiJoin(big, small, "k", "dk")
+    val plain = big.join(small, col("k") === col("dk"))
+    assert(got.schema == plain.schema)
+    assert(got.collect().isEmpty && plain.collect().isEmpty)
   }
 
   test("z-ordered write degrades gracefully on empty and all-null input") {

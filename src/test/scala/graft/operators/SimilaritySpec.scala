@@ -356,7 +356,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // 32 docs × 4 tokens, two well-separated clusters in 8-d (all of a
     // doc's tokens near its cluster axis + deterministic jitter): the
     // sized screen must keep every same-cluster true neighbor — the
-    // planted-cluster receipt shape (MaxSimScreenProbe) in miniature.
+    // planted-cluster receipt shape (SCALE.md, MaxSimScreenProbe) in
+    // miniature.
     val corpus = (for {
       doc <- 0L until 32L
       tok <- 0L until 4L

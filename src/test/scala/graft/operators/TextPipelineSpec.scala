@@ -50,6 +50,21 @@ class TextPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(got(3L) == (0L, false)) // < 5 tokens, still present with 0
   }
 
+  test("contaminationBloom on an empty eval set equals contamination") {
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over lazy dogs"),
+      (2L, "tiny")).toDF("doc_id", "text")
+    val eval = spark.range(0).selectExpr("id as doc_id", "cast(id as string) text")
+    val exact = TextPipeline.contamination(
+      corpus, eval, col("doc_id"), col("text"), 5)
+    val bloomed = TextPipeline.contaminationBloom(
+      corpus, eval, col("doc_id"), col("text"), 5,
+      expectedGrams = 1024, fpp = 0.01)
+    assert(bloomed.orderBy("doc_id").collect().toSeq ==
+      exact.orderBy("doc_id").collect().toSeq)
+    assert(exact.where(col("contaminated")).isEmpty)
+  }
+
   test("contaminationBloom is bit-identical to the exact path and culls") {
     // corpus big enough that bloom false positives are plausible and
     // the cull is measurable: 200 docs of distinct filler + 3 planted
