@@ -2383,7 +2383,7 @@ object ExtQueries {
     "ext_link_prediction" -> ((s, dir) => {
       // r18: cut the pair-count table once — the mean aggregate, the
       // backbone filter and the operator each replayed the doc scan
-      val counts = Checkpointing.Local.cut(TextPipeline.skipgramPairCounts(
+      val counts = Checkpointing.cut(TextPipeline.skipgramPairCounts(
         t(s, dir, "documents"), col("text"), window = 1))
       val mean = counts.agg(
         (sum(col("n_ab")).cast("double") /
@@ -2408,7 +2408,7 @@ object ExtQueries {
       // r18: cut the pair-count table once — the seed derivation (two
       // references) and the operator's shares build each replayed the
       // full doc scan + skipgram aggregate otherwise
-      val edges = Checkpointing.Local.cut(TextPipeline.skipgramPairCounts(
+      val edges = Checkpointing.cut(TextPipeline.skipgramPairCounts(
         t(s, dir, "documents"), col("text"), window = 1))
       val seeds = edges.select(col("tok_a").as("node"))
         .unionByName(edges.select(col("tok_b").as("node")))
@@ -2981,7 +2981,7 @@ object ExtQueries {
     "ext_bfs_hops" -> ((s, dir) => {
       // r18: cut the pair-count table once — the seed derivation and the
       // operator's own doubled edge build each replayed the doc scan
-      val edges = Checkpointing.Local.cut(TextPipeline.skipgramPairCounts(
+      val edges = Checkpointing.cut(TextPipeline.skipgramPairCounts(
         t(s, dir, "documents"), col("text"), window = 1))
       val und = edges.select(col("tok_a").as("x"), col("tok_b").as("y"))
         .filter(col("x") =!= col("y"))

@@ -40,13 +40,16 @@ object Session {
       .config(settings(cores, shufflePartitions, adaptive) ++ conf)
       .getOrCreate()
 
-  /** Drop everything operators left cached: the CacheManager's persisted
-    * plans and every persisted or locally checkpointed RDD. An
-    * operator's eager checkpoint frees its blocks only when the RDD is
-    * GC'd, asynchronously, so a long-lived session that runs many
-    * queries sweeps between them or later queries pay for the dead
+  /** Free every materialization still held in the session at once:
+    * each lineage cut ([[graft.operators.Checkpointing.cut]]) and any
+    * plan a caller persisted. Operators leave no CacheManager entry —
+    * a cut is held only by the frame that reads it, and the context
+    * cleaner frees it once that frame is unreachable — but the cleaner
+    * runs on GC, asynchronously, so a long-lived session that runs many
+    * queries calls this between them or later queries pay for the dead
     * blocks (r10: `ext_semdedup` took 55.9 s after heavy queries in one
-    * JVM against 10.6 s alone). */
+    * JVM against 10.6 s alone). Frames built before the call must not
+    * be reused after it. */
   def release(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values

@@ -2,83 +2,36 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage-cut policy for the iterative operators (PageRank, label
-  * propagation, BPE training, connected components): every round must
-  * materialize its state or N chained iterations re-derive the whole
-  * prefix per reference (the r8 plan-duplication lesson).
+/** The one way an operator materializes an intermediate that its
+  * returned frame still reads: an eager lineage cut. Iterative
+  * operators (PageRank, label propagation, BPE training, connected
+  * components) cut their state every round, or N chained iterations
+  * re-derive the whole prefix per reference (the r8 plan-duplication
+  * lesson); one-shot operators cut a table that several branches of
+  * their plan consume, so it is computed once.
   *
-  * Two cuts, one contract (r9 verdict ask #7):
+  * The storage substrate follows the deployment, not the call: with a
+  * checkpoint directory on the context (a cluster sets
+  * `spark.checkpoint.dir`) the cut is `Dataset.checkpoint` and survives
+  * executor loss; without one it is `localCheckpoint` — executor-local
+  * blocks with no lineage, so a lost executor fails the job and the
+  * restart contract is "rerun the operator" (every operator here is
+  * deterministic). Both truncate lineage identically, so plan shape and
+  * results are the same under either (pinned by GraphSpec).
   *
-  *  - [[Local]] (default): `localCheckpoint(eager)` — executor-local
-  *    blocks, no lineage kept. Fastest (no DFS write), but on a real
-  *    multi-executor cluster a LOST EXECUTOR loses its blocks and,
-  *    with no lineage to recompute them, fails the job — the restart
-  *    contract is "rerun the operator" (it is deterministic, so a
-  *    rerun reproduces the result bit-for-bit). Right for local mode
-  *    and for short loops where a rare rerun beats paying a
-  *    distributed-FS write every round.
-  *  - [[Reliable]]: `Dataset.checkpoint(eager)` into a durable
-  *    checkpoint directory (HDFS/object store on a cluster). Each
-  *    round's state survives executor loss; the job continues instead
-  *    of restarting. Right for long chains on large clusters where
-  *    executor churn is expected — the classic GraphX/ALS discipline.
-  *
-  * Both cuts truncate lineage identically, so plan shape and results
-  * are THE SAME under either mode (pinned by GraphSpec); only the
-  * storage substrate differs.
+  * Release contract: a cut registers nothing in the CacheManager. Its
+  * blocks are held only by the frame that reads them, so the context
+  * cleaner frees them once that frame is unreachable and
+  * [[graft.Session.release]] frees them at once. A persist an operator
+  * needs only while it runs is unpersisted in a `finally` before the
+  * operator returns; no operator leaves a CacheManager entry behind.
+  * Durable checkpoint files stay on disk unless
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is on.
   */
 object Checkpointing {
 
-  sealed trait Mode {
-    /** Materialize `df` now and return a lineage-free reference. */
-    def cut(df: DataFrame): DataFrame
-  }
-
-  /** Executor-local eager checkpoint — fast, lineage-free, not
-    * fault-tolerant (see class doc for the restart contract). */
-  case object Local extends Mode {
-    override def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
-  }
-
-  /** Durable eager checkpoint under `dir` (set once per SparkContext;
-    * subsequent Reliable cuts reuse it — Spark keys the setting on the
-    * context, not the Dataset).
-    *
-    * Retention contract: durable checkpoint files are NEVER deleted by
-    * this Mode. Spark only reaps them when the referencing RDD is GC'd
-    * AND `spark.cleaner.referenceTracking.cleanCheckpoints` is enabled
-    * (off by default), so a long-lived iterative job accumulates one
-    * RDD directory per cut under `dir` until the caller (or a storage
-    * lifecycle rule) removes them — the price of surviving executor
-    * loss mid-chain. */
-  final case class Reliable(dir: String) extends Mode {
-    override def cut(df: DataFrame): DataFrame = {
-      val sc = df.sparkSession.sparkContext
-      // Spark stores setCheckpointDir(dir) as dir/<random-UUID>, so the
-      // reuse check must compare the PARENT of the live setting to
-      // `dir` — comparing the full value (the r10 bug, ADVICE r10)
-      // never matched and every cut minted a fresh UUID subdirectory.
-      // Compare fully-QUALIFIED URIs (scheme + authority + path): the
-      // live value comes back fs-qualified, and a schemeless caller dir
-      // qualifies against the default filesystem — so
-      // Reliable("hdfs://nn/ckpt") then Reliable("file:/ckpt") (same
-      // path, different filesystem) must NOT reuse (ADVICE r11). Only
-      // when qualification itself fails fall back to path-only.
-      val hconf = sc.hadoopConfiguration
-      def qualified(p: org.apache.hadoop.fs.Path): Option[java.net.URI] =
-        scala.util.Try(p.getFileSystem(hconf).makeQualified(p).toUri).toOption
-      val callerPath = new org.apache.hadoop.fs.Path(dir)
-      val callerQ = qualified(callerPath)
-      val alreadySet = sc.getCheckpointDir.exists { live =>
-        Option(new org.apache.hadoop.fs.Path(live).getParent).exists { parent =>
-          (callerQ, qualified(parent)) match {
-            case (Some(c), Some(p)) => p == c
-            case _ => parent.toUri.getPath == callerPath.toUri.getPath
-          }
-        }
-      }
-      if (!alreadySet) sc.setCheckpointDir(dir)
-      df.checkpoint(true)
-    }
-  }
+  /** Materialize `df` now and return a lineage-free reference to it. */
+  def cut(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.localCheckpoint(true)
 }

@@ -360,19 +360,14 @@ object Clustering {
     val base = df.select(id.as("id"), vec.as("vec"))
     // dispatcher: corpus-sized k flips to the two-level fit automatically
     val model = fit(base, col("id"), col("vec"), k, maxIters)
-    // LAZY persist [r18]: the assignment pass is an O(k·dim) expression
-    // per row (sorted centroid-struct array) and its output is consumed
-    // THREE times in one action — the skew-guard sizes aggregate and
-    // both sides of the within-cluster self-join — so without a cache
-    // the corpus is re-scanned and re-assigned 3x (the r17
-    // minhash-banded-proxy lesson, guide §2.3: compute the expensive
-    // proxy once). LIFECYCLE: same contract as minhashNearDupPairs'
-    // banded proxy — the CacheManager entry outlives the query until a
-    // session sweep (spark.catalog.clearCache() / the bench's per-query
-    // unpersist pass); long-lived sessions should sweep between calls.
-    val assignedRaw = assign(base, col("vec"), model.centroids)
-      .select("cluster", "id", "vec")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cut [r18]: the assignment pass is an O(k·dim) expression per row
+    // (sorted centroid-struct array) and its output is consumed THREE
+    // times in one action — the skew-guard sizes aggregate and both
+    // sides of the within-cluster self-join — so uncut the corpus is
+    // re-scanned and re-assigned 3x (the r17 minhash-banded-proxy
+    // lesson, guide §2.3: compute the expensive proxy once).
+    val assignedRaw = Checkpointing.cut(
+      assign(base, col("vec"), model.centroids).select("cluster", "id", "vec"))
     val assigned = Dedup.capBuckets(
       assignedRaw, Seq("cluster"), bucketCap, "semdedup")
     val l = assigned.select(col("cluster"), col("id").as("id_a"), col("vec").as("vec_a"))

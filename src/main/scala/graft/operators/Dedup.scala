@@ -271,22 +271,15 @@ object Dedup {
         }: _*)
       }).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-    // LAZY persist: this tiny (id, band, bhash) proxy (bands rows/doc,
-    // ~24 B each) is consumed up to four times in one action — the
+    // cut: this tiny (id, band, bhash) proxy (bands rows/doc, ~24 B
+    // each) is consumed up to four times in one action — the
     // skew-guard sizes aggregate, its anti-join probe, and both sides
     // of the candidate self-join — and each consumer
     // otherwise re-runs the scan + shingle + k-hash signature pass, the
     // operator's single most expensive stage (measured: the sig pass
     // alone is ~0.5 s of ext_pipeline_e2e's 2.4 s pairs stage at sf0.1,
-    // and it ran 3-4x). LIFECYCLE (ADVICE r17): Dataset.persist registers
-    // the plan in CacheManager, which holds a strong reference —
-    // ContextCleaner only reaps GC'd raw RDDs, so the MEMORY_AND_DISK
-    // entry lives until the session ends or the caller sweeps. A
-    // long-lived session invoking this operator many times should call
-    // graft.Session.release between calls (the sweep Bench runs after
-    // every query).
-    val bandedShared =
-      banded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // and it ran 3-4x).
+    val bandedShared = Checkpointing.cut(banded)
     // skew guard: drop degenerate hot buckets, observably (see capBuckets)
     val pruned = capBuckets(bandedShared, Seq("band", "bhash"), bucketCap, "minhash")
     val pairs = pruned.select(col("band"), col("bhash"), col("id").as("id_a"))
@@ -376,18 +369,15 @@ object Dedup {
     // stage — up to 3× per side: the corpus fed the skew-guard sizes
     // aggregate AND its anti-join probe (via `banded`) AND the
     // prefilter's `sigs`; the batch fed the candidate probe AND the
-    // prefilter. Each side now computes (id, sig) once behind a LAZY
-    // MEMORY_AND_DISK persist (~8·numHashes B/doc — ids and signatures,
-    // never text; same lifecycle contract as minhashNearDupPairs'
-    // banded proxy: CacheManager holds the entry until the session
-    // sweeps or the caller clears the cache), and the band hashes
-    // derive from the persisted sig exactly as buildMinhashIndex does —
-    // identical band/bhash values, identical joins, identical output.
+    // prefilter. Each side now computes (id, sig) once behind a cut
+    // (~8·numHashes B/doc — ids and signatures, never text), and the
+    // band hashes derive from the cut sig exactly as buildMinhashIndex
+    // does — identical band/bhash values, identical joins, identical
+    // output.
     def sigsOf(df: DataFrame, id: Column, text: Column, idName: String) =
-      df.select(id.as(idName),
+      Checkpointing.cut(df.select(id.as(idName),
         graft.functions.expressions.GraftFunctions
-          .minhash_sig(text, shingleN, numHashes, seed).as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .minhash_sig(text, shingleN, numHashes, seed).as("sig")))
     def bandedOf(sigDf: DataFrame, idName: String) =
       sigDf.select(
         col(idName),
@@ -1025,21 +1015,19 @@ object Dedup {
     * Per round: two shuffles over (id, label) pairs — never document
     * bodies, never a transitive-closure materialization. The driver
     * loop with a per-round convergence action is the standard
-    * Pregel-class shape; each round's result is persisted and the
-    * previous round unpersisted, so lineage stays bounded.
+    * Pregel-class shape; each round's result is cut, so lineage stays
+    * bounded.
     *
     * Convergence: sum(label) is strictly decreasing until fixpoint
     * (labels only decrease), so equal consecutive sums ⇔ converged —
     * one cheap aggregate instead of a change-count join. Sums
     * accumulate in DECIMAL(38,0): exact for any id range.
     *
-    * Each round ends in localCheckpoint(eager) — this TRUNCATES THE
+    * Each round ends in [[Checkpointing.cut]] — this TRUNCATES THE
     * LOGICAL PLAN, not just caches data. Without it the self-join makes
     * the plan tree ~4× bigger per round and Catalyst analysis goes
     * exponential long before the data does (measured: the 46-node test
-    * fixture burned 15 min of pure analyzer CPU by round ~10). On a
-    * cluster with executor loss concerns, swap in reliable
-    * checkpoint() — same lineage cut, HDFS-backed.
+    * fixture burned 15 min of pure analyzer CPU by round ~10).
     *
     * `nodes` must contain every id that may appear in `pairs`;
     * isolated nodes become singleton clusters. Pass `nodesDistinct =
@@ -1056,6 +1044,23 @@ object Dedup {
       nodesDistinct: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Observation
     import org.apache.spark.storage.StorageLevel
+    // the convergence sum rides each round's ONE action (the eager
+    // cut) via observe() — no second per-round job
+    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val obs = Observation()
+      val out = Checkpointing.cut( // cut lineage — see scaladoc
+        df.observe(obs, sum(col("label").cast("decimal(38,0)")).as("lsum")))
+      val d = obs.get("lsum").asInstanceOf[java.math.BigDecimal]
+      (out, if (d == null) java.math.BigDecimal.ZERO else d)
+    }
+    // `nodesDistinct = true` (caller guarantees unique node ids — e.g.
+    // the table key) skips the init round's distinct exchange entirely
+    val nodeIds = if (nodesDistinct) nodes.select(id.as("id"))
+      else nodes.select(id.as("id")).distinct()
+    var (labels, prevSum) = checkpointWithSum(
+      nodeIds.withColumn("label", col("id")))
+    var converged = false
+    var it = 0
     // (r17 measured-and-rejected: pre-partitioning this cache by dst so
     // the per-round pull join reuses the partitioning — the extra
     // materialization exchange cost more than the per-round reuse
@@ -1073,58 +1078,40 @@ object Dedup {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the convergence sum rides each round's ONE action (the eager
-    // localCheckpoint) via observe() — no second per-round job
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = Observation()
-      val out = df
-        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("lsum"))
-        .localCheckpoint(true) // cut lineage — see scaladoc
-      val d = obs.get("lsum").asInstanceOf[java.math.BigDecimal]
-      (out, if (d == null) java.math.BigDecimal.ZERO else d)
-    }
-    // `nodesDistinct = true` (caller guarantees unique node ids — e.g.
-    // the table key) skips the init round's distinct exchange entirely
-    val nodeIds = if (nodesDistinct) nodes.select(id.as("id"))
-      else nodes.select(id.as("id")).distinct()
-    var (labels, prevSum) = checkpointWithSum(
-      nodeIds.withColumn("label", col("id")))
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      // r18: the pull (neighbor min) and the keep-own-label step fuse
-      // into ONE aggregate — each node's previous label rides the same
-      // union as the pulled neighbor labels, so min() over the group IS
-      // least(own, nbr-min) and the old labels⋈nbrMin join disappears
-      // NO per-round persist: the jump self-join references stepped
-      // under two different keys (label and id), but the expensive part
-      // — the pull join + its exchange — is deduplicated by
-      // ReuseExchange (identical subtree), so only the post-shuffle
-      // aggregate runs twice, over node-sized data. A MEMORY_AND_DISK
-      // persist here was measured and rejected: its per-round cache
-      // write is a constant that cost 1.2-1.5× at sf0.1
-      // (bench/r18_others_paired_sf01.json) for no structural saving.
-      val stepped = labels.select(col("id"), col("label"))
-        .unionByName(edges
-          .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
-          .select(col("src").as("id"), col("label")))
-        .groupBy("id").agg(min("label").as("label"))
-      // pointer jump: label := label(label) — label is always a node id,
-      // and label(x) <= x, so this only ever shrinks labels
-      val (jumped, s) = checkpointWithSum(stepped
-        .join(stepped.select(col("id").as("label"), col("label").as("parent")),
-          Seq("label"), "left")
-        .select(col("id"), coalesce(col("parent"), col("label")).as("label")))
-      // jumped is already materialized (eager checkpoint) — the previous
-      // round's checkpoint blocks are dead; release them now instead of
-      // waiting for ContextCleaner GC
-      labels.unpersist()
-      labels = jumped
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      it += 1
-    }
-    edges.unpersist()
+    try {
+      while (!converged && it < maxIters) {
+        // r18: the pull (neighbor min) and the keep-own-label step fuse
+        // into ONE aggregate — each node's previous label rides the same
+        // union as the pulled neighbor labels, so min() over the group IS
+        // least(own, nbr-min) and the old labels⋈nbrMin join disappears
+        // NO per-round persist: the jump self-join references stepped
+        // under two different keys (label and id), but the expensive part
+        // — the pull join + its exchange — is deduplicated by
+        // ReuseExchange (identical subtree), so only the post-shuffle
+        // aggregate runs twice, over node-sized data. A MEMORY_AND_DISK
+        // persist here was measured and rejected: its per-round cache
+        // write is a constant that cost 1.2-1.5× at sf0.1
+        // (bench/r18_others_paired_sf01.json) for no structural saving.
+        val stepped = labels.select(col("id"), col("label"))
+          .unionByName(edges
+            .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
+            .select(col("src").as("id"), col("label")))
+          .groupBy("id").agg(min("label").as("label"))
+        // pointer jump: label := label(label) — label is always a node id,
+        // and label(x) <= x, so this only ever shrinks labels
+        val (jumped, s) = checkpointWithSum(stepped
+          .join(stepped.select(col("id").as("label"), col("label").as("parent")),
+            Seq("label"), "left")
+          .select(col("id"), coalesce(col("parent"), col("label")).as("label")))
+        // the previous round's cut is now unreachable; the context
+        // cleaner frees it (Dataset.unpersist cannot: a cut is no
+        // CacheManager entry)
+        labels = jumped
+        converged = s.compareTo(prevSum) == 0
+        prevSum = s
+        it += 1
+      }
+    } finally edges.unpersist()
     // no silent caps: a partially-converged labeling is NOT a clustering
     require(converged,
       s"clusters: min-label propagation did not converge within $maxIters " +
@@ -1212,11 +1199,9 @@ object Dedup {
     // band explode three times (the re-derivation trap PlanProbe found,
     // SCALE.md; `git show d7412f5:src/main/scala/graft/tools/PlanProbe.scala`;
     // measured ~2× the operator wall at the 10× replica).
-    // localCheckpoint materializes it ONCE — executor-local
-    // MEMORY_AND_DISK, bands·n slim rows, linear — and all branches
-    // read the cached RDD. Same lineage-truncation precedent as
-    // clusters(); on a cluster where executor loss is routine, swap
-    // for reliable checkpoint().
+    // Checkpointing.cut materializes it ONCE — bands·n slim rows,
+    // linear — and all branches read the cut. Same lineage-truncation
+    // precedent as clusters().
     //
     // r9 restructure, from the 26×-replica staged probe (SCALE.md):
     //  - bucket keys are LONGs ((band << 32) | bits), not "band:bits"
@@ -1238,12 +1223,11 @@ object Dedup {
       if (withEst) graft.functions.expressions.GraftFunctions
         .hyperplane_signs(col("v"), estPlanes)
       else lit(0L)
-    val bucketed = named
+    val bucketed = Checkpointing.cut(named
       .withColumn("sig", sigCol)
       .withColumn("bucket", explode(graft.functions.expressions.GraftFunctions
         .hyperplane_bands_long(col("v"), planes, effBands)))
-      .select(col("bucket"), col("id"), col("sig")) // ids+sig only through the LSH join
-      .localCheckpoint(true)
+      .select(col("bucket"), col("id"), col("sig"))) // ids+sig only through the LSH join
     // skew guard: drop degenerate hot buckets before the self-join,
     // observably (see capBuckets)
     val pruned = capBuckets(bucketed, Seq("bucket"), bucketCap, "embedding")
@@ -1463,18 +1447,13 @@ object Dedup {
     require(thresholds.nonEmpty && thresholds.forall(t => t > 0 && t < 1),
       s"thresholds must be in (0,1), got $thresholds")
     val ts = thresholds.sorted
-    // LAZY persist: the mined pair table (ids + jaccard, never text) is
+    // cut: the mined pair table (ids + jaccard, never text) is
     // consumed by BOTH the pair-count and the touched-doc-count branch;
     // without it each branch re-runs the whole LSH + exact-verify
-    // subtree, so "pairs mined once" held only per-branch. LIFECYCLE
-    // (ADVICE r17): same contract as minhashNearDupPairs' banded proxy —
-    // the CacheManager entry outlives the query until a session sweep
-    // (spark.catalog.clearCache() / the bench's per-query unpersist
-    // pass); long-lived sessions should sweep between calls.
-    val pairs = minhashNearDupPairs(df, id, text,
+    // subtree, so "pairs mined once" held only per-branch.
+    val pairs = Checkpointing.cut(minhashNearDupPairs(df, id, text,
       shingleN = shingleN, numHashes = numHashes, bands = bands,
-      threshold = ts.head)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      threshold = ts.head))
     val tCol = explode(array(ts.map(t => lit(t)): _*)).as("threshold")
     val fanned = pairs.select(col("id_a"), col("id_b"), col("jaccard"),
       tCol)

@@ -815,23 +815,25 @@ object Eval {
         round(value.cast("double"), 6).as("y"))
       .filter(col("group_key").isNotNull && col("y").isNotNull)
     val c = slim(cal)
-    // r18: LAZY persist of the tiny per-group prediction table — it
-    // feeds the residual broadcast join, the eval-side coverage join
-    // AND the final assembly join, and un-persisted each consumer
-    // replayed the full calibration scan + aggregate. |groups| rows;
-    // same lifecycle contract as the dedup banded proxy.
-    val pred = c.groupBy("group_key")
+    // r18: cut the tiny per-group prediction table — it feeds the
+    // residual broadcast join, the eval-side coverage join AND the
+    // final assembly join, and uncut each consumer replayed the full
+    // calibration scan + aggregate. |groups| rows.
+    val pred = Checkpointing.cut(c.groupBy("group_key")
       .agg(count(lit(1)).as("n_cal"),
         (sum(col("y").cast("decimal(28,6)")).cast("double") /
-          count(lit(1)).cast("double")).as("pred"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          count(lit(1)).cast("double")).as("pred")))
     val resid = c.join(broadcast(pred), Seq("group_key"))
       .select(col("group_key"),
         round(abs(col("y") - col("pred")), 6).as("r"))
-    val qhat = Relational.exactQuantiles(
+    // cut as well: both consumers below read qhat, and two copies of a
+    // subtree over a cut get no exchange reuse (Spark re-instances the
+    // self-joined RDD scan, whose copies then canonicalize apart), so
+    // uncut the residual-quantile pass ran twice
+    val qhat = Checkpointing.cut(Relational.exactQuantiles(
         resid, col("group_key"), col("r"), Seq(1.0 - alpha))
       .select(col("group_key"),
-        col(s"p${math.round((1.0 - alpha) * 100)}").as("qhat"))
+        col(s"p${math.round((1.0 - alpha) * 100)}").as("qhat")))
     val cov = slim(eval_)
       .join(broadcast(pred.select("group_key", "pred")), Seq("group_key"))
       .join(broadcast(qhat), Seq("group_key"))

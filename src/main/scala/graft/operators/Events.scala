@@ -398,19 +398,17 @@ object Events {
       events: DataFrame,
       fromType: String = "click",
       toType: String = "purchase"): DataFrame = {
-    // r18b: LAZY persist of the per-user firsts table — it feeds the
-    // counts aggregate AND the lag table that exactQuantiles evaluates
-    // three times (split sample, pass-1 collect, pass-2 pick), so
-    // un-persisted the event scan + user shuffle ran ~4× per action.
-    // |users|×3 columns, never event rows; same lifecycle contract as
-    // the dedup banded proxy.
-    val per = events
+    // r18b: cut the per-user firsts table — it feeds the counts
+    // aggregate AND the lag table that exactQuantiles evaluates three
+    // times (split sample, pass-1 collect, pass-2 pick), so uncut the
+    // event scan + user shuffle ran ~4× per action. |users|×3
+    // columns, never event rows.
+    val per = Checkpointing.cut(events
       .groupBy("user_id")
       .agg(
         min(when(col("event_type") === fromType, col("ts"))).as("t_from"),
         min(when(col("event_type") === toType, col("ts"))).as("t_to"))
-      .filter(col("t_from").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("t_from").isNotNull))
     val lags = per
       .filter(col("t_to").isNotNull &&
         col("t_to").cast("long") >= col("t_from").cast("long"))
@@ -1106,35 +1104,18 @@ object Events {
     * exist (the spine starts at min di).
     *
     * The (user, day) working set feeds FOUR consumers (bounds + the
-    * three coverage reaches). `materialize = true` computes it ONCE
-    * via lazy localCheckpoint (the block materializes on the FIRST
-    * action over the returned frame — construction stays side-effect
-    * free like every other operator here) instead of re-running the
-    * scan + distinct shuffle per reach — but the forked fresh-JVM A/B
-    * (bench/stickiness_persist_receipt_r15.txt) says re-scan WINS at
-    * every probe scale: min-of-3 0.75 s vs 1.04 s at sf0.1 and
-    * 1.08 s vs 1.79 s at 26×. Writing |users×days| rows to
-    * executor-local disk costs more than three codegen'd re-scans of
-    * a cache-warm columnar table — the same crossover recorded at
-    * [[Relational.exactQuantiles]], so re-scan is the DEFAULT here
-    * exactly as it is there. Flip it only when the events input is
-    * itself expensive to recompute (a long upstream lineage, a remote
-    * object store where three extra full reads are real I/O) —
-    * checkpoint blocks also have no lineage to recompute on executor
-    * loss.
+    * three coverage reaches) and is re-scanned by each, never cut:
+    * re-scan won at every probe scale (bench/stickiness_persist_receipt_r15.txt).
     *
     * Output: (di, dau, wau, mau, stickiness = dau/mau 6dp), one row
     * per observed-range day. */
-  def stickiness(
-      events: DataFrame, materialize: Boolean = false): DataFrame = {
-    val userDaysPlan = events
+  def stickiness(events: DataFrame): DataFrame = {
+    val userDays = events
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
       .select(col("user_id"),
         (unix_millis(date_trunc("day", col("ts"))) / lit(86400000L))
           .cast("long").as("di"))
       .distinct()
-    val userDays =
-      if (materialize) userDaysPlan.localCheckpoint(false) else userDaysPlan
     val bounds = userDays.agg(min("di").as("lo"), max("di").as("hi"))
     val spine = bounds
       .select(explode(sequence(col("lo"), col("hi"))).as("di"))

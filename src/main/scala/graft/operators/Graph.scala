@@ -34,10 +34,9 @@ object Graph {
     *
     * 100 TB shape (r18): the edge table with per-edge SHARES (w/outW,
     * one src-partitioned window pass — no outW self-join) is eagerly
-    * checkpointed ONCE (executor-local by default; pass
-    * [[Checkpointing.Reliable]] for a durable cut that survives
-    * executor loss on a real cluster — see [[Checkpointing]] for the
-    * restart contract) ALREADY hash-partitioned and sorted on src, so
+    * cut ONCE ([[Checkpointing.cut]]: executor-local, or durable where
+    * the deployment sets a checkpoint dir — see [[Checkpointing]] for
+    * the restart contract) ALREADY hash-partitioned and sorted on src, so
     * every iteration's contribution join reuses that partitioning
     * instead of re-shuffling the edge table per round. Iteration state
     * is the SPARSE in-sum table only (nodes with in-edges): pr(u) is a
@@ -56,8 +55,7 @@ object Graph {
       dst: Column,
       weight: Column,
       iterations: Int = 5,
-      damping: Double = 0.85,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val e0 = edges.select(src.as("src"), dst.as("dst"), weight.cast("double").as("w"))
@@ -73,12 +71,12 @@ object Graph {
           .cast("double"))
       .select(col("src"), col("dst"),
         (col("w") / col("out_w")).as("share"), col("out_w"))
-    val sharesCut = checkpoint.cut(shares) // the one edge-sized build action
-    val nodes = checkpoint.cut(
+    val sharesCut = Checkpointing.cut(shares) // the one edge-sized build action
+    val nodes = Checkpointing.cut(
       sharesCut.select(col("src").as("node"))
         .union(sharesCut.select(col("dst").as("node")))
         .distinct())
-    val nCut = checkpoint.cut(nodes.groupBy().agg(count(lit(1)).as("n_nodes")))
+    val nCut = Checkpointing.cut(nodes.groupBy().agg(count(lit(1)).as("n_nodes")))
     val base = lit(1.0 - damping) / col("n_nodes").cast("double")
     // sparse iteration state: in_sum(v) for nodes WITH in-edges only;
     // pr(u) = base + d·coalesce(in_sum(u), 0) is inlined into the next
@@ -135,27 +133,26 @@ object Graph {
       weight: Column,
       seeds: DataFrame, // one column: node
       iterations: Int = 5,
-      damping: Double = 0.85,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val e0 = edges.select(src.as("src"), dst.as("dst"), weight.cast("double").as("w"))
     // same r18 shape as [[pageRank]]: window out-weight (one scan), edge
     // table cut partitioned+sorted on src, sparse in-sum iteration state
-    val sharesCut = checkpoint.cut(
+    val sharesCut = Checkpointing.cut(
       e0.filter(col("src").isNotNull)
         .withColumn("out_w",
           sum(col("w").cast("decimal(28,6)")).over(Window.partitionBy("src"))
             .cast("double"))
         .select(col("src"), col("dst"), (col("w") / col("out_w")).as("share")))
     val seedSet = seeds.select(col("node")).distinct()
-    val nodes = checkpoint.cut(
+    val nodes = Checkpointing.cut(
       sharesCut.select(col("src").as("node"))
         .union(sharesCut.select(col("dst").as("node")))
         .distinct()
         .join(broadcast(seedSet.withColumn("flag", lit(1L))), Seq("node"), "left")
         .select(col("node"), coalesce(col("flag"), lit(0L)).as("flag")))
-    val nSeedsCut = checkpoint.cut(nodes.groupBy().agg(sum(col("flag")).as("n_seeds")))
+    val nSeedsCut = Checkpointing.cut(nodes.groupBy().agg(sum(col("flag")).as("n_seeds")))
     // s(v): flag/|S| — one exact IEEE divide; 0 everywhere on an empty
     // effective seed set
     val teleport = when(col("n_seeds") > 0,
@@ -216,7 +213,7 @@ object Graph {
     * updates make the SQL replay a linear unroll.
     *
     * 100 TB shape: the doubled edge list is checkpoint-cut once
-    * ([[Checkpointing]] — durable mode opt-in, as in [[pageRank]]); each
+    * ([[Checkpointing.cut]], as in [[pageRank]]); each
     * round is one shuffle keyed on (node, label) for the vote sum and
     * one on node for the argmax — both high-cardinality. Per-round
     * state is the labels table itself, one row per node. */
@@ -225,15 +222,14 @@ object Graph {
       src: Column,
       dst: Column,
       weight: Column,
-      iterations: Int = 3,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      iterations: Int = 3): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val e0 = edges.select(src.as("src"), dst.as("dst"), weight.cast("long").as("w"))
     // r18: double the edges in ONE pass (explode) instead of a self-union
     // that scans the (expensive) upstream twice, then land the aggregate
     // repartitioned+sorted on src so each round's vote join adds no
     // edge-side exchange (the cut RDD keeps the partitioning)
-    val und = checkpoint.cut( // one build-time action, same class as pageRank
+    val und = Checkpointing.cut( // one build-time action, same class as pageRank
       e0.select(explode(array(
           struct(col("src"), col("dst"), col("w")),
           struct(col("dst").as("src"), col("src").as("dst"), col("w")))).as("e"))
@@ -241,13 +237,13 @@ object Graph {
         .groupBy("src", "dst").agg(sum("w").as("w"))
         .repartition(col("src"))
         .sortWithinPartitions("src"))
-    val nodes = checkpoint.cut(und.select(col("src").as("node")).distinct())
+    val nodes = Checkpointing.cut(und.select(col("src").as("node")).distinct())
     // vote-less nodes (no in-edge with a non-null src — only possible via
     // null endpoints) keep their initial self-label forever: a STATIC
     // set, computed once, unioned back per round so labels_t references
     // labels_{t−1} exactly once (the old keep-previous left join doubled
     // the lineage per round — 2^iterations plan growth)
-    val voteless = checkpoint.cut(
+    val voteless = Checkpointing.cut(
       nodes.join(
         und.filter(col("src").isNotNull).select(col("dst").as("node")).distinct(),
         Seq("node"), "left_anti"))
@@ -287,7 +283,7 @@ object Graph {
     * 100 TB shape: each round is one degree aggregation (map-side
     * partial count on the edge list) plus two semi-joins keyed on the
     * node id — no wedge products, nothing quadratic; each round's
-    * survivor edge list is cut via `checkpoint` (the [[pageRank]]
+    * survivor edge list is cut via [[Checkpointing.cut]] (the [[pageRank]]
     * lineage discipline — without it round R re-derives rounds 1..R−1
     * per reference). Work per round is bounded by the CURRENT edge
     * count, which only shrinks.
@@ -299,11 +295,10 @@ object Graph {
       a: Column,
       b: Column,
       k: Int,
-      rounds: Int = 5,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      rounds: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = checkpoint.cut(
+    var e = Checkpointing.cut(
       edges.select(a.as("a"), b.as("b"))
         .filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("u"),
@@ -321,7 +316,7 @@ object Graph {
       // added write cost.
       val keep = degrees(e).filter(col("degree") >= k)
         .select(col("node"))
-      e = checkpoint.cut(
+      e = Checkpointing.cut(
         e.join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
           .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
           .select("u", "v"))
@@ -364,15 +359,14 @@ object Graph {
       a: Column,
       b: Column,
       seeds: DataFrame, // one column: node
-      maxHops: Int = 4,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      maxHops: Int = 4): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val half = edges.select(a.as("src"), b.as("dst"))
       .filter(col("src") =!= col("dst"))
     // r18: single-pass doubling (explode, not a self-union that scans the
     // upstream twice), cut repartitioned+sorted on src so each round's
     // frontier semi-join adds no edge-side exchange
-    val und = checkpoint.cut(
+    val und = Checkpointing.cut(
       half.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
@@ -383,14 +377,14 @@ object Graph {
     // per round only the NEW frontier is materialized; the labeled set is
     // a lazy union over the already-cut frontier RDDs (the old shape
     // re-materialized the whole accumulated set every round)
-    var frontier = checkpoint.cut(
+    var frontier = Checkpointing.cut(
       und.select(col("src").as("node")).distinct()
         .join(seeds.select(col("node")).distinct(), Seq("node"), "left_semi")
         .withColumn("hops", lit(0L)))
     var fronts = List(frontier)
     (1 to maxHops).foreach { h =>
       val seen = fronts.map(_.select("node")).reduce(_ union _)
-      frontier = checkpoint.cut(
+      frontier = Checkpointing.cut(
         und.join(frontier.select(col("node").as("src")), Seq("src"), "left_semi")
           .select(col("dst").as("node")).distinct()
           .join(seen, Seq("node"), "left_anti")
@@ -417,7 +411,7 @@ object Graph {
     * whose far endpoints are themselves an oriented edge (left-semi
     * pair join; each triangle found exactly once). No cap is needed:
     * orientation IS the skew guard. The oriented list (m rows of two
-    * ids + one long) is cut once via `checkpoint` and reused by all
+    * ids + one long) is cut once via [[Checkpointing.cut]] and reused by all
     * three references — the pageRank discipline, without which the
     * doc-scan + explode + distinct prefix replays 3×.
     *
@@ -430,18 +424,17 @@ object Graph {
   def triangles(
       edges: DataFrame,
       a: Column,
-      b: Column,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      b: Column): DataFrame = {
     // r18: the simple-graph edge list and the degree table are each cut
     // once — the old lazy spelling replayed the upstream scan 4× (deg
     // twice inside the orientation build, e once, deg again at output)
-    val e = checkpoint.cut(
+    val e = Checkpointing.cut(
       edges.select(a.as("a"), b.as("b"))
         .filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
         .distinct())
-    val deg = checkpoint.cut(
+    val deg = Checkpointing.cut(
       e.select(col("u").as("node"))
         .union(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree")))
@@ -449,7 +442,7 @@ object Graph {
     // (deg, id) key so the wedge self-join can order far endpoints
     // without a third deg lookup. Cut repartitioned+sorted on src: the
     // wedge self-join then runs exchange-free on both sides.
-    val oriented = checkpoint.cut(
+    val oriented = Checkpointing.cut(
       e.join(deg.select(col("node").as("u"), col("degree").as("du")), Seq("u"))
         .join(deg.select(col("node").as("v"), col("degree").as("dv")), Seq("v"))
         .select(
@@ -521,14 +514,13 @@ object Graph {
       src: Column,
       dst: Column,
       minCommon: Long = 2L,
-      degCap: Long = 64L,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      degCap: Long = 64L): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
     require(degCap >= 2, s"degCap must be >= 2, got $degCap")
     // r18: cut the three shared subtrees once — the fully lazy spelling
     // replayed the upstream edge derivation per reference (52 parquet
     // scans in one sf0.1 plan); und/deg/centers are each ids+counts only
-    val und = checkpoint.cut(edges
+    val und = Checkpointing.cut(edges
       .select(src.cast("string").as("a"), dst.cast("string").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),
@@ -536,14 +528,14 @@ object Graph {
       .distinct())
     val adj = und.select(col("u").as("z"), col("v").as("n"))
       .unionByName(und.select(col("v").as("z"), col("u").as("n")))
-    val deg = checkpoint.cut(adj.groupBy("z").agg(count(lit(1)).as("deg")))
+    val deg = Checkpointing.cut(adj.groupBy("z").agg(count(lit(1)).as("deg")))
     // cut repartitioned+sorted on the wedge center so the capped
     // self-join runs exchange-free on both sides. deg ≥ 2 is explicit
     // now that aa_term is materialized into the cut: a deg-1 center can
     // never form an x < y pair (value-identical), but its ln(1) = 0
     // divisor — previously never evaluated because the projection was
     // deferred past the pair filter — would trip ANSI divide-by-zero
-    val centers = checkpoint.cut(
+    val centers = Checkpointing.cut(
       adj.join(deg.filter(col("deg") <= degCap && col("deg") >= 2), Seq("z"))
         .withColumn("aa_term",
           round(lit(1.0) / log(col("deg").cast("double")), 9)
@@ -605,8 +597,7 @@ object Graph {
       src: Column,
       dst: Column,
       weight: Column,
-      iterations: Int = 3,
-      checkpoint: Checkpointing.Mode = Checkpointing.Local): DataFrame = {
+      iterations: Int = 3): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // r18: TWO cut copies of the edge list, partitioned+sorted on the
     // key each matvec joins on (src for Aᵀh, dst for A·a), so no round
@@ -617,13 +608,13 @@ object Graph {
     // first; nodes absent from raw have s = 0 and contribute exactly
     // nothing either way. The dense node join happens ONCE, at output.
     val e0 = edges.select(src.as("src"), dst.as("dst"), weight.cast("double").as("w"))
-    val eSrc = checkpoint.cut(e0.repartition(col("src")).sortWithinPartitions("src"))
-    val eDst = checkpoint.cut(eSrc.repartition(col("dst")).sortWithinPartitions("dst"))
-    val nodes = checkpoint.cut(
+    val eSrc = Checkpointing.cut(e0.repartition(col("src")).sortWithinPartitions("src"))
+    val eDst = Checkpointing.cut(eSrc.repartition(col("dst")).sortWithinPartitions("dst"))
+    val nodes = Checkpointing.cut(
       eSrc.select(col("src").as("node"))
         .union(eSrc.select(col("dst").as("node")))
         .distinct())
-    val nCut = checkpoint.cut(nodes.groupBy().agg(count(lit(1)).as("n_nodes")))
+    val nCut = Checkpointing.cut(nodes.groupBy().agg(count(lit(1)).as("n_nodes")))
     // r18b: each matvec's normalizer is the exact decimal sum of the
     // table the cut just materialized — so it rides the cut's OWN
     // action as an observe() metric (the Dedup.clusters
@@ -635,7 +626,7 @@ object Graph {
     // is the same IEEE double as cast(tot as double).
     def cutWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
       val obs = org.apache.spark.sql.Observation()
-      val out = checkpoint.cut(
+      val out = Checkpointing.cut(
         df.observe(obs, sum(col("raw")).as("rsum")))
       val d = obs.get("rsum").asInstanceOf[java.math.BigDecimal]
       (out, if (d == null) java.math.BigDecimal.ZERO else d)

@@ -165,10 +165,14 @@ object Partitioning {
       saltSource: Column,
       broadcastRowLimit: Long = 1000000L): (DataFrame, SkewDecision) = {
     val spark = left.sparkSession
-    val prof = Relational.keySkewProfile(left, col(leftKey)).collect()(0)
-    val leftRows = prof.getAs[Long]("n_rows")
-    val topShare = prof.getAs[Double]("top_share")
-    val p99Share = prof.getAs[Long]("p99_n").toDouble / leftRows.toDouble
+    // no non-null left key → no profile row: a zero profile, no skew
+    val (leftRows, topShare, p99Share) =
+      Relational.keySkewProfile(left, col(leftKey)).collect().headOption
+        .fold((0L, 0.0, 0.0)) { prof =>
+          val n = prof.getAs[Long]("n_rows")
+          (n, prof.getAs[Double]("top_share"),
+            prof.getAs[Long]("p99_n").toDouble / n.toDouble)
+        }
     val rightRows = right.count()
     val aqeOn =
       spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&

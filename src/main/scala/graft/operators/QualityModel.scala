@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * fit is partition-order independent — two runs on any cluster layout
   * produce bit-identical weights (asserted in QualityModelSpec).
   *
-  * The feature table is localCheckpointed once up front: the loop is
+  * The feature table is cut once up front: the loop is
   * inherently sequential and every iteration re-reads the SAME
   * materialized features instead of replaying the feature expressions —
   * the same lineage-cut discipline as Dedup.clusters / bpeTrain.
@@ -66,7 +66,7 @@ object QualityModel {
     // upstream feature expressions
     val cols = label.cast("double").as("y") +:
       features.zipWithIndex.map { case (f, i) => f.cast("double").as(s"x$i") }
-    val train = data.select(cols: _*).localCheckpoint(true)
+    val train = Checkpointing.cut(data.select(cols: _*))
     val n = train.count().toDouble
     require(n > 0, "empty training set")
 

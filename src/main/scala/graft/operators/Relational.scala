@@ -199,8 +199,8 @@ object Relational {
     // bound. nB == 1 degenerates to one cell per group (the old
     // whole-group sort) with no split job at all.
     // `materialize` cuts the double evaluation of this lineage (pass-1
-    // count + pass-2 rank-pick both scan it) via an eager
-    // localCheckpoint — the Graph.pageRank discipline. G6Probe A/B
+    // count + pass-2 rank-pick both scan it) via Checkpointing.cut —
+    // the Graph.pageRank discipline. G6Probe A/B
     // (r10, `git show d7412f5:src/main/scala/graft/tools/G6Probe.scala`):
     // it wins at sf0.1 (min 1.97 s vs 2.71 s), ties at 10×,
     // and crosses over by 26× as the checkpoint write tracks n.
@@ -226,7 +226,7 @@ object Relational {
         .drop("bs")
     }
     val bucketed =
-      if (materialize) bucketedPlan.localCheckpoint(true) else bucketedPlan
+      if (materialize) Checkpointing.cut(bucketedPlan) else bucketedPlan
     // pass 1: per-(group, bucket) counts → exclusive offsets + targets
     val countRows = bucketed.groupBy("group_key", "bucket")
       .agg(count(lit(1)).as("c")).collect() // ≤ G·B rows
@@ -769,18 +769,15 @@ object Relational {
   }
 
   def keySkewProfile(df: DataFrame, key: Column): DataFrame = {
-    // r18b: LAZY persist of the per-key count table. It feeds the
-    // stats aggregate, the top-1 pull AND exactQuantiles — which
-    // itself evaluates its input three times (split-point sample,
-    // pass-1 count collect, pass-2 rank pick) — so un-persisted the
-    // full corpus scan + key shuffle ran ~5× per action. |keys| rows
-    // of (string, long), never corpus rows; same lifecycle contract
-    // as the dedup banded proxy (CacheManager holds the entry until
-    // the session sweeps or the caller clears the cache).
-    val counts = df.select(key.cast("string").as("k"))
+    // r18b: cut the per-key count table. It feeds the stats
+    // aggregate, the top-1 pull AND exactQuantiles — which itself
+    // evaluates its input three times (split-point sample, pass-1
+    // count collect, pass-2 rank pick) — so uncut the full corpus
+    // scan + key shuffle ran ~5× per action. |keys| rows of
+    // (string, long), never corpus rows.
+    val counts = Checkpointing.cut(df.select(key.cast("string").as("k"))
       .filter(col("k").isNotNull)
-      .groupBy("k").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("k").agg(count(lit(1)).as("n")))
     val stats = counts.agg(
       count(lit(1)).as("n_keys"), sum("n").as("n_rows"))
     val top = counts.orderBy(col("n").desc, col("k"))
@@ -942,7 +939,7 @@ object Relational {
     * (a projection of parquet), re-scan wins at cluster scale and
     * `materialize=false` is right. When `df` carries an expensive
     * lineage (an aggregation of the event log), pass
-    * `materialize=true` to eagerly localCheckpoint it first —
+    * `materialize=true` to cut it first ([[Checkpointing.cut]]) —
     * otherwise each evaluation replays the full upstream shuffle, and
     * CHAINED calls multiply evaluations geometrically (3ⁿ — measured
     * 8.35 s vs 0.78 s on a 3-deep chain at sf0.1 before this knob). */
@@ -952,7 +949,7 @@ object Relational {
       budget: Long = Long.MaxValue, op: String = "bucketedGlobalRank",
       budgetName: String = "budget", buckets: Int = 0,
       materialize: Boolean = false): DataFrame = {
-    val df = if (materialize) df0.localCheckpoint(true) else df0
+    val df = if (materialize) Checkpointing.cut(df0) else df0
     val spark = df.sparkSession
     val nB = if (buckets > 0) buckets
       else spark.sessionState.conf.numShufflePartitions
@@ -1023,7 +1020,7 @@ object Relational {
       population: DataFrame, idCol: String,
       specs: Seq[(String, Boolean, String)],
       budget: Long, op: String, budgetName: String): DataFrame = {
-    val pop = population.localCheckpoint(true)
+    val pop = Checkpointing.cut(population)
     val tagged = specs.zipWithIndex.map { case ((key, desc, out), i) =>
       bucketedGlobalRank(pop, key, descending = desc,
         tieBreaks = Seq(idCol), budget = budget, op = op,

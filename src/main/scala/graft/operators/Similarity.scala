@@ -796,7 +796,7 @@ object Similarity {
     * aggregation job over the persisted pool plus a 1-row collect of
     * the pick; the selected vector re-enters the plan as d literals (no
     * pairwise matrix, no self-join), and the accumulating
-    * filter+withColumn lineage is truncated by `localCheckpoint` every
+    * filter+withColumn lineage is truncated by [[Checkpointing.cut]] every
     * 8 picks so the analyzed plan never grows O(select) deep. Both
     * paths run the identical IEEE chain (the driver loop mirrors
     * CosineSim's left-to-right accumulation and Spark's HALF_UP
@@ -942,7 +942,7 @@ object Similarity {
           .filter(col("id") =!= pid)
           .withColumn("msim", // greatest skips nulls: true max over selected
             greatest(col("msim"), round(cosine(col("v"), pLit), 6)))
-        if (r % 8 == 0) remaining = remaining.localCheckpoint()
+        if (r % 8 == 0) remaining = Checkpointing.cut(remaining)
       }
     }
     picks.toSeq

@@ -869,7 +869,7 @@ object TextPipeline {
         remaining = remaining
           .filter(col("id") =!= pid)
           .join(broadcast(pickToks), Seq("token"), "left_anti")
-        if (r % 4 == 0) remaining = remaining.localCheckpoint()
+        if (r % 4 == 0) remaining = Checkpointing.cut(remaining)
       }
     }
     picks.toSeq
@@ -1269,7 +1269,7 @@ object TextPipeline {
     * depend on word FREQUENCIES, so pass 0 folds the corpus into a
     * (word, freq) table — the ONLY corpus scan, however many merges —
     * and every iteration runs on that vocabulary-bounded table
-    * (localCheckpointed each round: the loop is inherently sequential,
+    * (cut each round: the loop is inherently sequential,
     * and without the cut iteration k would replay all k−1 prior merge
     * maps — the pointer-jumping discipline from Dedup.clusters).
     * HuggingFace's trainer makes the same word-count reduction; at web
@@ -1289,9 +1289,7 @@ object TextPipeline {
       docs: DataFrame,
       text: Column,
       numMerges: Int = 10,
-      minPairCount: Long = 2L,
-      checkpoint: graft.operators.Checkpointing.Mode =
-        graft.operators.Checkpointing.Local): DataFrame = {
+      minPairCount: Long = 2L): DataFrame = {
     require(numMerges >= 1 && numMerges <= 64,
       s"numMerges must be in [1, 64], got $numMerges")
     val spark = docs.sparkSession
@@ -1302,7 +1300,7 @@ object TextPipeline {
       .groupBy("w").agg(count(lit(1)).as("freq"))
     // "(?!$)" splits into single chars WITHOUT the trailing "" that an
     // empty-pattern split(limit = -1) keeps
-    var work = checkpoint.cut(wordFreq
+    var work = Checkpointing.cut(wordFreq
       .select(col("freq"), split(col("w"), "(?!$)").as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var rank = 1
@@ -1324,7 +1322,7 @@ object TextPipeline {
         val a = top.head.getAs[String]("sym_a")
         val b = top.head.getAs[String]("sym_b")
         merges += ((rank.toLong, a, b, top.head.getAs[Long]("n_pair")))
-        work = checkpoint.cut(work
+        work = Checkpointing.cut(work
           .select(col("freq"), mergeFold(col("syms"), a, b).as("syms")))
         rank += 1
       }

@@ -72,9 +72,9 @@ object PlanShapes {
   }
 
   /** File-scan leaves of `plan`, DESCENDING into cached subtrees
-    * (ADVICE r17 #2): dedup-family queries persist a banded proxy, so
-    * their parquet scans sit under `InMemoryTableScanExec.relation.
-    * cachedPlan` — invisible to a plain `plan.collect`, which made
+    * (ADVICE r17 #2): a persisted subtree's parquet scans sit under
+    * `InMemoryTableScanExec.relation.cachedPlan` — invisible to a
+    * plain `plan.collect`, which made
     * rt_rows_read/rt_files_read silently underreport exactly the
     * full-surface coverage rt=all was added for. The cached plan's
     * scans execute (and populate metrics) on the cache's first

@@ -41,13 +41,17 @@ class SessionSpec extends AnyFunSuite with SparkSpec {
     Session.release(spark)
     assert(spark.sharedState.cacheManager.isEmpty)
     val keys = Seq("a", "a", "a", "b", "b", "c").toDF("k")
-    assert(Relational.keySkewProfile(keys, col("k")).collect().length == 1)
-    assert(!spark.sharedState.cacheManager.isEmpty &&
-      spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "keySkewProfile should leave its persisted counts behind")
+    val profile = Relational.keySkewProfile(keys, col("k"))
+    assert(profile.collect().length == 1)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "keySkewProfile must leave no CacheManager entry")
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
+      "keySkewProfile's cut of its counts is held by the frame")
     Session.release(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     assert(spark.sharedState.cacheManager.isEmpty)
+    // the frame stayed reachable, so release (not the cleaner) freed the cut
+    assert(profile.columns.contains("top_share"))
   }
 
   test("no file under src/ builds a session outside the factory") {

@@ -134,97 +134,45 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(a == b)
   }
 
-  test("Reliable checkpoint mode: durable blocks written, results bit-identical") {
+  test("durable cuts under a checkpoint dir: files written, results bit-identical") {
     // r9 verdict ask #7: localCheckpoint blocks die with their executor
-    // and carry no lineage — the opt-in Reliable(dir) cut writes each
-    // round's state durably so a 1000-executor run survives churn.
-    // Same lineage truncation, same results (pinned here for both
-    // graph ops and bpeTrain).
+    // and carry no lineage — a deployment with a checkpoint dir gets
+    // durable cuts that survive churn. Same lineage truncation, same
+    // results (pinned here for the graph ops and bpeTrain).
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val edges = (1 to 40).map(i => (s"n${i % 7}", s"n${(i * 3) % 7}", (i % 4 + 1).toLong))
       .groupBy(e => (e._1, e._2)).map { case ((s, d), es) => (s, d, es.map(_._3).sum) }.toSeq
     val df = edges.toDF("src", "dst", "w")
-    val local = Graph.pageRank(df, col("src"), col("dst"), col("w"))
-      .select("node", "pr").as[(String, Double)].collect().toMap
-    val durable = Graph.pageRank(df, col("src"), col("dst"), col("w"),
-        checkpoint = Checkpointing.Reliable(dir))
-      .select("node", "pr").as[(String, Double)].collect().toMap
-    assert(local == durable, "cut substrate must not change ranks")
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(files > 0, "Reliable mode must write durable checkpoint files")
-
-    val lpaL = Graph.labelPropagation(df, col("src"), col("dst"), col("w"))
-      .as[(String, String)].collect().toSet
-    val lpaD = Graph.labelPropagation(df, col("src"), col("dst"), col("w"),
-        checkpoint = Checkpointing.Reliable(dir))
-      .as[(String, String)].collect().toSet
-    assert(lpaL == lpaD)
-
-    val docs = Seq("low lower lowest", "new newer newest", "low low new")
-      .toDF("text")
-    val bpeL = TextPipeline.bpeTrain(docs, col("text"), numMerges = 4)
-      .collect().map(_.toString).toSeq
-    val bpeD = TextPipeline.bpeTrain(docs, col("text"), numMerges = 4,
-        checkpoint = Checkpointing.Reliable(dir))
-      .collect().map(_.toString).toSeq
-    assert(bpeL == bpeD)
-
-    // same contract for the r10 graph operators
     val ed = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"))
       .toDF("a", "b")
-    val triL = Graph.triangles(ed, col("a"), col("b"))
-      .collect().map(_.toString).toSet
-    val triD = Graph.triangles(ed, col("a"), col("b"),
-        checkpoint = Checkpointing.Reliable(dir))
-      .collect().map(_.toString).toSet
-    assert(triL == triD)
-    val kcL = Graph.kCore(ed, col("a"), col("b"), 2)
-      .collect().map(_.toString).toSet
-    val kcD = Graph.kCore(ed, col("a"), col("b"), 2,
-        checkpoint = Checkpointing.Reliable(dir))
-      .collect().map(_.toString).toSet
-    assert(kcL == kcD)
-    val pprL = runPpr(Seq(("a", "b", 1L), ("b", "a", 1L)), Seq("a"))
-    val pprD = Graph.personalizedPageRank(
-        Seq(("a", "b", 1L), ("b", "a", 1L)).toDF("src", "dst", "w"),
-        col("src"), col("dst"), col("w"), Seq("a").toDF("node"),
-        checkpoint = Checkpointing.Reliable(dir))
-      .as[(String, Double, Boolean)].collect()
-      .map { case (n, p, s) => n -> ((p, s)) }.toMap
-    assert(pprL == pprD)
-  }
-
-  test("Reliable cut reuses its checkpoint dir: one UUID subdir across cuts") {
-    // ADVICE r10: Spark stores setCheckpointDir(dir) as dir/<UUID>, so
-    // the old full-string reuse guard never matched and EVERY cut
-    // minted a fresh UUID subdirectory. The fix compares the parent of
-    // the live setting; two cuts through one Mode (and a second Mode on
-    // the same dir) must land in ONE UUID subdirectory.
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-reuse")
-    def uuidDirs(): Set[String] =
-      java.nio.file.Files.list(dir).iterator().asScala
-        .map(_.getFileName.toString).toSet
-    val mode = Checkpointing.Reliable(dir.toString)
-    mode.cut(Seq(1, 2, 3).toDF("x"))
-    val first = uuidDirs()
-    assert(first.size == 1, s"one UUID subdir after the first cut, got $first")
-    mode.cut(Seq(4, 5).toDF("x"))
-    Checkpointing.Reliable(dir.toString).cut(Seq(6).toDF("x"))
-    assert(uuidDirs() == first,
-      "subsequent cuts must reuse the live checkpoint dir, not mint UUIDs")
-    // ADVICE r11: the reuse check compares fully-QUALIFIED URIs, so a
-    // scheme-explicit spelling of the SAME local dir still reuses
-    // (file:/x qualifies identically to /x on the local fs) …
-    Checkpointing.Reliable("file:" + dir.toString).cut(Seq(7).toDF("x"))
-    assert(uuidDirs() == first,
-      "file:-qualified spelling of the same dir must reuse, not re-set")
-    // … while a DIFFERENT path never reuses, even with the same suffix.
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ckpt-other")
-    Checkpointing.Reliable(dir2.toString).cut(Seq(8).toDF("x"))
-    assert(java.nio.file.Files.list(dir2).iterator().asScala.nonEmpty,
-      "a different dir must become the live checkpoint target")
+    val docs = Seq("low lower lowest", "new newer newest", "low low new")
+      .toDF("text")
+    def results() = Seq(
+      Graph.pageRank(df, col("src"), col("dst"), col("w"))
+        .select("node", "pr").as[(String, Double)].collect().toMap,
+      Graph.labelPropagation(df, col("src"), col("dst"), col("w"))
+        .as[(String, String)].collect().toSet,
+      TextPipeline.bpeTrain(docs, col("text"), numMerges = 4)
+        .collect().map(_.toString).toSeq,
+      // same contract for the r10 graph operators
+      Graph.triangles(ed, col("a"), col("b")).collect().map(_.toString).toSet,
+      Graph.kCore(ed, col("a"), col("b"), 2).collect().map(_.toString).toSet,
+      Graph.personalizedPageRank(
+          Seq(("a", "b", 1L), ("b", "a", 1L)).toDF("src", "dst", "w"),
+          col("src"), col("dst"), col("w"), Seq("a").toDF("node"))
+        .as[(String, Double, Boolean)].collect()
+        .map { case (n, p, s) => n -> ((p, s)) }.toMap)
+    val local = results()
+    val durable =
+      try {
+        spark.sparkContext.setCheckpointDir(dir)
+        results()
+      } finally spark.sparkContext.setCheckpointDir(null)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(local == durable, "cut substrate must not change results")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(java.nio.file.Files.isRegularFile(_)).count()
+    assert(files > 0, "a checkpoint dir must receive durable checkpoint files")
   }
 
   private def runTriangles(edges: Seq[(String, String)])

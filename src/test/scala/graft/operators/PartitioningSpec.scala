@@ -183,6 +183,25 @@ class PartitioningSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
   }
 
+  test("autoSkewJoin: no non-null left key is a zero profile and an empty join") {
+    val right = (0L to 50L).map(i => (i, s"r$i")).toDF("rk", "rv")
+    val empty = Seq.empty[(java.lang.Long, Long)].toDF("k", "lv")
+    val allNull = Seq((null.asInstanceOf[java.lang.Long], 1L),
+      (null.asInstanceOf[java.lang.Long], 2L)).toDF("k", "lv")
+    for (left <- Seq(empty, allNull)) {
+      val (joined, d) = Partitioning.autoSkewJoin(
+        left, right, "k", "rk", saltSource = col("lv"))
+      assert(d.strategy == "broadcast", d.toString)
+      assert(joined.collect().isEmpty)
+      // over the broadcast budget the zero profile reads as no dominant key
+      val (plain, p) = Partitioning.autoSkewJoin(
+        left, right, "k", "rk", saltSource = col("lv"), broadcastRowLimit = 10L)
+      assert(p.strategy == "plain" && p.reason.contains("top_share 0.0000"), p.toString)
+      assert(plain.schema == left.join(right, col("k") === col("rk")).schema)
+      assert(plain.collect().isEmpty)
+    }
+  }
+
   test("bloomSemiJoin: result-identical to the plain join; screen precedes the exchange") {
     val big = (1L to 20000L).map(i => (i % 997L, i)).toDF("k", "payload")
     val small = (0L to 96L).filter(_ % 7 == 0).map(i => (i, s"dim$i"))
