@@ -12,11 +12,11 @@ import scala.util.Random
 
 /** Custom Catalyst expressions for the hot hash/similarity paths.
   *
-  * The composed higher-order-function formulations (see
-  * operators.Dedup.minhashSignature / simhash) are correct but evaluate
-  * interpreted: k hash permutations × hundreds of shingles per row cost
-  * tens of milliseconds each. These expressions compute the identical
-  * shape in one tight JVM loop per row — typically 100-1000× faster —
+  * Composed higher-order-function formulations of these hashes
+  * (transform/aggregate over shingle arrays) evaluate interpreted: k
+  * hash permutations × hundreds of shingles per row cost tens of
+  * milliseconds each. These expressions compute the same shape in one
+  * tight JVM loop per row — typically 100-1000× faster —
   * which is the difference between a pipeline that scans 100 TB and one
   * that stalls on CPU. They are deterministic, null-safe, and
   * partition-order independent, so plans using them stay reproducible.

@@ -70,36 +70,6 @@ object Dedup {
     df.join(broadcast(over), keys, "left_anti")
   }
 
-  /** Estimate-then-verify prefilter shared by the near-dup verify stages:
-    * joins per-id MinHash signatures onto a candidate-pair table and keeps
-    * only pairs whose signature-agreement fraction (an unbiased Jaccard
-    * estimator, sd ≈ √(J(1−J)/numHashes)) is >= `estFloor` — killing the
-    * background BEFORE text bodies are rehydrated for the O(len) exact
-    * verify. Shuffles only (id, signature) tables, never text. Culled
-    * counts are reported via observe() (see [[prefilterMetricPrefix]]). */
-  private def sigAgreementPrefilter(
-      candidates: DataFrame, // two id columns: (leftId, rightId)
-      leftSigs: DataFrame, // (leftId, sig_l)
-      rightSigs: DataFrame, // (rightId, sig_r)
-      leftId: String, rightId: String,
-      numHashes: Int, estFloor: Double, op: String): DataFrame =
-    candidates
-      .join(leftSigs, Seq(leftId))
-      .join(rightSigs, Seq(rightId))
-      .withColumn("est_ok",
-        size(filter(zip_with(col("sig_l"), col("sig_r"), _ === _), x => x))
-          .cast("double") / numHashes >= estFloor)
-      // no silent culls: the metric sits UPSTREAM of the est_ok filter on
-      // a join output whose emptiness isn't statically known, so it
-      // survives AQE in the partial-cull regime (the round-6 CollectMetrics
-      // trap strikes only when the observed branch itself is emptied)
-      .observe(s"$prefilterMetricPrefix${op}_${skewGuardSeq.incrementAndGet()}",
-        coalesce(sum(when(col("est_ok"), 0L).otherwise(1L)), lit(0L))
-          .as("culled_candidates"),
-        count(lit(1)).as("candidates"))
-      .filter(col("est_ok"))
-      .select(leftId, rightId)
-
   /** Exact dedup: one surviving id per identical key. groupBy(min) rather
     * than dropDuplicates: dropDuplicates keeps an ARBITRARY row per key
     * (whichever partition wins), which is nondeterministic at scale. */
@@ -191,45 +161,129 @@ object Dedup {
   }
 
   // ────────────────────────────── MinHash + LSH ──────────────────────────
+  // Every MinHash-LSH decision has one implementation here, shared by
+  // the three batch screens below and EventStreams.nearDupScreenStream:
+  // the signature table ([[minhashSigs]]), the band layout
+  // ([[bandHash]]/[[bandStructs]]), the corpus index with its hot-bucket
+  // cap ([[minhashIndexBands]] → [[capBuckets]]), the signature-agreement
+  // estimate ([[estimatePrefilter]]) and the exact verify
+  // ([[verifyJaccard]]).
 
-  /** Deterministic universal-hash coefficients for MinHash. The prime is
-    * 31-bit so a*h + b stays well inside Long (ANSI mode errors on
-    * overflow); a 2^31 minhash domain is ample for per-document shingle
-    * sets. */
-  private val MinhashPrime = 1000000007L
+  /** (idName, sig): one MinHash signature per row, from the custom
+    * MinHashSig expression (one JVM loop per row — see
+    * functions.expressions.HashExpressions). */
+  private[graft] def minhashSigs(
+      df: DataFrame, id: Column, text: Column, idName: String,
+      shingleN: Int, numHashes: Int, seed: Long): DataFrame =
+    df.select(id.as(idName), graft.functions.expressions.GraftFunctions
+      .minhash_sig(text, shingleN, numHashes, seed).as("sig"))
 
-  /** k-permutation MinHash signature over a shingle array column.
-    * h_i(s) = (a_i * (xxhash64(s) mod p) + b_i) mod p, minimized over
-    * shingles. Both the shingle array and its base hashes are let-bound
-    * (TextFunctions.bound) so they evaluate ONCE per row — naive column
-    * reuse lets CollapseProject copy the whole (expensive) shingle
-    * expression into each of the k min-hash columns. */
-  def minhashSignature(shingleArr: Column, coeffs: Array[(Long, Long)]): Column = {
-    val coeffArr = array(coeffs.map { case (a, b) =>
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }.toSeq: _*)
-    TextFunctions.bound(
-      TextFunctions.bound(shingleArr)(sh =>
-        transform(sh, s => pmod(xxhash64(s), lit(MinhashPrime))))) { hs =>
-      transform(coeffArr, c =>
-        array_min(transform(hs, h =>
-          pmod(c("a") * h + c("b"), lit(MinhashPrime)))))
-    }
+  /** The LSH band layout: band `b` of a signature is the xxhash64 of its
+    * b-th run of numHashes/bands hashes. Docs sharing any band hash land
+    * in one bucket, so candidates come from equi-joins on
+    * (band, bhash), never from the O(n²) cross join. */
+  private[graft] def bandHash(sig: Column, b: Int, numHashes: Int, bands: Int): Column = {
+    val rowsPerBand = numHashes / bands
+    xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand))
   }
+
+  /** One (band, bhash, carry…) struct per band of `sig`, with `sig`
+    * let-bound so it evaluates once per row however many bands (and
+    * `carry` fields) read it. Explode it for a band table. */
+  private[graft] def bandStructs(
+      sig: Column, numHashes: Int, bands: Int,
+      carry: Column => Seq[Column] = _ => Nil): Column =
+    TextFunctions.bound(sig) { s =>
+      array((0 until bands).map { b =>
+        struct(Seq(lit(b).as("band"),
+          bandHash(s, b, numHashes, bands).as("bhash")) ++ carry(s): _*)
+      }: _*)
+    }
+
+  /** (idName, band, bhash): `bands` rows per input row — the shuffle
+    * carries only these, never shingle arrays or text bodies. */
+  private def bandTable(
+      df: DataFrame, idName: String, sig: Column,
+      numHashes: Int, bands: Int): DataFrame =
+    df.select(col(idName), explode(bandStructs(sig, numHashes, bands)).as("bb"))
+      .select(col(idName), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
+
+  /** The corpus side of every screen: the (band, bhash, corpus_id) probe
+    * table of a (corpus_id, sig) signature table, hot buckets capped at
+    * `bucketCap` and reported (see [[capBuckets]]). At 100 TB this is the
+    * persisted LSH index a deployment keeps between drops. */
+  private[graft] def minhashIndexBands(
+      sigs: DataFrame, numHashes: Int, bands: Int,
+      bucketCap: Int, op: String): DataFrame =
+    capBuckets(bandTable(sigs, "corpus_id", col("sig"), numHashes, bands),
+      Seq("band", "bhash"), bucketCap, op)
+
+  /** Estimate-then-verify prefilter on rows carrying two MinHash
+    * signatures `sig_l`/`sig_r`: keeps rows whose signature-agreement
+    * fraction (an unbiased Jaccard estimator, sd ≈ √(J(1−J)/numHashes))
+    * is >= `estFloor`, killing the background BEFORE text bodies are
+    * rehydrated for the O(len) exact verify. Culled counts are reported
+    * via observe() (see [[prefilterMetricPrefix]]); `estFloor <= 0`
+    * disables it. */
+  private[graft] def estimatePrefilter(
+      rows: DataFrame, numHashes: Int, estFloor: Double, op: String): DataFrame =
+    if (estFloor <= 0.0) rows
+    else rows
+      .withColumn("est_ok",
+        size(filter(zip_with(col("sig_l"), col("sig_r"), _ === _), x => x))
+          .cast("double") / numHashes >= estFloor)
+      // no silent culls: the metric sits UPSTREAM of the est_ok filter on
+      // a join output whose emptiness isn't statically known, so it
+      // survives AQE in the partial-cull regime (the round-6 CollectMetrics
+      // trap strikes only when the observed branch itself is emptied)
+      .observe(s"$prefilterMetricPrefix${op}_${skewGuardSeq.incrementAndGet()}",
+        coalesce(sum(when(col("est_ok"), 0L).otherwise(1L)), lit(0L))
+          .as("culled_candidates"),
+        count(lit(1)).as("candidates"))
+      .filter(col("est_ok"))
+      .drop("est_ok")
+
+  /** [[estimatePrefilter]] over a candidate-pair table: joins the
+    * (leftId, sig_l) and (rightId, sig_r) tables on — ids and signatures,
+    * never text — and returns the surviving (leftId, rightId) pairs. */
+  private def sigAgreementPrefilter(
+      candidates: DataFrame, leftSigs: DataFrame, rightSigs: DataFrame,
+      leftId: String, rightId: String,
+      numHashes: Int, estFloor: Double, op: String): DataFrame =
+    if (estFloor <= 0.0) candidates
+    else estimatePrefilter(
+      candidates.join(leftSigs, Seq(leftId)).join(rightSigs, Seq(rightId)),
+      numHashes, estFloor, op).select(leftId, rightId)
+
+  /** Exact verify: joins text back by id onto the candidate pairs only
+    * (the shuffle carries candidate ids, not bodies) — `leftTexts` is
+    * (leftId, txt_l), `rightTexts` (rightId, txt_r), and a side whose
+    * text already rides the candidate row passes None — then keeps pairs
+    * whose n-gram Jaccard, rounded to 6 dp, is >= `threshold`.
+    * Output: (leftId, rightId, jaccard). */
+  private[graft] def verifyJaccard(
+      candidates: DataFrame, leftId: String, rightId: String,
+      leftTexts: Option[DataFrame], rightTexts: DataFrame,
+      shingleN: Int, threshold: Double): DataFrame =
+    leftTexts.fold(candidates)(t => candidates.join(t, Seq(leftId)))
+      .join(rightTexts, Seq(rightId))
+      .withColumn("jaccard",
+        round(graft.functions.expressions.GraftFunctions
+          .ngram_jaccard(col("txt_l"), col("txt_r"), shingleN), 6))
+      .filter(col("jaccard") >= threshold)
+      .select(col(leftId), col(rightId), col("jaccard"))
 
   /** Near-dup candidate pairs via banded LSH over MinHash signatures.
     *
-    * bands × rowsPerBand = signature length. Docs sharing ANY band hash
-    * land in one bucket; pairs are generated per bucket via a self-join
-    * on (band, band_hash) — the classic MinHash-LSH layout that avoids
-    * the O(n²) cross join entirely. Returned pairs are verified with the
-    * EXACT Jaccard over shingle sets, keeping only >= `threshold`.
+    * bands × rowsPerBand = signature length; pairs are generated per
+    * bucket via a self-join on (band, bhash). Returned pairs are verified
+    * with the EXACT Jaccard over shingle sets, keeping only >= `threshold`.
     *
     * At 100 TB: the exploded band table is |docs| × bands rows of
-    * (band_hash, id, signature) — linear; hot buckets (boilerplate docs)
-    * are the skew risk, mitigated by capping bucket width upstream
-    * (count per bucket, drop degenerate buckets > cap as "trivially
-    * duplicated cluster" to be handled by exact dedup of the dominating
+    * (id, band, bhash) — linear; hot buckets (boilerplate docs) are the
+    * skew risk, mitigated by capping bucket width upstream (count per
+    * bucket, drop degenerate buckets > cap as "trivially duplicated
+    * cluster" to be handled by exact dedup of the dominating
     * fingerprint). */
   def minhashNearDupPairs(
       df: DataFrame, // (id, text)
@@ -244,7 +298,6 @@ object Dedup {
       topK: Option[Int] = None,
       estimateMargin: Double = Double.PositiveInfinity,
       rehydrateFrom: Option[DataFrame] = None): DataFrame = {
-    val rowsPerBand = numHashes / bands
     val named = df.select(id.as("id"), text.as("txt"))
     // `rehydrateFrom`: optional (id, text) SUPERSET of `df` (same id →
     // same text, ids unique — e.g. the unfiltered base table when `df`
@@ -255,22 +308,6 @@ object Dedup {
     val hydrate = rehydrateFrom
       .map(_.select(id.as("id"), text.as("txt")))
       .getOrElse(named)
-    // The signature comes from the custom MinHashSig expression (one JVM
-    // loop per row — see functions.expressions.HashExpressions); banding
-    // is one let-bound expression, and the shuffle carries only
-    // (band, bhash, id) — never shingle arrays or text bodies.
-    val banded = named.select(
-      col("id"),
-      explode(TextFunctions.bound(
-        graft.functions.expressions.GraftFunctions
-          .minhash_sig(col("txt"), shingleN, numHashes, seed)) { sig =>
-        array((0 until bands).map { b =>
-          struct(
-            lit(b).as("band"),
-            xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bhash"))
-        }: _*)
-      }).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
     // cut: this tiny (id, band, bhash) proxy (bands rows/doc, ~24 B
     // each) is consumed up to four times in one action — the
     // skew-guard sizes aggregate, its anti-join probe, and both sides
@@ -279,8 +316,10 @@ object Dedup {
     // operator's single most expensive stage (measured: the sig pass
     // alone is ~0.5 s of ext_pipeline_e2e's 2.4 s pairs stage at sf0.1,
     // and it ran 3-4x).
-    val bandedShared = Checkpointing.cut(banded)
-    // skew guard: drop degenerate hot buckets, observably (see capBuckets)
+    val bandedShared = Checkpointing.cut(bandTable(named, "id",
+      graft.functions.expressions.GraftFunctions
+        .minhash_sig(col("txt"), shingleN, numHashes, seed),
+      numHashes, bands))
     val pruned = capBuckets(bandedShared, Seq("band", "bhash"), bucketCap, "minhash")
     val pairs = pruned.select(col("band"), col("bhash"), col("id").as("id_a"))
       .join(pruned.select(col("band"), col("bhash"), col("id").as("id_b")),
@@ -294,28 +333,17 @@ object Dedup {
     // recall banding floods candidates with background), but THIS
     // self-join path at calibrated banding is background-light and the
     // same default-on prefilter REGRESSED it 2.1 s → 2.8 s — so the
-    // default stays off and skew-prone corpora opt in. Culls are
-    // observe()-reported either way (see prefilterMetricPrefix).
-    val estFloor = threshold - estimateMargin
-    def sigs(idName: String) = named.select(col("id").as(idName),
-      graft.functions.expressions.GraftFunctions
-        .minhash_sig(col("txt"), shingleN, numHashes, seed).as(s"sig_${idName.last}"))
-    val prefiltered =
-      if (estFloor <= 0.0) pairs
-      else sigAgreementPrefilter(pairs,
-        sigs("id_a").withColumnRenamed("sig_a", "sig_l"),
-        sigs("id_b").withColumnRenamed("sig_b", "sig_r"),
-        "id_a", "id_b", numHashes, estFloor, "minhash")
-    // verify stage: join texts back by id (shuffles candidate ids, not
-    // bodies) and compute the exact Jaccard once per surviving pair.
-    val verified = prefiltered
-      .join(hydrate.select(col("id").as("id_a"), col("txt").as("txt_a")), Seq("id_a"))
-      .join(hydrate.select(col("id").as("id_b"), col("txt").as("txt_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        round(graft.functions.expressions.GraftFunctions
-          .ngram_jaccard(col("txt_a"), col("txt_b"), shingleN), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    // default stays off and skew-prone corpora opt in.
+    def sigs(idName: String, sigName: String) =
+      minhashSigs(named, col("id"), col("txt"), idName, shingleN, numHashes, seed)
+        .withColumnRenamed("sig", sigName)
+    val prefiltered = sigAgreementPrefilter(pairs,
+      sigs("id_a", "sig_l"), sigs("id_b", "sig_r"),
+      "id_a", "id_b", numHashes, threshold - estimateMargin, "minhash")
+    val verified = verifyJaccard(prefiltered, "id_a", "id_b",
+      Some(hydrate.select(col("id").as("id_a"), col("txt").as("txt_l"))),
+      hydrate.select(col("id").as("id_b"), col("txt").as("txt_r")),
+      shingleN, threshold)
     topK match {
       // top-K report mode: most-similar surfaced pairs (distributed top-k)
       case Some(k) => verified.orderBy(col("jaccard").desc, col("id_a"), col("id_b")).limit(k)
@@ -323,30 +351,56 @@ object Dedup {
     }
   }
 
+  /** The batch screening tail of [[incrementalNearDup]] and
+    * [[incrementalNearDupIndexed]]: the batch's (batch_id, sig) table,
+    * computed once behind a cut (~8·numHashes B/doc — ids and
+    * signatures, never text), feeds both the band probe against
+    * `indexBands` (band, bhash, corpus_id) and the estimate prefilter
+    * against `corpusSigs` (corpus_id, sig); survivors go to the exact
+    * verify. The batch band table is small, so Spark/AQE broadcasts it
+    * and non-matching corpus buckets die in the map-side hash probe. */
+  private def screenBatch(
+      batch: DataFrame, batchId: Column, batchText: Column,
+      corpus: DataFrame, corpusId: Column, corpusText: Column,
+      indexBands: DataFrame, corpusSigs: DataFrame,
+      shingleN: Int, numHashes: Int, bands: Int, seed: Long,
+      threshold: Double, estimateMargin: Double, op: String): DataFrame = {
+    val bSigs = Checkpointing.cut(
+      minhashSigs(batch, batchId, batchText, "batch_id", shingleN, numHashes, seed))
+    val candidates = bandTable(bSigs, "batch_id", col("sig"), numHashes, bands)
+      .join(indexBands, Seq("band", "bhash")) // batch side is the small probe
+      .select("batch_id", "corpus_id")
+      .dropDuplicates("batch_id", "corpus_id")
+    val prefiltered = sigAgreementPrefilter(candidates,
+      bSigs.withColumnRenamed("sig", "sig_l"),
+      corpusSigs.withColumnRenamed("sig", "sig_r"),
+      "batch_id", "corpus_id", numHashes, threshold - estimateMargin, op)
+    verifyJaccard(prefiltered, "batch_id", "corpus_id",
+      Some(batch.select(batchId.as("batch_id"), batchText.as("txt_l"))),
+      corpus.select(corpusId.as("corpus_id"), corpusText.as("txt_r")),
+      shingleN, threshold)
+      .orderBy("batch_id", "corpus_id")
+  }
+
   /** Incremental NEAR-dup screening: which `batch` documents are
     * near-duplicates of the existing `corpus` — the fuzzy counterpart of
     * [[incremental]], run on every daily drop so re-crawls with cosmetic
     * edits don't re-enter the corpus.
     *
-    * Same banded-MinHash layout as [[minhashNearDupPairs]], but the
-    * candidate join is batch-bands ⨝ corpus-bands (never batch×batch or
-    * corpus×corpus): the corpus side reduces to its (band, bhash, id)
-    * table — at 100 TB that's the persisted LSH index a real deployment
-    * keeps between drops, and only buckets the BATCH actually touches do
-    * any work (the batch band table is small, so Spark/AQE broadcasts
-    * it; non-matching corpus buckets die in the map-side hash probe).
+    * The candidate join is batch-bands ⨝ corpus-bands (never batch×batch
+    * or corpus×corpus): the corpus side reduces to its (band, bhash, id)
+    * index, built here in memory; [[buildMinhashIndex]] persists the
+    * same index so [[incrementalNearDupIndexed]] can skip this build.
     *
     * Estimate-then-verify: candidates are prefiltered on the MinHash
-    * signature-agreement fraction (an unbiased Jaccard estimator, sd
-    * ≈ √(J(1−J)/numHashes) ≈ 0.06 at 64 hashes) at `threshold −
-    * estimateMargin` BEFORE text bodies are rehydrated — recall-banded
-    * candidate sets are background-heavy, and the cheap estimate kills
-    * the background so the O(len) exact verify touches only
-    * near-dup-ish pairs (measured at sf0.1: 3.9 s → 2.0 s min-of-3, identical
-    * output). The final gate is still the EXACT n-gram Jaccard. A
-    * margin of 0.15 is 2.5σ below threshold at 64 hashes; set
-    * estimateMargin >= threshold to disable the prefilter. Culled
-    * candidates are counted, not silent: see [[prefilterMetricPrefix]].
+    * signature-agreement fraction (sd ≈ 0.06 at 64 hashes) at
+    * `threshold − estimateMargin` BEFORE text bodies are rehydrated —
+    * recall-banded candidate sets are background-heavy, and the cheap
+    * estimate kills the background so the O(len) exact verify touches
+    * only near-dup-ish pairs (measured at sf0.1: 3.9 s → 2.0 s min-of-3,
+    * identical output). The final gate is still the EXACT n-gram
+    * Jaccard. A margin of 0.15 is 2.5σ below threshold at 64 hashes; set
+    * estimateMargin >= threshold to disable the prefilter.
     *
     * Output: (batch_id, corpus_id, jaccard) — one row per batch doc per
     * matched corpus doc at >= threshold; callers drop matched batch ids
@@ -363,59 +417,15 @@ object Dedup {
       seed: Long = 42L,
       bucketCap: Int = 1000,
       estimateMargin: Double = 0.15): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // r18: ONE signature pass per side. The old shape re-ran the scan +
-    // shingle + k-hash MinHash pass — the operator's most expensive
-    // stage — up to 3× per side: the corpus fed the skew-guard sizes
-    // aggregate AND its anti-join probe (via `banded`) AND the
-    // prefilter's `sigs`; the batch fed the candidate probe AND the
-    // prefilter. Each side now computes (id, sig) once behind a cut
-    // (~8·numHashes B/doc — ids and signatures, never text), and the
-    // band hashes derive from the cut sig exactly as buildMinhashIndex
-    // does — identical band/bhash values, identical joins, identical
-    // output.
-    def sigsOf(df: DataFrame, id: Column, text: Column, idName: String) =
-      Checkpointing.cut(df.select(id.as(idName),
-        graft.functions.expressions.GraftFunctions
-          .minhash_sig(text, shingleN, numHashes, seed).as("sig")))
-    def bandedOf(sigDf: DataFrame, idName: String) =
-      sigDf.select(
-        col(idName),
-        explode(TextFunctions.bound(col("sig")) { sig =>
-          array((0 until bands).map { b =>
-            struct(
-              lit(b).as("band"),
-              xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bhash"))
-          }: _*)
-        }).as("bb"))
-        .select(col(idName), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-    val bSigs = sigsOf(batch, batchId, batchText, "batch_id")
-    val cSigs = sigsOf(corpus, corpusId, corpusText, "corpus_id")
-    val cb = capBuckets(bandedOf(cSigs, "corpus_id"),
-      Seq("band", "bhash"), bucketCap, "incr_minhash")
-    val candidates = bandedOf(bSigs, "batch_id")
-      .join(cb, Seq("band", "bhash")) // batch side is the small probe
-      .select("batch_id", "corpus_id")
-      .dropDuplicates("batch_id", "corpus_id")
-    // estimate-then-verify (scaladoc): signature-agreement prefilter —
-    // (id, 64-long signature) tables, never text bodies — kills the
-    // background before the O(len) exact verify
-    val estFloor = threshold - estimateMargin
-    val prefiltered =
-      if (estFloor <= 0.0) candidates
-      else sigAgreementPrefilter(candidates,
-        bSigs.withColumnRenamed("sig", "sig_l"),
-        cSigs.withColumnRenamed("sig", "sig_r"),
-        "batch_id", "corpus_id", numHashes, estFloor, "incr_neardup")
-    prefiltered
-      .join(batch.select(batchId.as("batch_id"), batchText.as("txt_b")), Seq("batch_id"))
-      .join(corpus.select(corpusId.as("corpus_id"), corpusText.as("txt_c")), Seq("corpus_id"))
-      .withColumn("jaccard",
-        round(graft.functions.expressions.GraftFunctions
-          .ngram_jaccard(col("txt_b"), col("txt_c"), shingleN), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-      .orderBy("batch_id", "corpus_id")
+    // r18: ONE signature pass per side. The corpus (id, sig) table feeds
+    // the skew-guard sizes aggregate, its anti-join probe and the
+    // prefilter; without the cut each re-runs the scan + shingle + k-hash
+    // MinHash pass, the operator's most expensive stage.
+    val cSigs = Checkpointing.cut(
+      minhashSigs(corpus, corpusId, corpusText, "corpus_id", shingleN, numHashes, seed))
+    screenBatch(batch, batchId, batchText, corpus, corpusId, corpusText,
+      minhashIndexBands(cSigs, numHashes, bands, bucketCap, "incr_minhash"), cSigs,
+      shingleN, numHashes, bands, seed, threshold, estimateMargin, "incr_neardup")
   }
 
   /** Build the PERSISTED MinHash-LSH corpus index that incremental
@@ -445,22 +455,11 @@ object Dedup {
       bucketCap: Int = 1000): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val rowsPerBand = numHashes / bands
-    val sigs = corpus.select(corpusId.as("corpus_id"),
-      graft.functions.expressions.GraftFunctions
-        .minhash_sig(corpusText, shingleN, numHashes, seed).as("sig"))
-    sigs.write.mode("overwrite").parquet(s"$indexDir/sigs")
+    minhashSigs(corpus, corpusId, corpusText, "corpus_id", shingleN, numHashes, seed)
+      .write.mode("overwrite").parquet(s"$indexDir/sigs")
     // bands derive from the WRITTEN sigs — one signature pass total
-    val banded = spark.read.parquet(s"$indexDir/sigs").select(
-      col("corpus_id"),
-      explode(TextFunctions.bound(col("sig")) { sig =>
-        array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bhash"))
-        }: _*)
-      }).as("bb"))
-      .select(col("corpus_id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-    capBuckets(banded, Seq("band", "bhash"), bucketCap, "index_build")
+    minhashIndexBands(spark.read.parquet(s"$indexDir/sigs"),
+      numHashes, bands, bucketCap, "index_build")
       .write.mode("overwrite").parquet(s"$indexDir/bands")
     Seq((shingleN, numHashes, bands, seed, bucketCap))
       .toDF("shingle_n", "num_hashes", "bands", "seed", "bucket_cap")
@@ -488,72 +487,14 @@ object Dedup {
       estimateMargin: Double = 0.15): DataFrame = {
     val spark = batch.sparkSession
     val meta = spark.read.parquet(s"$indexDir/meta").collect().head
-    val shingleN = meta.getAs[Int]("shingle_n")
-    val numHashes = meta.getAs[Int]("num_hashes")
-    val bands = meta.getAs[Int]("bands")
-    val seed = meta.getAs[Long]("seed")
-    val rowsPerBand = numHashes / bands
-    val indexBands = spark.read.parquet(s"$indexDir/bands")
-    val corpusSigs = spark.read.parquet(s"$indexDir/sigs")
-      .withColumnRenamed("sig", "sig_r")
-    val batchBands = batch
-      .select(batchId.as("batch_id"), batchText.as("txt"))
-      .select(col("batch_id"),
-        explode(TextFunctions.bound(
-          graft.functions.expressions.GraftFunctions
-            .minhash_sig(col("txt"), shingleN, numHashes, seed)) { sig =>
-          array((0 until bands).map { b =>
-            struct(lit(b).as("band"),
-              xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bhash"))
-          }: _*)
-        }).as("bb"))
-      .select(col("batch_id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-    val candidates = batchBands
-      .join(indexBands, Seq("band", "bhash"))
-      .select("batch_id", "corpus_id")
-      .dropDuplicates("batch_id", "corpus_id")
-    val estFloor = threshold - estimateMargin
-    val prefiltered =
-      if (estFloor <= 0.0) candidates
-      else sigAgreementPrefilter(candidates,
-        batch.select(batchId.as("batch_id"),
-          graft.functions.expressions.GraftFunctions
-            .minhash_sig(batchText, shingleN, numHashes, seed).as("sig_l")),
-        corpusSigs, "batch_id", "corpus_id", numHashes, estFloor, "incr_indexed")
-    prefiltered
-      .join(batch.select(batchId.as("batch_id"), batchText.as("txt_b")), Seq("batch_id"))
-      .join(corpus.select(corpusId.as("corpus_id"), corpusText.as("txt_c")), Seq("corpus_id"))
-      .withColumn("jaccard",
-        round(graft.functions.expressions.GraftFunctions
-          .ngram_jaccard(col("txt_b"), col("txt_c"), shingleN), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-      .orderBy("batch_id", "corpus_id")
+    screenBatch(batch, batchId, batchText, corpus, corpusId, corpusText,
+      spark.read.parquet(s"$indexDir/bands"), spark.read.parquet(s"$indexDir/sigs"),
+      meta.getAs[Int]("shingle_n"), meta.getAs[Int]("num_hashes"),
+      meta.getAs[Int]("bands"), meta.getAs[Long]("seed"),
+      threshold, estimateMargin, "incr_indexed")
   }
 
   // ────────────────────────────── SimHash ────────────────────────────────
-
-  /** 64-bit SimHash of a token array: per-bit majority vote of token
-    * hashes, packed into one long. Token hashes are let-bound so the
-    * tokenization + hashing runs once per row, and the 64 bit-votes are
-    * pure arithmetic over the bound hash array.
-    *
-    * NOTE: this composed form hashes tokens with xxhash64, while the
-    * production [[simhashNearDupPairs]] path uses the SimHash64
-    * expression whose token hash is FNV-1a (chosen so a SQL oracle can
-    * replay signatures cross-engine) — same construction, different
-    * (non-interchangeable) signature values. */
-  def simhash(tokenArr: Column): Column =
-    TextFunctions.bound(
-      TextFunctions.bound(tokenArr)(ts => transform(ts, t => xxhash64(t)))) { hs =>
-      (0 until 64).map { b =>
-        when(
-          aggregate(hs, lit(0L), (acc, h) =>
-            acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1L)
-              .otherwise(-1L)) > 0,
-          lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ bitwiseOR _) // disjoint bits: OR == +, overflow-free
-    }
 
   /** Hamming distance between two simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -1249,7 +1190,7 @@ object Dedup {
           .withColumn("est_ok",
             (lit(estimatePlanes) - bit_count(col("sig_l").bitwiseXOR(col("sig_r"))))
               .cast("double") / estimatePlanes >= floor)
-          // same no-silent-culls discipline as sigAgreementPrefilter:
+          // same no-silent-culls discipline as estimatePrefilter:
           // metric upstream of the cull filter, on the raw join output
           // (counts are per-collision here, pre-dedup)
           .observe(s"$prefilterMetricPrefix" +

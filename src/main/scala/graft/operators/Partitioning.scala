@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Partitioning strategies for 100 TB joins: bucketing (pre-shuffled
@@ -246,7 +246,4 @@ object Partitioning {
       .sortWithinPartitions("__z")
       .drop("__z")
   }
-
-  private[graft] def sessionWarehouse(spark: SparkSession): String =
-    spark.conf.get("spark.sql.warehouse.dir")
 }

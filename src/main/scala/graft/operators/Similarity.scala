@@ -345,28 +345,9 @@ object Similarity {
       k: Int,
       nCells: Int = 16,
       nprobe: Int = 4): DataFrame = {
-    val centroids = corpus
-      .select(col("vec_id").as("cell_id"), col("embedding").as("centroid"))
-      .orderBy(portableRank(col("cell_id")), col("cell_id"))
-      .limit(nCells) // distributed top-k: driver receives exactly nCells rows
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    if (centroids.isEmpty) return bruteForceTopK(probes, corpus, k) // empty corpus → empty result
-    val cellArr = array(centroids.map { case (cid, vec) =>
-      struct(lit(cid).as("cell_id"),
-        array(vec.toIndexedSeq.map(lit(_)): _*).as("centroid"))
-    }.toIndexedSeq: _*)
-    // rank cells per vector by ROUNDED cosine-to-centroid (cell_id
-    // tie-break); corpus keeps 1, probes nprobe
-    def cellsFor(vec: Column, n: Int): Column =
-      slice(
-        transform(
-          array_sort(
-            transform(cellArr, c =>
-              struct((lit(-1.0) * round(cosine(vec, c("centroid")), 6)).as("negsim"),
-                c("cell_id").as("cell_id")))),
-          s => s("cell_id")),
-        1, n)
+    val cells = ivfCells(corpus, nCells)
+    if (cells.isEmpty) return bruteForceTopK(probes, corpus, k) // empty corpus → empty result
+    val cellsFor = cells.get // corpus keeps 1 cell, probes nprobe
     val assigned = corpus.withColumn("cell", element_at(cellsFor(col("embedding"), 1), 1))
     val probed = probes.withColumn("cell", explode(cellsFor(col("query_vec"), nprobe)))
     val scored = assigned.join(broadcast(probed), Seq("cell"))
@@ -376,6 +357,33 @@ object Similarity {
     topKPerQuery(scored, k, Seq(col("sim").desc, col("vec_id")))
       .select(col("query_id"), col("vec_id"), col("sim"), col("rank").cast("long").as("rank"))
       .orderBy("query_id", "rank")
+  }
+
+  /** The IVF cell ranking shared by [[ivfTopK]] and [[ivfNprobeSweep]]:
+    * the `nCells` centroid sample (see ivfTopK), and a function giving
+    * a vector's `n` best cells, ranked by ROUNDED cosine-to-centroid
+    * with a cell_id tie-break. None when the corpus is empty. */
+  private def ivfCells(corpus: DataFrame, nCells: Int): Option[(Column, Int) => Column] = {
+    val centroids = corpus
+      .select(col("vec_id").as("cell_id"), col("embedding").as("centroid"))
+      .orderBy(portableRank(col("cell_id")), col("cell_id"))
+      .limit(nCells) // distributed top-k: driver receives exactly nCells rows
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    if (centroids.isEmpty) return None
+    val cellArr = array(centroids.map { case (cid, vec) =>
+      struct(lit(cid).as("cell_id"),
+        array(vec.toIndexedSeq.map(lit(_)): _*).as("centroid"))
+    }.toIndexedSeq: _*)
+    Some((vec: Column, n: Int) =>
+      slice(
+        transform(
+          array_sort(
+            transform(cellArr, c =>
+              struct((lit(-1.0) * round(cosine(vec, c("centroid")), 6)).as("negsim"),
+                c("cell_id").as("cell_id")))),
+          s => s("cell_id")),
+        1, n))
   }
   /** IVF OPERATING-CURVE sweep: recall@k at several `nprobe` settings
     * from ONE index build and ONE probe fan-out — the tuning readout
@@ -411,29 +419,12 @@ object Similarity {
     require(sweep.distinct.size == sweep.size,
       s"sweep values must be distinct: $sweep")
     val maxProbe = sweep.max
-    val centroids = corpus
-      .select(col("vec_id").as("cell_id"), col("embedding").as("centroid"))
-      .orderBy(portableRank(col("cell_id")), col("cell_id"))
-      .limit(nCells)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    if (centroids.isEmpty)
+    val cells = ivfCells(corpus, nCells)
+    if (cells.isEmpty)
       return probes.select(lit(0L).as("nprobe"), col("query_id"),
         lit(0L).as("n_exact"), lit(0L).as("n_hits"),
         lit(0.0).as("recall")).limit(0)
-    val cellArr = array(centroids.map { case (cid, vec) =>
-      struct(lit(cid).as("cell_id"),
-        array(vec.toIndexedSeq.map(lit(_)): _*).as("centroid"))
-    }.toIndexedSeq: _*)
-    def cellsFor(vec: Column, n: Int): Column =
-      slice(
-        transform(
-          array_sort(
-            transform(cellArr, c =>
-              struct((lit(-1.0) * round(cosine(vec, c("centroid")), 6)).as("negsim"),
-                c("cell_id").as("cell_id")))),
-          s => s("cell_id")),
-        1, n)
+    val cellsFor = cells.get
     val assigned = corpus
       .withColumn("cell", element_at(cellsFor(col("embedding"), 1), 1))
     val probed = probes

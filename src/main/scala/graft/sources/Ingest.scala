@@ -87,25 +87,31 @@ object Ingest {
     * reproducible — no round-robin, no rand()). */
   def writePartitioned(
       df: DataFrame, path: String, partitionCols: Seq[String],
-      filesPerPartition: Int = 1): Unit = {
-    require(partitionCols.nonEmpty, "writePartitioned needs partition columns")
+      filesPerPartition: Int = 1): Unit =
+    clusterByPartition(df, partitionCols, filesPerPartition, "writePartitioned")
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(partitionCols: _*).parquet(path)
+
+  /** The partitioned writers' clustering: one task per partition value,
+    * plus the content-hash salt when `filesPerPartition > 1`. */
+  private def clusterByPartition(
+      df: DataFrame, partitionCols: Seq[String], filesPerPartition: Int,
+      op: String): DataFrame = {
+    require(partitionCols.nonEmpty, s"$op needs partition columns")
     require(filesPerPartition >= 1,
       s"filesPerPartition must be >= 1, got $filesPerPartition")
     val parts = partitionCols.map(col)
-    val clustered =
-      if (filesPerPartition == 1) df.repartition(parts: _*)
-      else {
-        val payload =
-          df.columns.filterNot(partitionCols.contains).toIndexedSeq.map(col)
-        // explicit partition count: an unspecified-count repartition is
-        // fair game for AQE's coalescer, which at low volume folds the
-        // salt groups back into one task and silently undoes the split
-        val n = df.sparkSession.sessionState.conf.numShufflePartitions
-        df.repartition(n, parts :+
-          pmod(xxhash64(payload: _*), lit(filesPerPartition.toLong)): _*)
-      }
-    clustered.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(path)
+    if (filesPerPartition == 1) df.repartition(parts: _*)
+    else {
+      val payload =
+        df.columns.filterNot(partitionCols.contains).toIndexedSeq.map(col)
+      // explicit partition count: an unspecified-count repartition is
+      // fair game for AQE's coalescer, which at low volume folds the
+      // salt groups back into one task and silently undoes the split
+      val n = df.sparkSession.sessionState.conf.numShufflePartitions
+      df.repartition(n, parts :+
+        pmod(xxhash64(payload: _*), lit(filesPerPartition.toLong)): _*)
+    }
   }
 
   /** DYNAMIC partition overwrite (VERDICT r13 ask #4) into a
@@ -122,25 +128,11 @@ object Ingest {
     * `filesPerPartition > 1`). */
   def overwritePartitionsDynamic(
       df: DataFrame, path: String, partitionCols: Seq[String],
-      filesPerPartition: Int = 1): Unit = {
-    require(partitionCols.nonEmpty,
-      "overwritePartitionsDynamic needs partition columns")
-    require(filesPerPartition >= 1,
-      s"filesPerPartition must be >= 1, got $filesPerPartition")
-    val parts = partitionCols.map(col)
-    val clustered =
-      if (filesPerPartition == 1) df.repartition(parts: _*)
-      else {
-        val payload =
-          df.columns.filterNot(partitionCols.contains).toIndexedSeq.map(col)
-        val n = df.sparkSession.sessionState.conf.numShufflePartitions
-        df.repartition(n, parts :+
-          pmod(xxhash64(payload: _*), lit(filesPerPartition.toLong)): _*)
-      }
-    clustered.write.mode(SaveMode.Overwrite)
+      filesPerPartition: Int = 1): Unit =
+    clusterByPartition(df, partitionCols, filesPerPartition, "overwritePartitionsDynamic")
+      .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*).parquet(path)
-  }
 
   /** [EXT] A5, BUCKETED tier (VERDICT r12 ask #1) — hash-bucketed,
     * bucket-sorted managed table: the storage-side half of a

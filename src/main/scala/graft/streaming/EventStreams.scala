@@ -623,20 +623,20 @@ object EventStreams {
 
   /** Streaming near-dup screening — the streaming twin of
     * [[graft.operators.Dedup.incrementalNearDup]]: documents arriving on
-    * a stream are screened against a STATIC corpus via the same banded
-    * MinHash layout, emitting (batch_id, corpus_id, jaccard) for every
-    * arrival within `threshold` of a corpus document, micro-batch by
-    * micro-batch.
+    * a stream are screened against a STATIC corpus, emitting
+    * (batch_id, corpus_id, jaccard) for every arrival within `threshold`
+    * of a corpus document, micro-batch by micro-batch. The signature,
+    * band layout, corpus index, estimate prefilter and exact verify are
+    * Dedup's; only the stream-specific parts live here.
     *
     * Design: STATELESS stream-static joins, not stateful stream state —
     * the corpus is fixed between drops (the persisted LSH index a real
     * deployment maintains), so the state store has nothing to remember:
     * each arrival explodes map-side into its band hashes, probes the
-    * broadcast corpus index, prefilters on signature agreement (same
-    * estimate-then-verify as the batch twin), and only then rehydrates
-    * the corpus text for the exact n-gram Jaccard gate. An empty state
-    * store also means no watermark is required and a replayed micro-batch
-    * is trivially idempotent.
+    * broadcast corpus index, is prefiltered on signature agreement, and
+    * only then rehydrates the corpus text for the exact n-gram Jaccard
+    * gate. An empty state store also means no watermark is required and
+    * a replayed micro-batch is trivially idempotent.
     *
     * The batch twin's dropDuplicates (a pair can collide in several
     * bands) is stateful on a stream, so duplicates are instead cut
@@ -652,10 +652,9 @@ object EventStreams {
     * verify stage sees only prefilter survivors. A corpus index too big
     * to broadcast is the regime where per-drop BATCH screening is the
     * right tool — this twin covers the streaming-arrival side of that
-    * pipeline. Hot corpus buckets are capped at `bucketCap` at index
-    * build (degenerate boilerplate clusters, exact-dedup territory —
-    * same policy as the batch twin; audit the drop at index-build time,
-    * where it is a static query). */
+    * pipeline. Hot corpus buckets are capped at `bucketCap` (degenerate
+    * boilerplate clusters, exact-dedup territory); the drop and the
+    * prefilter's culls are reported in the stream's observed metrics. */
   def nearDupScreenStream(
       arrivals: DataFrame, // streaming (id, text)
       corpus: DataFrame, // static (id, text)
@@ -670,66 +669,39 @@ object EventStreams {
       seed: Long = 42L,
       bucketCap: Int = 1000,
       estimateMargin: Double = 0.15): DataFrame = {
-    import graft.functions.TextFunctions
-    val F = graft.functions.expressions.GraftFunctions
-    val rowsPerBand = numHashes / bands
-    def bandHashAt(sig: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      xxhash64(slice(sig, b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)))
-
-    // static corpus index: (band, bhash, corpus_id) + (corpus_id, sig_c),
-    // the two tables a deployment persists between drops
-    val corpusNamed = corpus.select(corpusId.as("corpus_id"), corpusText.as("txt_c"))
-    val corpusSigs = corpusNamed.select(col("corpus_id"),
-      F.minhash_sig(col("txt_c"), shingleN, numHashes, seed).as("sig_c"))
-    val corpusBands = corpusSigs.select(
-      col("corpus_id"),
-      explode(TextFunctions.bound(col("sig_c")) { sig =>
-        array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bhash"))
-        }: _*)
-      }).as("bb"))
-      .select(col("corpus_id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-    val hot = corpusBands.groupBy("band", "bhash")
-      .agg(count(lit(1)).as("bsz")).filter(col("bsz") > bucketCap)
-      .select("band", "bhash")
-    val index = corpusBands.join(broadcast(hot), Seq("band", "bhash"), "left_anti")
+    import graft.operators.Dedup
+    // static corpus index: (band, bhash, corpus_id) + (corpus_id, sig)
+    val corpusSigs = Dedup.minhashSigs(
+      corpus, corpusId, corpusText, "corpus_id", shingleN, numHashes, seed)
+    val index = Dedup.minhashIndexBands(
+      corpusSigs, numHashes, bands, bucketCap, "neardup_stream")
 
     // stream side: signature computed ONCE per row (carried inside the
-    // exploded struct, same trick as the batch path), text rides the row
+    // exploded struct), text rides the row
     val arrBands = arrivals
-      .select(arrivalId.as("batch_id"), arrivalText.as("txt_b"))
-      .select(col("batch_id"), col("txt_b"),
-        explode(TextFunctions.bound(
-          F.minhash_sig(col("txt_b"), shingleN, numHashes, seed)) { sig =>
-          array((0 until bands).map { b =>
-            struct(lit(b).as("band"),
-              xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bhash"),
-              sig.as("sig_b"))
-          }: _*)
-        }).as("bb"))
-      .select(col("batch_id"), col("txt_b"), col("bb.sig_b").as("sig_b"),
+      .select(arrivalId.as("batch_id"), arrivalText.as("txt_l"))
+      .select(col("batch_id"), col("txt_l"),
+        explode(Dedup.bandStructs(
+          graft.functions.expressions.GraftFunctions
+            .minhash_sig(col("txt_l"), shingleN, numHashes, seed),
+          numHashes, bands, sig => Seq(sig.as("sig_l")))).as("bb"))
+      .select(col("batch_id"), col("txt_l"), col("bb.sig_l").as("sig_l"),
         col("bb.band").as("band"), col("bb.bhash").as("bhash"))
 
+    def bandAt(sig: String, b: Int) = Dedup.bandHash(col(sig), b, numHashes, bands)
     val candidates = arrBands
       .join(broadcast(index), Seq("band", "bhash")) // map-side probe
-      .join(broadcast(corpusSigs), Seq("corpus_id"))
+      .join(broadcast(corpusSigs.withColumnRenamed("sig", "sig_r")), Seq("corpus_id"))
       // stateless pair-dedup (scaladoc): first agreeing band wins
-      .filter(col("band") === array_min(filter(
-        sequence(lit(0), lit(bands - 1)),
-        b => bandHashAt(col("sig_b"), b) === bandHashAt(col("sig_c"), b))))
-    val estFloor = threshold - estimateMargin
-    val prefiltered =
-      if (estFloor <= 0.0) candidates
-      else candidates.filter(
-        size(filter(zip_with(col("sig_b"), col("sig_c"), _ === _), x => x))
-          .cast("double") / numHashes >= estFloor)
-    prefiltered
-      .join(corpusNamed, Seq("corpus_id")) // texts only for survivors
-      .withColumn("jaccard",
-        round(F.ngram_jaccard(col("txt_b"), col("txt_c"), shingleN), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+      .filter(col("band") === array_min(array((0 until bands).map { b =>
+        when(bandAt("sig_l", b) === bandAt("sig_r", b), lit(b))
+      }: _*)))
+    Dedup.verifyJaccard(
+      Dedup.estimatePrefilter(candidates, numHashes,
+        threshold - estimateMargin, "neardup_stream"),
+      "batch_id", "corpus_id", None,
+      corpus.select(corpusId.as("corpus_id"), corpusText.as("txt_r")), // texts only for survivors
+      shingleN, threshold)
   }
 
   /** Custom state: running per-user totals via flatMapGroupsWithState —

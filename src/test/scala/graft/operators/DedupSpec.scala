@@ -456,6 +456,49 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(meta.getAs[Int]("num_hashes") == 64 && meta.getAs[Int]("bands") == 16)
   }
 
+  test("direct and indexed near-dup screens are empty for an empty batch or corpus") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    def direct(batch: org.apache.spark.sql.DataFrame, corpus: org.apache.spark.sql.DataFrame) =
+      Dedup.incrementalNearDup(
+        batch, corpus, col("doc_id"), col("text"), col("doc_id"), col("text")).collect()
+    def indexed(batch: org.apache.spark.sql.DataFrame, corpus: org.apache.spark.sql.DataFrame) = {
+      val idx = java.nio.file.Files.createTempDirectory("graft-lsh-empty").toString
+      Dedup.buildMinhashIndex(corpus, col("doc_id"), col("text"), idx)
+      Dedup.incrementalNearDupIndexed(
+        batch, corpus, col("doc_id"), col("text"), col("doc_id"), col("text"), idx).collect()
+    }
+    assert(direct(empty, docs).isEmpty)
+    assert(direct(docs, empty).isEmpty)
+    assert(indexed(empty, docs).isEmpty)
+    assert(indexed(docs, empty).isEmpty)
+  }
+
+  test("the MinHash band layout and hot-bucket cap are written only in Dedup") {
+    import scala.jdk.CollectionConverters._
+    val bandExpr = """xxhash64\s*\(\s*slice""".r
+    val inlineCap = """"bsz"|>\s*bucketCap\b""".r
+    val dedup = java.nio.file.Paths.get("src/main/scala/graft/operators/Dedup.scala")
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root))
+    val files = java.nio.file.Files.walk(root)
+    val sources =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    def code(p: java.nio.file.Path) =
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.filterNot { case (l, _) =>
+        l.trim.startsWith("*") || l.trim.startsWith("//") || l.trim.startsWith("/**")
+      }
+    val offenders = sources.filter(_ != dedup).flatMap { p =>
+      code(p).collect {
+        case (l, i) if bandExpr.findFirstIn(l).isDefined || inlineCap.findFirstIn(l).isDefined =>
+          s"$p:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // ... and Dedup itself writes the band expression exactly once
+    assert(code(dedup).count { case (l, _) => bandExpr.findFirstIn(l).isDefined } == 1)
+  }
+
   test("incremental: rejects corpus re-crawls, keeps min id within the batch") {
     val corpus = Seq((1L, "alpha text"), (2L, "beta text")).toDF("doc_id", "text")
     val batch = Seq(

@@ -624,6 +624,66 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
+  test("nearDupScreenStream reports its hot-bucket drop in the stream's observed metrics") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    implicit val sc = spark.sqlContext
+    val base = "the quick brown fox jumps over the lazy dog while the cat sleeps " +
+      "in the warm afternoon sun near the old wooden fence"
+    val boiler = "standard boilerplate disclaimer all rights reserved " +
+      "please read these terms carefully before proceeding any further"
+    // 200 identical corpus docs share every band bucket: each is > bucketCap
+    val corpus = ((1L, base) +: (100L until 300L).map(i => (i, boiler)))
+      .toDF("doc_id", "text")
+    val in = MemoryStream[(Long, String)]
+    val q = EventStreams.nearDupScreenStream(
+      in.toDF().toDF("doc_id", "text"), corpus,
+      col("doc_id"), col("text"), col("doc_id"), col("text"), bucketCap = 50)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("neardup_cap_out").start()
+    try {
+      in.addData((10L, base.replace("lazy", "sleepy")), (11L, boiler))
+      q.processAllAvailable()
+      val guards = q.recentProgress.toSeq.flatMap(_.observedMetrics.asScala).collect {
+        case (name, row) if name.startsWith(graft.operators.Dedup.skewGuardMetricPrefix) => row
+      }
+      assert(guards.nonEmpty, "the stream's bucket cap must emit an observed metric")
+      assert(guards.forall(_.getAs[Long]("dropped_rows") >= 200L),
+        s"the 200-doc boilerplate cluster must be reported as dropped: $guards")
+      // the capped cluster screens nothing; the near-dup of doc 1 still does
+      val got = spark.table("neardup_cap_out").select("batch_id", "corpus_id")
+        .as[(Long, Long)].collect().toSet
+      assert(got == Set((10L, 1L)), s"got $got")
+    } finally q.stop()
+  }
+
+  test("nearDupScreenStream is empty for an empty micro-batch or an empty corpus") {
+    import org.apache.spark.sql.functions.col
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog and then naps " * 4),
+      (2L, "an entirely different corpus document about spark plans etc " * 4))
+      .toDF("doc_id", "text")
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    def screen(arrivals: org.apache.spark.sql.DataFrame,
+        corpus: org.apache.spark.sql.DataFrame, name: String) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-neardup-empty")
+      arrivals.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      val q = EventStreams.nearDupScreenStream(
+        spark.readStream.schema(arrivals.schema).parquet(dir.toString), corpus,
+        col("doc_id"), col("text"), col("doc_id"), col("text"))
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      try {
+        q.processAllAvailable()
+        assert(q.exception.isEmpty)
+        spark.table(name).collect()
+      } finally q.stop()
+    }
+    assert(screen(empty, docs, "neardup_empty_arrivals").isEmpty)
+    assert(screen(docs, empty, "neardup_empty_corpus").isEmpty)
+    // control: the same arrivals against a populated corpus do match
+    assert(screen(docs, docs, "neardup_self").nonEmpty)
+  }
+
   test("flatMapGroupsWithState keeps running totals across micro-batches") {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[Event]
