@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** The reference's read-API response envelope
   * (ref: backend/utils.py:166 success, :169 error):
@@ -25,9 +26,14 @@ object ApiEnvelope {
   } + "\""
 
   /** Success envelope: rows serialize via Spark's own JSON encoder (one
-    * object per row, schema-faithful types), bounded by `limit`. */
+    * object per row, schema-faithful types), bounded by `limit`. The
+    * encoding runs inside the plan (`to_json` of the whole row), so maps
+    * keep their stored key order and the limit sits at the root, where
+    * Spark plans it as `CollectLimit`/`TakeOrderedAndProject` instead of
+    * gathering every partition first. */
   def read(df: DataFrame, tableName: String, limit: Int = 10000): String = {
-    val rows = df.limit(limit).toJSON.collect() // A4 edge: the one collect
+    val rows = df.select(to_json(struct(col("*")))).limit(limit)
+      .collect().map(_.getString(0)) // A4 edge: the one collect
     s"""{"status":"success","data":[${rows.mkString(",")}],""" +
       s""""message":${q(s"成功从表 '$tableName' 读取 ${rows.length} 行数据")}}"""
   }

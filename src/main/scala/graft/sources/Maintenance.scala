@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables
+
 /** [EXT] Table maintenance: small-file compaction. A 100 TB lakehouse
   * accretes small files from every incremental append, streaming
   * micro-batch, and over-partitioned write; scan throughput then dies on
@@ -43,10 +45,7 @@ object Maintenance {
       "compact: sortBy and zorderBy are alternative clusterings — pick one")
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(path).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    val dataFiles = Tables.dataEntries(fs, path).filter(_.isFile)
     val totalBytes = dataFiles.map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
 
@@ -54,7 +53,7 @@ object Maintenance {
     val retired = new Path(path.getParent, s".${path.getName}__compact_retired")
     fs.delete(staging, true); fs.delete(retired, true)
 
-    val df = spark.read.parquet(dir)
+    val df = Tables.parquet(spark, dir)
     val rows = df.count() // invariant receipt, and warms the file index
     val out = (sortBy, zorderBy) match {
       case (Some(k), _) =>
@@ -79,14 +78,10 @@ object Maintenance {
     }
     fs.delete(retired, true)
 
-    val after = spark.read.parquet(dir)
-    val rowsAfter = after.count()
+    val rowsAfter = Tables.parquet(spark, dir).count()
     require(rowsAfter == rows,
       s"compact: row count changed ($rows -> $rowsAfter) — retired data kept? bug")
-    val filesAfter = fs.listStatus(path).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    val filesAfter = Tables.dataEntries(fs, path).count(_.isFile)
     CompactionReport(dataFiles.length.toLong, filesAfter.toLong, totalBytes, rows)
   }
 
@@ -109,7 +104,7 @@ object Maintenance {
     val aggs = cols.flatMap { c =>
       Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"))
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
       .select(col("_metadata.file_path").as("file") +: cols.map(col): _*)
       .groupBy("file")
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
@@ -178,19 +173,12 @@ object Maintenance {
     val rootPath = fs.makeQualified(new Path(root)) // scheme-stable relativize
     // leaf partitions: directories whose children include data FILES
     def leaves(p: Path): Seq[Path] = {
-      val entries = fs.listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      val subdirs = entries.filter(_.isDirectory)
+      val subdirs = Tables.dataEntries(fs, p).filter(_.isDirectory)
       if (subdirs.isEmpty) Seq(p)
       else subdirs.toIndexedSeq.flatMap(d => leaves(d.getPath))
     }
     leaves(rootPath).flatMap { part =>
-      val files = fs.listStatus(part).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      val files = Tables.dataEntries(fs, part).filter(_.isFile)
       val bytes = files.map(_.getLen).sum
       val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
       if (files.length <= want) None // already compact: listing only, no job

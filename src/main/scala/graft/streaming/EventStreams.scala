@@ -19,10 +19,11 @@ object EventStreams {
   /** File-source readStream over the events parquet layout. The on-disk
     * `ts` encoding has drifted across testdata refreshes (INT64 nanos
     * under nanosAsLong, then plain `timestamp[us]`/NTZ), so the stream
-    * schema is NOT hardcoded: it is taken from a one-time batch
-    * `spark.read.parquet(dir).schema` probe (footer-only, no data scan)
-    * and the `ts` rebuild branches on the actual arrived type via the
-    * same normalizer the batch path uses (graft.Tables.normalizeTs).
+    * schema is NOT hardcoded: it is the batch reader's schema
+    * (`graft.Tables.schemaOf`, inferred from the footers whenever the
+    * directory's files changed since the last probe) and the `ts`
+    * rebuild branches on the actual arrived type via the same normalizer
+    * the batch path uses (graft.Tables.normalizeTs).
     * A hardcoded schema here once silently mis-scaled every timestamp
     * by 1000 when the encoding changed — deriving it makes an encoding
     * drift either transparent or a loud schema error, never a silent
@@ -39,7 +40,7 @@ object EventStreams {
   def readEventStream(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       declaredSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val onDisk = declaredSchema.getOrElse(spark.read.parquet(dir).schema)
+    val onDisk = declaredSchema.getOrElse(graft.Tables.schemaOf(spark, dir))
     graft.Tables.normalizeTs(spark.readStream.schema(onDisk).parquet(dir))
   }
 

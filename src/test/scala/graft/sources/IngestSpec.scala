@@ -289,6 +289,20 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(err == """{"status":"error","message":"读取数据失败: boom"}""")
   }
 
+  test("API envelope keeps a map's stored key order and limits at the root") {
+    import org.apache.spark.sql.functions.{lit, map}
+    val keys = Seq("e", "d", "c", "b", "a")
+    val df = spark.range(1).select(
+      map(keys.zipWithIndex.flatMap { case (k, i) => Seq(lit(k), lit(i)) }: _*).as("m"))
+    val json = ApiEnvelope.read(df, "car_data")
+    assert(json.contains("""{"m":{"e":0,"d":1,"c":2,"b":3,"a":4}}"""), json)
+    val spread = spark.range(0, 40, 1, 4).toDF("id")
+    assert(spread.rdd.getNumPartitions == 4)
+    val one = ApiEnvelope.read(spread, "car_data", limit = 1)
+    assert(one.contains("读取 1 行数据"), one)
+    assert(""""id":""".r.findAllMatchIn(one).length == 1, one)
+  }
+
   test("B16 empty upload is rejected (ref app.py:200-202)") {
     val tmp = Files.createTempDirectory("graft-csv2")
     val csv = tmp.resolve("empty.csv")
