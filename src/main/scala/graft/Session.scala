@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a local Spark session is configured. Bench, Verify,
-  * DevProfile, the dev tools and the test suite all start their session
-  * here, so their settings cannot drift apart; a caller with a real
-  * difference (the tests' 4 cores, PlanShapes' static 32-partition
-  * plans) passes it as an argument.
+  * the dev tools and the test suite all start their session here, so
+  * their settings cannot drift apart; a caller with a real difference
+  * (the tests' 4 cores, PlanShapes' static 32-partition plans) passes
+  * it as an argument.
   *
   * `SPARK_GRAFT_CPUS` sets the core count (default: the machine's). */
 object Session {

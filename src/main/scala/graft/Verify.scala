@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.sources.ApiEnvelope.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -35,21 +38,10 @@ object Verify {
         Some(name)
       }
     }.toSeq.sorted
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (name, _) => isSelected(name) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Declared-query manifest: the contract surface this run was asked
     // to produce (all of SparkEntry.queries on a full run; the selection
@@ -59,7 +51,7 @@ object Verify {
     // vanish from the round's correctness evidence (the round-7 failure
     // mode: 6 queries absent from CORRECTNESS with no red row anywhere).
     Files.writeString(Paths.get(s"$outDir/declared_queries.json"),
-      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected.keys.toSeq.sorted.map(jsonString).mkString("[", ",", "]"))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(

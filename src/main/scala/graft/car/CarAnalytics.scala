@@ -52,6 +52,14 @@ object CarAnalytics {
       row_number().over(Window.orderBy(col("registrations").desc, col("city"))) - 1)
   }
 
+  /** A row's registrations: its city → count map's values summed as
+    * longs (a missing map counts 0). */
+  private def rowRegistrations: Column =
+    aggregate(
+      map_values(coalesce(col("city_license_plates"), map())),
+      lit(0L),
+      (acc, x) => acc + x.cast("long"))
+
   /** B5 — fetch_market_trends_data (ref: backend/app.py:88-129): per
     * year, Σ registrations (map_values summed per row first), Σ
     * attention, avg guide_price; null years dropped (:103-104); year
@@ -59,12 +67,7 @@ object CarAnalytics {
   def marketTrends(carData: DataFrame): DataFrame =
     carData
       .filter(col("manufacture_year").isNotNull)
-      .withColumn(
-        "row_reg",
-        aggregate(
-          map_values(coalesce(col("city_license_plates"), map())),
-          lit(0L),
-          (acc, x) => acc + x.cast("long")))
+      .withColumn("row_reg", rowRegistrations)
       .groupBy(col("manufacture_year"))
       .agg(
         sum(col("row_reg")).as("registrations"),
@@ -84,12 +87,7 @@ object CarAnalytics {
       .withColumn(
         "type_recoded",
         when(col("car_type") === "新能源", "电动汽车").otherwise(col("car_type")))
-      .withColumn(
-        "row_reg",
-        aggregate(
-          map_values(coalesce(col("city_license_plates"), map())),
-          lit(0L),
-          (acc, x) => acc + x.cast("long")))
+      .withColumn("row_reg", rowRegistrations)
     Relational.shareOfTotal(recoded, col("type_recoded"), sum(col("row_reg")))
       .select(
         col("group_key").as("type"),

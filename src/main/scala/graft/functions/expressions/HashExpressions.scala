@@ -21,6 +21,31 @@ import scala.util.Random
   * that stalls on CPU. They are deterministic, null-safe, and
   * partition-order independent, so plans using them stay reproducible.
   *
+  * Each loop family is written once, as a primitive-typed kernel in
+  * this object; an expression keeps only its own output format:
+  *  - vector reads and dots: [[HashExpressions.elem]] (the float/double
+  *    element read), [[HashExpressions.dot]] (left-to-right dot over a
+  *    slice — hyperplanes and [[PqLut]]) and [[HashExpressions.signBits]]
+  *    (the hyperplane sign-bit fold of [[HyperplaneBands]],
+  *    [[HyperplaneBandsLong]] and [[HyperplaneSigns]]);
+  *  - the code-point polynomial Σ c·31^j mod [[HashExpressions.Prime]]:
+  *    [[HashExpressions.codePoints]], [[HashExpressions.polyHash]] (the
+  *    plain fold) and [[HashExpressions.windowHashes]] (the rolling
+  *    k-window update) — [[RollingHash]], [[WinnowedFingerprints]],
+  *    [[CdcChunks]];
+  *  - char shingles: [[HashExpressions.shingleHashes]] (normalize, then
+  *    FNV-1a per n-char window) — [[MinHashSig]], [[NgramJaccard]] and,
+  *    through [[HashExpressions.shingleJaccard]], the driver-side band
+  *    calibration in `Dedup`;
+  *  - single-space tokens with empties skipped:
+  *    [[HashExpressions.foreachToken]] — [[SimHash64]],
+  *    [[TokenMatchCount]] ([[WordNgrams]] keeps empty tokens, so it
+  *    scans on its own);
+  *  - Spark's `round(x, 6)` with non-finite passthrough:
+  *    [[HashExpressions.round6]] — [[PqCodes]], [[PqLut]] and
+  *    `Similarity.pqTopK`'s codebook norms.
+  * Codegen, where it pays, is then one `doGenCode` per family.
+  *
   * (CodegenFallback: the per-row call is virtual, but the loop body is
   * compiled Scala — the interpretation overhead that mattered is gone.
   * [[CosineSim]] alone also implements doGenCode: it runs
@@ -67,6 +92,144 @@ object HashExpressions {
     if (end > 0 && sb.charAt(end - 1) == ' ') end -= 1
     sb.substring(0, end)
   }
+
+  /** FNV-1a hash of every n-char window of the normalized text, in
+    * order, duplicates kept; text shorter than n is one window. */
+  private[expressions] def shingleHashes(text: String, n: Int): Array[Long] = {
+    val norm = normalize(text)
+    val out = new Array[Long](math.max(1, norm.length - n + 1))
+    var i = 0
+    while (i < out.length) {
+      out(i) = fnv1a(norm, i, math.min(i + n, norm.length))
+      i += 1
+    }
+    out
+  }
+
+  private def shingleSet(text: String, n: Int): java.util.HashSet[Long] = {
+    val hs = shingleHashes(text, n)
+    val out = new java.util.HashSet[Long]()
+    var i = 0
+    while (i < hs.length) { out.add(hs(i)); i += 1 }
+    out
+  }
+
+  /** Exact n-gram Jaccard |A∩B|/|A∪B| of the two texts' shingle sets —
+    * [[NgramJaccard]]'s value, also callable on the driver. */
+  private[graft] def shingleJaccard(a: String, b: String, n: Int): Double = {
+    val sa = shingleSet(a, n)
+    val sb = shingleSet(b, n)
+    var inter = 0
+    val it = sa.iterator()
+    while (it.hasNext) if (sb.contains(it.next())) inter += 1
+    inter.toDouble / (sa.size() + sb.size() - inter)
+  }
+
+  /** Calls f(from, until) for every non-empty token of s split on the
+    * single space character. */
+  private[expressions] def foreachToken(s: String)(f: (Int, Int) => Unit): Unit = {
+    var start = 0
+    var i = 0
+    val len = s.length
+    while (i <= len) {
+      if (i == len || s.charAt(i) == ' ') {
+        if (i > start) f(start, i)
+        start = i + 1
+      }
+      i += 1
+    }
+  }
+
+  /** The Unicode code points of text (not UTF-16 units), widened to
+    * long — windows count CODE POINTS, mirroring ord()/substr character
+    * semantics in SQL engines. */
+  private[expressions] def codePoints(text: String): Array[Long] = {
+    val cps = new Array[Long](text.codePointCount(0, text.length))
+    var i = 0
+    var n = 0
+    while (i < text.length) {
+      val cp = text.codePointAt(i)
+      cps(n) = cp.toLong
+      n += 1
+      i += Character.charCount(cp)
+    }
+    cps
+  }
+
+  /** Σ cps(j)·31^(until-1-j) mod Prime over cps[from, until): the
+    * left-to-right fold h = (h·31 + c) mod Prime. */
+  private[expressions] def polyHash(cps: Array[Long], from: Int, until: Int): Long = {
+    var h = 0L
+    var j = from
+    while (j < until) { h = (h * 31L + cps(j)) % Prime; j += 1 }
+    h
+  }
+
+  /** [[polyHash]] of every k-wide window of cps, in order (empty when
+    * |cps| < k): one O(len) rolling pass that subtracts the outgoing
+    * code point's 31^(k-1) term, shifts and adds the incoming one. Every
+    * intermediate stays below 2^51. */
+  private[expressions] def windowHashes(cps: Array[Long], k: Int): Array[Long] = {
+    val n = cps.length
+    if (n < k) return Array.emptyLongArray
+    var pow = 1L // 31^(k-1) mod Prime
+    var e = 0
+    while (e < k - 1) { pow = pow * 31L % Prime; e += 1 }
+    val out = new Array[Long](n - k + 1)
+    var h = polyHash(cps, 0, k)
+    out(0) = h
+    var s = 1
+    while (s <= n - k) {
+      val dropped = cps(s - 1) * pow % Prime
+      h = ((h - dropped + Prime) * 31L + cps(s + k - 1)) % Prime
+      out(s) = h
+      s += 1
+    }
+    out
+  }
+
+  /** Whether an array column holds doubles (else floats). array<double>
+    * inputs must read via getDouble — getFloat on a double array returns
+    * garbage. */
+  private[expressions] def isDoubleArray(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == DoubleType
+
+  /** Element i of a float or double array, widened to double. */
+  @inline private[expressions] def elem(v: ArrayData, isDouble: Boolean, i: Int): Double =
+    if (isDouble) v.getDouble(i) else v.getFloat(i).toDouble
+
+  /** Σ v(off + d)·w(d) over d < len, accumulated left to right from 0.0. */
+  @inline private[expressions] def dot(
+      v: ArrayData, isDouble: Boolean, off: Int, w: Array[Double], len: Int): Double = {
+    var s = 0.0
+    var d = 0
+    while (d < len) { s += elem(v, isDouble, off + d) * w(d); d += 1 }
+    s
+  }
+
+  /** Sign bit of v under each hyperplane: bits(p) ⇔ v·planes(p) >= 0,
+    * the dot taken over the shorter of v and the plane. */
+  private[expressions] def signBits(
+      v: ArrayData, isDouble: Boolean, planes: Array[Array[Double]]): Array[Boolean] = {
+    val n = v.numElements()
+    val bits = new Array[Boolean](planes.length)
+    var p = 0
+    while (p < planes.length) {
+      val plane = planes(p)
+      bits(p) = dot(v, isDouble, 0, plane, math.min(n, plane.length)) >= 0
+      p += 1
+    }
+    bits
+  }
+
+  /** Spark's `round(x, 6)` for a double — the scala-BigDecimal HALF_UP
+    * path of Catalyst's Round — except that NaN/±Inf pass through
+    * (BigDecimal throws on them): one garbage embedding must not fail a
+    * whole scan or index build; non-finite values flow through argmin
+    * and ADC comparisons as worst-distance values. */
+  private[graft] def round6(x: Double): Double =
+    if (!java.lang.Double.isFinite(x)) x
+    else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 }
 
 /** MinHash signature of a text column: normalize → distinct char
@@ -85,13 +248,12 @@ case class MinHashSig(child: Expression, shingleN: Int, numHashes: Int, seed: Lo
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val norm = normalize(input.asInstanceOf[UTF8String].toString)
+    val hs = shingleHashes(input.asInstanceOf[UTF8String].toString, shingleN)
     val mins = Array.fill(numHashes)(Long.MaxValue)
     val seen = new java.util.HashSet[Long]()
-    val n = math.max(1, norm.length - shingleN + 1)
     var i = 0
-    while (i < n) {
-      val h = fnv1a(norm, i, math.min(i + shingleN, norm.length))
+    while (i < hs.length) {
+      val h = hs(i)
       if (seen.add(h)) {
         val hm = ((h % Prime) + Prime) % Prime
         var j = 0
@@ -120,22 +282,13 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
   override def nullSafeEval(input: Any): Any = {
     val norm = normalize(input.asInstanceOf[UTF8String].toString)
     val votes = new Array[Int](64)
-    var start = 0
-    var i = 0
-    val len = norm.length
-    while (i <= len) {
-      if (i == len || norm.charAt(i) == ' ') {
-        if (i > start) {
-          val h = fnv1a(norm, start, i)
-          var b = 0
-          while (b < 64) {
-            if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-            b += 1
-          }
-        }
-        start = i + 1
+    foreachToken(norm) { (from, until) =>
+      val h = fnv1a(norm, from, until)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        b += 1
       }
-      i += 1
     }
     var out = 0L
     var b = 0
@@ -162,14 +315,13 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
   * the same arithmetic in the same order as [[nullSafeEval]]. */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
+  import HashExpressions._
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  @transient private lazy val leftIsDouble =
-    left.dataType.asInstanceOf[ArrayType].elementType == DoubleType
-  @transient private lazy val rightIsDouble =
-    right.dataType.asInstanceOf[ArrayType].elementType == DoubleType
+  @transient private lazy val leftIsDouble = isDoubleArray(left)
+  @transient private lazy val rightIsDouble = isDoubleArray(right)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -180,8 +332,8 @@ case class CosineSim(left: Expression, right: Expression)
     var ny = 0.0
     var i = 0
     while (i < n) {
-      val xi = if (leftIsDouble) x.getDouble(i) else x.getFloat(i).toDouble
-      val yi = if (rightIsDouble) y.getDouble(i) else y.getFloat(i).toDouble
+      val xi = elem(x, leftIsDouble, i)
+      val yi = elem(y, rightIsDouble, i)
       dot += xi * yi
       nx += xi * xi
       ny += yi * yi
@@ -238,27 +390,9 @@ case class NgramJaccard(left: Expression, right: Expression, shingleN: Int)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  private def shingleSet(text: String): java.util.HashSet[Long] = {
-    val norm = normalize(text)
-    val out = new java.util.HashSet[Long]()
-    val n = math.max(1, norm.length - shingleN + 1)
-    var i = 0
-    while (i < n) {
-      out.add(fnv1a(norm, i, math.min(i + shingleN, norm.length)))
-      i += 1
-    }
-    out
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val sa = shingleSet(a.asInstanceOf[UTF8String].toString)
-    val sb = shingleSet(b.asInstanceOf[UTF8String].toString)
-    var inter = 0
-    val it = sa.iterator()
-    while (it.hasNext) if (sb.contains(it.next())) inter += 1
-    val union = sa.size() + sb.size() - inter
-    java.lang.Double.valueOf(inter.toDouble / union)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any = java.lang.Double.valueOf(
+    shingleJaccard(a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString,
+      shingleN))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NgramJaccard =
@@ -282,15 +416,8 @@ case class RollingHash(child: Expression) extends UnaryExpression with CodegenFa
   override def nullable: Boolean = child.nullable
 
   override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    var h = 0L
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      h = (h * 31L + cp) % Prime
-      i += Character.charCount(cp)
-    }
-    java.lang.Long.valueOf(h)
+    val cps = codePoints(input.asInstanceOf[UTF8String].toString)
+    java.lang.Long.valueOf(polyHash(cps, 0, cps.length))
   }
 
   override protected def withNewChildInternal(c: Expression): RollingHash =
@@ -302,6 +429,7 @@ case class RollingHash(child: Expression) extends UnaryExpression with CodegenFa
   * single space character, mirroring split(text, ' '). */
 case class TokenMatchCount(child: Expression, words: Seq[String])
     extends UnaryExpression with CodegenFallback {
+  import HashExpressions.foreachToken
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = child.nullable
@@ -315,15 +443,8 @@ case class TokenMatchCount(child: Expression, words: Seq[String])
   override def nullSafeEval(input: Any): Any = {
     val text = input.asInstanceOf[UTF8String].toString
     var count = 0
-    var start = 0
-    var i = 0
-    val len = text.length
-    while (i <= len) {
-      if (i == len || text.charAt(i) == ' ') {
-        if (i > start && set.contains(text.substring(start, i))) count += 1
-        start = i + 1
-      }
-      i += 1
+    foreachToken(text) { (from, until) =>
+      if (set.contains(text.substring(from, until))) count += 1
     }
     java.lang.Integer.valueOf(count)
   }
@@ -338,32 +459,15 @@ case class TokenMatchCount(child: Expression, words: Seq[String])
   * expressions. Plane layout matches Similarity.hyperplanes(seed). */
 case class HyperplaneBands(child: Expression, planes: Array[Array[Double]], bands: Int)
     extends UnaryExpression with CodegenFallback {
+  import HashExpressions._
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  // array<double> inputs must read via getDouble — getFloat on a double
-  // array returns garbage sign bits (same branch CosineSim carries).
-  @transient private lazy val isDouble =
-    child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
+  @transient private lazy val isDouble = isDoubleArray(child)
 
   override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    val bits = new Array[Boolean](planes.length)
-    var p = 0
-    while (p < planes.length) {
-      val plane = planes(p)
-      var dot = 0.0
-      var i = 0
-      val m = math.min(n, plane.length)
-      while (i < m) {
-        val xi = if (isDouble) v.getDouble(i) else v.getFloat(i).toDouble
-        dot += xi * plane(i); i += 1
-      }
-      bits(p) = dot >= 0
-      p += 1
-    }
+    val bits = signBits(input.asInstanceOf[ArrayData], isDouble, planes)
     val perBand = planes.length / bands
     val out = new Array[UTF8String](bands)
     var b = 0
@@ -394,6 +498,7 @@ case class HyperplaneBands(child: Expression, planes: Array[Array[Double]], band
   * and ≤ 2³¹ bands. */
 case class HyperplaneBandsLong(child: Expression, planes: Array[Array[Double]], bands: Int)
     extends UnaryExpression with CodegenFallback {
+  import HashExpressions._
   require(bands >= 1 && planes.length % bands == 0,
     s"planes (${planes.length}) must divide evenly into $bands bands")
   require(planes.length / bands <= 32, "band bits must fit an Int")
@@ -401,26 +506,10 @@ case class HyperplaneBandsLong(child: Expression, planes: Array[Array[Double]], 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  @transient private lazy val isDouble =
-    child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
+  @transient private lazy val isDouble = isDoubleArray(child)
 
   override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    val bits = new Array[Boolean](planes.length)
-    var p = 0
-    while (p < planes.length) {
-      val plane = planes(p)
-      var dot = 0.0
-      var i = 0
-      val m = math.min(n, plane.length)
-      while (i < m) {
-        val xi = if (isDouble) v.getDouble(i) else v.getFloat(i).toDouble
-        dot += xi * plane(i); i += 1
-      }
-      bits(p) = dot >= 0
-      p += 1
-    }
+    val bits = signBits(input.asInstanceOf[ArrayData], isDouble, planes)
     val perBand = planes.length / bands
     val out = new Array[Any](bands)
     var b = 0
@@ -448,29 +537,20 @@ case class HyperplaneBandsLong(child: Expression, planes: Array[Array[Double]], 
   * rehydrated for the exact cosine. Same dot-fold as [[HyperplaneBands]]. */
 case class HyperplaneSigns(child: Expression, planes: Array[Array[Double]])
     extends UnaryExpression with CodegenFallback {
+  import HashExpressions._
   require(planes.length <= 64, "HyperplaneSigns packs into one long")
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = child.nullable
 
-  @transient private lazy val isDouble =
-    child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
+  @transient private lazy val isDouble = isDoubleArray(child)
 
   override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
+    val bits = signBits(input.asInstanceOf[ArrayData], isDouble, planes)
     var sig = 0L
     var p = 0
-    while (p < planes.length) {
-      val plane = planes(p)
-      var dot = 0.0
-      var i = 0
-      val m = math.min(n, plane.length)
-      while (i < m) {
-        val xi = if (isDouble) v.getDouble(i) else v.getFloat(i).toDouble
-        dot += xi * plane(i); i += 1
-      }
-      if (dot >= 0) sig |= (1L << p)
+    while (p < bits.length) {
+      if (bits(p)) sig |= (1L << p)
       p += 1
     }
     sig
@@ -541,7 +621,7 @@ case class WordNgrams(child: Expression, n: Int)
   * array. */
 case class WinnowedFingerprints(child: Expression, k: Int, modP: Int)
     extends UnaryExpression with CodegenFallback {
-  import HashExpressions.Prime
+  import HashExpressions._
   require(k >= 2, s"window must be >= 2 codepoints, got $k")
   require(modP >= 1, s"modP must be >= 1, got $modP")
 
@@ -549,32 +629,11 @@ case class WinnowedFingerprints(child: Expression, k: Int, modP: Int)
   override def nullable: Boolean = child.nullable
 
   override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    // codepoint array (windows are k CODEPOINTS, mirroring ord()/substr
-    // character semantics in SQL engines)
-    val cps = new Array[Long](text.codePointCount(0, text.length))
-    var i = 0
-    var n = 0
-    while (i < text.length) {
-      val cp = text.codePointAt(i)
-      cps(n) = cp.toLong
-      n += 1
-      i += Character.charCount(cp)
-    }
-    if (n < k) return new GenericArrayData(Array.empty[Any])
-    var pow = 1L // 31^(k-1) mod Prime
-    var e = 0
-    while (e < k - 1) { pow = pow * 31L % Prime; e += 1 }
-    var h = 0L
-    var j = 0
-    while (j < k) { h = (h * 31L + cps(j)) % Prime; j += 1 }
-    val out = new java.util.ArrayList[Any](n - k + 1)
-    if (h % modP == 0) out.add(java.lang.Long.valueOf(h))
-    var s = 1
-    while (s <= n - k) {
-      val dropped = cps(s - 1) * pow % Prime
-      h = ((h - dropped + Prime) * 31L + cps(s + k - 1)) % Prime
-      if (h % modP == 0) out.add(java.lang.Long.valueOf(h))
+    val hs = windowHashes(codePoints(input.asInstanceOf[UTF8String].toString), k)
+    val out = new java.util.ArrayList[Any](hs.length)
+    var s = 0
+    while (s < hs.length) {
+      if (hs(s) % modP == 0) out.add(java.lang.Long.valueOf(hs(s)))
       s += 1
     }
     new GenericArrayData(out.toArray)
@@ -606,7 +665,7 @@ case class WinnowedFingerprints(child: Expression, k: Int, modP: Int)
   * polynomial. */
 case class CdcChunks(child: Expression, k: Int, modB: Int)
     extends UnaryExpression with CodegenFallback {
-  import HashExpressions.Prime
+  import HashExpressions._
   require(k >= 2, s"window must be >= 2 codepoints, got $k")
   require(modB >= 1, s"modB must be >= 1, got $modB")
 
@@ -620,36 +679,18 @@ case class CdcChunks(child: Expression, k: Int, modB: Int)
   override def nullable: Boolean = child.nullable
 
   override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    val cps = new Array[Long](text.codePointCount(0, text.length))
-    var i = 0
-    var n = 0
-    while (i < text.length) {
-      val cp = text.codePointAt(i)
-      cps(n) = cp.toLong
-      n += 1
-      i += Character.charCount(cp)
-    }
+    val cps = codePoints(input.asInstanceOf[UTF8String].toString)
+    val n = cps.length
     if (n == 0) return new GenericArrayData(Array.empty[Any])
     // cut positions: 0-based index of the LAST codepoint of a 0-mod-B
     // window, excluding a cut at the very end (it would open an empty
     // chunk)
+    val hs = windowHashes(cps, k)
     val cuts = new java.util.ArrayList[Int]()
-    if (n >= k) {
-      var pow = 1L
-      var e = 0
-      while (e < k - 1) { pow = pow * 31L % Prime; e += 1 }
-      var h = 0L
-      var j = 0
-      while (j < k) { h = (h * 31L + cps(j)) % Prime; j += 1 }
-      if (h % modB == 0 && k - 1 < n - 1) cuts.add(k - 1)
-      var s = 1
-      while (s <= n - k) {
-        val dropped = cps(s - 1) * pow % Prime
-        h = ((h - dropped + Prime) * 31L + cps(s + k - 1)) % Prime
-        if (h % modB == 0 && s + k - 1 < n - 1) cuts.add(s + k - 1)
-        s += 1
-      }
+    var s = 0
+    while (s < hs.length) {
+      if (hs(s) % modB == 0 && s + k - 1 < n - 1) cuts.add(s + k - 1)
+      s += 1
     }
     val out = new java.util.ArrayList[Any](cuts.size + 1)
     var start = 0 // 0-based chunk start
@@ -657,10 +698,8 @@ case class CdcChunks(child: Expression, k: Int, modB: Int)
     var c = 0
     while (c <= cuts.size) {
       val end = if (c < cuts.size) cuts.get(c) else n - 1 // inclusive
-      var h = 0L
-      var j = start
-      while (j <= end) { h = (h * 31L + cps(j)) % Prime; j += 1 }
-      out.add(InternalRow(idx, (start + 1).toLong, (end - start + 1).toLong, h))
+      out.add(InternalRow(idx, (start + 1).toLong, (end - start + 1).toLong,
+        polyHash(cps, start, end + 1)))
       idx += 1
       start = end + 1
       c += 1
@@ -751,21 +790,14 @@ case class ZOrder2(left: Expression, right: Expression, bits: Int)
   * PQ query (SCALE.md, interpreted-expression trap). */
 case class PqCodes(child: Expression, cb: Array[Array[Array[Double]]])
     extends UnaryExpression with CodegenFallback {
+  import HashExpressions._
   require(cb.nonEmpty && cb.head.nonEmpty && cb.head.head.nonEmpty,
     "PQ codebook must be m x ksub x dsub, all non-empty")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  @transient private lazy val isDouble =
-    child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
-
-  private def round6(x: Double): Double =
-    // non-finite passthrough (r9 ADVICE): BigDecimal(NaN/Inf) throws,
-    // and one garbage embedding must not fail the whole scan. NaN/Inf
-    // flow through the argmin/ADC comparisons as worst-distance values.
-    if (!java.lang.Double.isFinite(x)) x
-    else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  @transient private lazy val isDouble = isDoubleArray(child)
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
@@ -784,8 +816,7 @@ case class PqCodes(child: Expression, cb: Array[Array[Array[Double]]])
         var s = 0.0
         var d = 0
         while (d < dsub) {
-          val x = (if (isDouble) v.getDouble(base + d)
-                   else v.getFloat(base + d).toDouble) - c(d)
+          val x = elem(v, isDouble, base + d) - c(d)
           s += x * x
           d += 1
         }
@@ -807,21 +838,14 @@ case class PqCodes(child: Expression, cb: Array[Array[Array[Double]]])
   * [j·ksub + i]. Same arithmetic contract as [[PqCodes]]. */
 case class PqLut(child: Expression, cb: Array[Array[Array[Double]]])
     extends UnaryExpression with CodegenFallback {
+  import HashExpressions._
   require(cb.nonEmpty && cb.head.nonEmpty && cb.head.head.nonEmpty,
     "PQ codebook must be m x ksub x dsub, all non-empty")
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  @transient private lazy val isDouble =
-    child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
-
-  private def round6(x: Double): Double =
-    // non-finite passthrough (r9 ADVICE): BigDecimal(NaN/Inf) throws,
-    // and one garbage embedding must not fail the whole scan. NaN/Inf
-    // flow through the argmin/ADC comparisons as worst-distance values.
-    if (!java.lang.Double.isFinite(x)) x
-    else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  @transient private lazy val isDouble = isDoubleArray(child)
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
@@ -835,15 +859,7 @@ case class PqLut(child: Expression, cb: Array[Array[Array[Double]]])
       val cents = cb(j)
       var i = 0
       while (i < k) {
-        val c = cents(i)
-        var s = 0.0
-        var d = 0
-        while (d < dsub) {
-          s += (if (isDouble) v.getDouble(base + d)
-                else v.getFloat(base + d).toDouble) * c(d)
-          d += 1
-        }
-        out(j * k + i) = round6(s)
+        out(j * k + i) = round6(dot(v, isDouble, base, cents(i), dsub))
         i += 1
       }
       j += 1

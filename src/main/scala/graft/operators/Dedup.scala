@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.functions.expressions.HashExpressions
 
 import java.util.concurrent.atomic.AtomicLong
 
@@ -676,15 +677,17 @@ object Dedup {
       sampleDocs: Int = 200): Int = {
     require(numHashes >= 2)
     // NULL texts sort together under xxhash64 and would land in the sample
-    // (then NPE in jaccardOf) — they carry no shingle signal, so drop them.
+    // (then NPE in the Jaccard) — they carry no shingle signal, so drop them.
     val sample = df.select(text.as("t"))
       .filter(col("t").isNotNull)
       .orderBy(xxhash64(col("t")), col("t"))
       .limit(sampleDocs)
       .collect().map(_.getString(0))
     if (sample.length < 4 || n < 2) return numHashes / 2
+    // the verify step's own Jaccard (NgramJaccard), so s0 is measured
+    // with the normalization and shingles the candidates are judged by
     val jac = sample.grouped(2).collect { case Array(a, b) =>
-      jaccardOf(a, b, shingleN)
+      HashExpressions.shingleJaccard(a, b, shingleN)
     }.toArray
     val nonDup = jac.filter(_ < 0.95)
     val s0 = if (nonDup.isEmpty) 1.0 else nonDup.max // densest non-dup background
@@ -694,19 +697,6 @@ object Dedup {
       else math.min(numHashes,
         math.max(2, math.ceil(math.log(1.0 / n) / math.log(s0)).toInt))
     math.max(1, numHashes / r)
-  }
-
-  /** Driver-side exact n-gram Jaccard of two strings (calibration only —
-    * same normalize/shingle semantics as the NgramJaccard expression). */
-  private def jaccardOf(a: String, b: String, n: Int): Double = {
-    def set(s: String): Set[String] = {
-      val norm = s.toLowerCase.replaceAll("\\s+", " ").trim
-      (0 until math.max(1, norm.length - n + 1))
-        .map(i => norm.substring(i, math.min(i + n, norm.length))).toSet
-    }
-    val (sa, sb) = (set(a), set(b))
-    if (sa.isEmpty && sb.isEmpty) 1.0
-    else sa.intersect(sb).size.toDouble / sa.union(sb).size
   }
 
   /** N-gram Jaccard similarity of two text columns (exact, for verify

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.expressions.HashExpressions
+
 import scala.util.Random
 
 /** [EXT] Similarity search over embedding columns (`Array[Float]`).
@@ -158,9 +160,18 @@ object Similarity {
       corpus: DataFrame, // (doc_id, d_token, embedding)
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val scored = corpus
-      .crossJoin(broadcast(probes))
-      .filter(col("query_id") =!= col("doc_id"))
+    exactMaxSim(
+      corpus
+        .crossJoin(broadcast(probes))
+        .filter(col("query_id") =!= col("doc_id")),
+      k)
+  }
+
+  /** MaxSim's exact scorer over (query, doc-token) pairs carrying
+    * query_vec and embedding: 6dp cosine, per-query-token max,
+    * DECIMAL(18,6) sum per (query, doc), top-k with doc_id tie break. */
+  private def exactMaxSim(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs
       .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
       .select("query_id", "doc_id", "q_token", "sim")
     val summed = scored
@@ -230,23 +241,11 @@ object Similarity {
     // |candidates| ≤ |queries| × collision mass — bounded like the probe
     // set itself, so it broadcasts; the corpus token stream is screened
     // map-side and only candidate docs' tokens reach the exact scorer.
-    val scored = corpus
-      .join(broadcast(candidates), Seq("doc_id"))
-      .join(broadcast(probes), Seq("query_id"))
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
-      .select("query_id", "doc_id", "q_token", "sim")
-    val summed = scored
-      .groupBy("query_id", "doc_id", "q_token")
-      .agg(max(col("sim")).as("m"))
-      .groupBy("query_id", "doc_id")
-      .agg(count(lit(1)).as("n_qt"),
-        sum(col("m").cast("decimal(18,6)")).cast("double").as("maxsim"))
-    topKPerQuery(
-      summed.withColumnRenamed("doc_id", "vec_id"),
-      k, Seq(col("maxsim").desc, col("vec_id")))
-      .select(col("query_id"), col("vec_id").as("doc_id"), col("n_qt"),
-        col("maxsim"), col("rank").cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+    exactMaxSim(
+      corpus
+        .join(broadcast(candidates), Seq("doc_id"))
+        .join(broadcast(probes), Seq("query_id")),
+      k)
   }
 
   /** [[maxSimTopKAuto]] with the banding sized from the corpus — the
@@ -713,14 +712,10 @@ object Similarity {
     // codebook(j)(i) = subspace-j slice of sample vector i
     val cbk = Array.tabulate(m, kEff)((j, i) => sample(i).slice(j * dsub, (j + 1) * dsub))
     // rounded ||centroid||² per (j, i) — the same left-to-right fold the
-    // SQL replay's list_sum performs, computed once at build time
-    def rnd6(x: Double): Double =
-      // non-finite passthrough, mirroring PqCodes/PqLut.round6: a
-      // garbage vector in the codebook sample must not fail the build
-      if (!java.lang.Double.isFinite(x)) x
-      else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // SQL replay's list_sum performs, computed once at build time; a
+    // garbage vector in the codebook sample must not fail the build
     val nsqLit = array((for (j <- 0 until m; i <- 0 until kEff)
-      yield lit(rnd6(cbk(j)(i).foldLeft(0.0)((a, c) => a + c * c)))): _*)
+      yield lit(HashExpressions.round6(cbk(j)(i).foldLeft(0.0)((a, c) => a + c * c)))): _*)
 
     // Tight-JVM-loop expressions for the two hot per-row computations
     // (PqCodes / PqLut, HashExpressions.scala): the declarative

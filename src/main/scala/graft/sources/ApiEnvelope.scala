@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions.{col, struct, to_json}
   */
 object ApiEnvelope {
 
-  private def q(s: String): String = "\"" + s.flatMap {
+  /** The engine's one JSON string quoter: escapes backslash, quote and
+    * ALL control chars (< 0x20) — a tab or CR left raw makes `json.load`
+    * fail on the whole document. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -35,10 +38,10 @@ object ApiEnvelope {
     val rows = df.select(to_json(struct(col("*")))).limit(limit)
       .collect().map(_.getString(0)) // A4 edge: the one collect
     s"""{"status":"success","data":[${rows.mkString(",")}],""" +
-      s""""message":${q(s"成功从表 '$tableName' 读取 ${rows.length} 行数据")}}"""
+      s""""message":${jsonString(s"成功从表 '$tableName' 读取 ${rows.length} 行数据")}}"""
   }
 
   /** Error envelope (ref utils.py:169). */
   def error(e: Throwable): String =
-    s"""{"status":"error","message":${q(s"读取数据失败: ${e.getMessage}")}}"""
+    s"""{"status":"error","message":${jsonString(s"读取数据失败: ${e.getMessage}")}}"""
 }

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
+import graft.sources.ApiEnvelope.jsonString
+
 /** Plan-shape SNAPSHOT for the regression gate (VERDICT r12 ask #2):
   * for each named contract query, record the STATIC physical plan's
   * structural counts — exchanges, sorts, join strategies, scans, and
@@ -122,10 +124,6 @@ object PlanShapes {
       ScanFacts(pf, pushed, sel, scanned, total, bSel, bTotal)
     }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n") + "\""
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanShapes <sfDir> <out.json> [q1,q2,...]")
     val dir = args(0)
@@ -191,8 +189,8 @@ object PlanShapes {
             val rt = rtScans.lift(i)
             val fields = Seq(
               "partition_filters" ->
-                sf.partitionFilters.map(jstr).mkString("[", ",", "]"),
-              "pushed_filters" -> jstr(sf.pushedFilters),
+                sf.partitionFilters.map(jsonString).mkString("[", ",", "]"),
+              "pushed_filters" -> jsonString(sf.pushedFilters),
               "partitions_selected" ->
                 sf.partitionsSelected.map(_.toString).getOrElse("null"),
               "files_scanned" ->
@@ -207,14 +205,14 @@ object PlanShapes {
                 rt.map(_._1.toString).getOrElse("null"),
               "rt_files_read" ->
                 rt.map(_._2.toString).getOrElse("null"))
-            fields.map { case (k, v) => s"${jstr(k)}: $v" }
+            fields.map { case (k, v) => s"${jsonString(k)}: $v" }
               .mkString("{", ", ", "}")
           }
           val body =
-            (fam.map { case (k, v) => s"${jstr(k)}: $v" } :+
-              (s"${jstr("scan_details")}: " +
+            (fam.map { case (k, v) => s"${jsonString(k)}: $v" } :+
+              (s"${jsonString("scan_details")}: " +
                 scans.mkString("[", ", ", "]"))).mkString(", ")
-          Some(s"  ${jstr(q)}: {$body}")
+          Some(s"  ${jsonString(q)}: {$body}")
       }
     }
     val json = entries.mkString("{\n", ",\n", "\n}\n")

@@ -230,6 +230,27 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(bands >= 1 && bands <= 32)
   }
 
+  test("calibration sizes bands with the Jaccard that ngram_jaccard verifies with") {
+    import graft.functions.expressions.GraftFunctions.ngram_jaccard
+    // each group: four distinct strings that normalize to one text, so
+    // the verify Jaccard calls every pair a duplicate; calibration then
+    // sees no non-duplicate background (s0 = 1) and sizes a single band.
+    // A calibration that normalized differently (String.toLowerCase,
+    // `\s`, trim) would see background pairs and size several bands.
+    val groups = Seq(
+      Seq("\u2003Hello  World", "hello world", "Hello\u2003World", "HELLO WORLD\u2003"),
+      Seq("abc\u001Fdef", "abc def", "abc\u001F def", "ABC\u001F\u001FDEF"),
+      Seq("\u0130stanbul", "istanbul", "\u0130STANBUL\u2003", "Istanbul\u2003"))
+    for (g <- groups) {
+      val df = g.toDF("t")
+      val jac = df.as("a").crossJoin(df.as("b"))
+        .select(ngram_jaccard(col("a.t"), col("b.t"), 3)).as[Double].collect()
+      assert(jac.length == 16 && jac.forall(_ == 1.0), g)
+      val bands = Dedup.calibrateMinhashBands(df, col("t"), 2L, shingleN = 3, numHashes = 64)
+      assert(bands == 1, s"$g: calibration saw background pairs, sized $bands bands")
+    }
+  }
+
   test("skew-guard truncation is observable, never silent") {
     val boiler = "standard boilerplate disclaimer all rights reserved " +
       "please read these terms carefully before proceeding any further"
