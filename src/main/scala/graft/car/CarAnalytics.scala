@@ -3,7 +3,9 @@ package graft.car
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 
+import graft.functions.expressions.GraftFunctions.map_value_sum
 import graft.operators.Relational
 
 /** The reference's analytics surface (every /api/v1 GET endpoint,
@@ -11,10 +13,24 @@ import graft.operators.Relational
   * car_data schema. The reference pulled the WHOLE table into Python per
   * request and looped row-at-a-time (e.g. backend/app.py:35, :101-116);
   * each function here is one declarative chain Catalyst optimizes
-  * end-to-end — filters reach the scan, map columns are consumed with
-  * generator/higher-order expressions, aggregation is partial map-side.
+  * end-to-end — filters reach the scan, aggregation is partial map-side.
+  *
+  * Every expression here has generated code, so no operator leaves
+  * whole-stage codegen for an expression's sake: map columns are read
+  * with `explode`, a `Cast` of `map_entries` and the
+  * [[graft.functions.expressions.MapValueSum]] kernel, never a
+  * higher-order lambda (`transform`/`aggregate` evaluate interpreted and
+  * pull their whole operator out of the fused stage). An operator still
+  * runs outside codegen only where Spark has no codegen for the operator
+  * itself — the windows, for one.
   */
 object CarAnalytics {
+
+  /** `history_prices`' type: map_entries' own shape with the
+    * reference's field names. */
+  private val HistoryPrices = ArrayType(StructType(Seq(
+    StructField("date", StringType, nullable = false),
+    StructField("price", IntegerType))), containsNull = false)
 
   /** B1+B2+B3 — fetch_car_data (ref: backend/app.py:33-57): DB→API
     * rename, map→array-of-structs history, surrogate id. */
@@ -23,11 +39,10 @@ object CarAnalytics {
     val extras = Seq(
       col("city_license_plates"),
       col("manufacture_year"),
-      // B2: {date→price} map → [{date, price}] array (ref :48-53), via
-      // map_entries + transform — no UDF, stays in codegen.
-      transform(
-        map_entries(coalesce(col("historical_price"), map())),
-        e => struct(e("key").as("date"), e("value").as("price"))).as("history_prices"))
+      // B2: {date→price} map → [{date, price}] array (ref :48-53): the
+      // cast renames map_entries' (key, value) fields by position
+      map_entries(coalesce(col("historical_price"), map()))
+        .cast(HistoryPrices).as("history_prices"))
     val id = Relational.surrogateKey(col("brand"), col("model"))
     carData
       .select(renamed ++ extras: _*)
@@ -53,12 +68,9 @@ object CarAnalytics {
   }
 
   /** A row's registrations: its city → count map's values summed as
-    * longs (a missing map counts 0). */
+    * longs (a missing map counts 0, a null count makes it null). */
   private def rowRegistrations: Column =
-    aggregate(
-      map_values(coalesce(col("city_license_plates"), map())),
-      lit(0L),
-      (acc, x) => acc + x.cast("long"))
+    map_value_sum(col("city_license_plates"), skipNulls = false)
 
   /** B5 — fetch_market_trends_data (ref: backend/app.py:88-129): per
     * year, Σ registrations (map_values summed per row first), Σ
@@ -148,17 +160,28 @@ object CarAnalytics {
 
   /** B12 — market_overview (ref: backend/app.py:377-401): global sums,
     * count per brand, deterministic ARGMAX top car with the reference's
-    * formatted label (:392). */
+    * formatted label (:392). One aggregate over one scan:
+    *  - the total is Σ of every non-null city count, as
+    *    [[cityRegistrations]] sums them (NULL when there is none);
+    *  - the top car is `min_by` over (attention IS NULL, −attention, id):
+    *    attention desc with nulls last, then id asc — `Relational.argmax`'s
+    *    order;
+    *  - an empty table gives no row, as the top-1 side of a cross join
+    *    would. */
   def marketOverview(carData: DataFrame): DataFrame = {
-    val cars = fetchCarData(carData)
-    val totalReg = cityRegistrations(carData)
-      .agg(sum("registrations").as("total_registrations"))
-    val attention = cars.agg(avg(col("attention").cast("double")).as("avg_attention"))
-    val top = Relational.argmax(cars, col("attention"), col("id"))
-      .select(concat(
-        col("brand"), lit(" "), col("model"),
-        lit(" (关注度: "), col("attention").cast("string"), lit(")")).as("top_car"))
-    totalReg.crossJoin(attention).crossJoin(top)
+    val label = concat(
+      col("brand"), lit(" "), col("model"),
+      lit(" (关注度: "), col("attention").cast("string"), lit(")"))
+    val rank = struct(col("attention").isNull, -col("attention").cast("long"), col("id"))
+    fetchCarData(carData)
+      .agg(
+        sum(map_value_sum(col("city_license_plates"), skipNulls = true))
+          .as("total_registrations"),
+        avg(col("attention").cast("double")).as("avg_attention"),
+        min_by(label, rank).as("top_car"),
+        count(lit(1)).as("n"))
+      .filter(col("n") > 0)
+      .drop("n")
   }
 
   /** B12b — popular_brands component (count per brand, ref :386-388). */

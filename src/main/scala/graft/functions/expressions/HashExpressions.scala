@@ -2,9 +2,10 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,8 +43,9 @@ import scala.util.Random
   *    [[TokenMatchCount]] ([[WordNgrams]] keeps empty tokens, so it
   *    scans on its own);
   *  - Spark's `round(x, 6)` with non-finite passthrough:
-  *    [[HashExpressions.round6]] — [[PqCodes]], [[PqLut]] and
-  *    `Similarity.pqTopK`'s codebook norms.
+  *    [[HashExpressions.round6]] — [[PqCodes]], [[PqLut]],
+  *    `Similarity.pqTopK`'s codebook norms and `Similarity.mmrDiversify`'s
+  *    driver-side cosines.
   * Codegen, where it pays, is then one `doGenCode` per family.
   *
   * (CodegenFallback: the per-row call is virtual, but the loop body is
@@ -1000,8 +1002,85 @@ object MtldFactors {
   }
 }
 
+/** Σ of a `map<_, int>` column's values as a long — the per-row
+  * registrations of the car_data surface.
+  *  - `skipNulls = false` is `aggregate(map_values(coalesce(m, map())),
+  *    0L, (acc, x) -> acc + CAST(x AS BIGINT))`: a null map sums to 0,
+  *    any null value makes the sum null.
+  *  - `skipNulls = true` sums the non-null values and is null when there
+  *    are none (null or empty map included), so its `sum` over rows is
+  *    the `sum` of the exploded values.
+  *
+  * doGenCode (not CodegenFallback): the `aggregate` lambda evaluates
+  * interpreted and keeps its whole operator out of whole-stage codegen;
+  * this is one static call per row, like [[ScriptCounts]]. */
+case class MapValueSum(child: Expression, skipNulls: Boolean)
+    extends UnaryExpression {
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case MapType(_, IntegerType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"map_value_sum needs a map with int values, got ${other.catalogString}")
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val m = child.eval(input)
+    if (m == null) { if (skipNulls) null else 0L }
+    else {
+      val s = MapValueSum.sum(m.asInstanceOf[MapData], skipNulls)
+      if (s == MapValueSum.NoSum) null else s
+    }
+  }
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |boolean ${ev.isNull} = $skipNulls;
+      |long ${ev.value} = 0L;
+      |if (!${c.isNull}) {
+      |  ${ev.value} = graft.functions.expressions.MapValueSum.sum(${c.value}, $skipNulls);
+      |  ${ev.isNull} = ${ev.value} == ${MapValueSum.NoSum}L;
+      |}""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): MapValueSum = copy(child = newChild)
+}
+
+object MapValueSum {
+  /** The null result. Never a real sum: fewer than 2^31 int values sum
+    * strictly inside (−2^62, 2^62). */
+  final val NoSum = Long.MinValue
+
+  /** The kernel the interpreted and generated paths share. */
+  def sum(m: MapData, skipNulls: Boolean): Long = {
+    val vs = m.valueArray()
+    val n = vs.numElements()
+    var s = 0L
+    var seen = false
+    var i = 0
+    while (i < n) {
+      if (!vs.isNullAt(i)) { s += vs.getInt(i); seen = true }
+      else if (!skipNulls) return NoSum
+      i += 1
+    }
+    if (skipNulls && !seen) NoSum else s
+  }
+}
+
 object GraftFunctions {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+
+  def map_value_sum(m: Column, skipNulls: Boolean): Column =
+    column(MapValueSum(expression(m), skipNulls))
 
   def minhash_sig(text: Column, shingleN: Int, numHashes: Int, seed: Long): Column =
     column(MinHashSig(expression(text), shingleN, numHashes, seed))

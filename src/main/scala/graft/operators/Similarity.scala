@@ -834,12 +834,6 @@ object Similarity {
     } finally slim.unpersist()
   }
 
-  /** Spark's `round(double, 6)` replayed on the driver: the identical
-    * BigDecimal(valueOf)→setScale(HALF_UP) chain Catalyst's RoundBase
-    * runs, so driver-side MMR scores are bit-identical to the plan's. */
-  @inline private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** CosineSim's exact arithmetic (left-to-right dot/norm accumulation,
     * one divide) on driver-side arrays. */
   @inline private def cosineLocal(a: Array[Double], b: Array[Double]): Double = {
@@ -888,7 +882,7 @@ object Similarity {
       var j = 0
       while (j < rows.length) {
         if (!taken(j)) {
-          val c = round6(cosineLocal(vs(j), pv))
+          val c = HashExpressions.round6(cosineLocal(vs(j), pv))
           if (msim(j).isNaN || c > msim(j)) msim(j) = c
         }
         j += 1

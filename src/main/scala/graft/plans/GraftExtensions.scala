@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.expressions.{CdcChunks, CosineSim, MinHashSig, MtldFactors, NgramJaccard, RollingHash, ScriptCounts, SimHash64, TokenMatchCount, WinnowedFingerprints, WordNgrams, ZOrder2}
+import graft.functions.expressions.{CdcChunks, CosineSim, MapValueSum, MinHashSig, MtldFactors, NgramJaccard, RollingHash, ScriptCounts, SimHash64, TokenMatchCount, WinnowedFingerprints, WordNgrams, ZOrder2}
 
 /** Optimizer rule: self-similarity is the identity — `ngram_jaccard(x,
   * x, n)` folds to 1.0 at plan time, so a self-join pipeline (dedup
@@ -62,6 +62,12 @@ object GraftExtensions {
     case Literal(v: Int, _)  => v.toLong
     case other => throw new IllegalArgumentException(
       s"$what must be a long literal, got $other")
+  }
+
+  private def boolArg(e: Expression, what: String): Boolean = e match {
+    case Literal(v: Boolean, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be a boolean literal, got $other")
   }
 
   private def stringSeqArg(e: Expression, what: String): Seq[String] = e match {
@@ -126,7 +132,10 @@ object GraftExtensions {
       (args: Seq[Expression]) => ScriptCounts(args.head)),
     ("mtld_factors",
       new ExpressionInfo(classOf[MtldFactors].getName, "mtld_factors"),
-      (args: Seq[Expression]) => MtldFactors(args.head)))
+      (args: Seq[Expression]) => MtldFactors(args.head)),
+    ("map_value_sum",
+      new ExpressionInfo(classOf[MapValueSum].getName, "map_value_sum"),
+      (args: Seq[Expression]) => MapValueSum(args(0), boolArg(args(1), "skipNulls"))))
 
   /** Retro-fit registration into an already-built session. */
   def register(spark: SparkSession): Unit = {

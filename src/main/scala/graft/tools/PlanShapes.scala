@@ -1,15 +1,20 @@
 package graft.tools
 
+import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 import graft.sources.ApiEnvelope.jsonString
 
 /** Plan-shape SNAPSHOT for the regression gate (VERDICT r12 ask #2):
   * for each named contract query, record the STATIC physical plan's
-  * structural counts — exchanges, sorts, join strategies, scans, and
-  * per-scan pruning facts — as deterministic JSON, diffable across
-  * commits by tools/plan_shapes_compare.py.
+  * structural counts — exchanges, sorts, join strategies, scans,
+  * per-scan pruning facts, and the operators a `CodegenFallback`
+  * expression keeps out of whole-stage codegen ([[codegenFallbacks]]) —
+  * as deterministic JSON, diffable across commits by
+  * tools/plan_shapes_compare.py.
   *
   * Why static (AQE off): the gate catches the `ext_roc_auc` class of
   * regression — an uncached subtree silently re-evaluated per consumer
@@ -71,6 +76,26 @@ object PlanShapes {
   def shape(plan: SparkPlan): Map[String, Int] = {
     val names = plan.collect { case n => n.getClass.getSimpleName }
     names.groupBy(identity).map { case (k, v) => k -> v.size }
+  }
+
+  /** Operators that an expression keeps out of whole-stage codegen —
+    * those holding a non-leaf `CodegenFallback` expression, Spark's
+    * `CollapseCodegenStages` rule — each with the offending expression
+    * classes. Adaptive and query-stage wrappers are unwrapped, so an AQE
+    * final plan is searched whole; subqueries are searched too. */
+  def codegenFallbacks(plan: SparkPlan): Seq[(String, Seq[String])] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    nodes(plan).flatMap { op =>
+      val exprs = op.expressions.flatMap(_.collect {
+        case e: CodegenFallback if !e.isInstanceOf[LeafExpression] =>
+          e.getClass.getSimpleName
+      }).distinct.sorted
+      if (exprs.isEmpty) None else Some(op.nodeName -> exprs)
+    }
   }
 
   /** File-scan leaves of `plan`, DESCENDING into cached subtrees
@@ -208,10 +233,16 @@ object PlanShapes {
             fields.map { case (k, v) => s"${jsonString(k)}: $v" }
               .mkString("{", ", ", "}")
           }
+          val fallbacks = codegenFallbacks(plan).map { case (op, exprs) =>
+            s"{${jsonString("op")}: ${jsonString(op)}, ${jsonString("exprs")}: " +
+              exprs.map(jsonString).mkString("[", ", ", "]") + "}"
+          }
           val body =
-            (fam.map { case (k, v) => s"${jsonString(k)}: $v" } :+
-              (s"${jsonString("scan_details")}: " +
-                scans.mkString("[", ", ", "]"))).mkString(", ")
+            (fam.map { case (k, v) => s"${jsonString(k)}: $v" } ++ Seq(
+              s"${jsonString("scan_details")}: " + scans.mkString("[", ", ", "]"),
+              s"${jsonString("codegen_fallback_ops")}: ${fallbacks.size}",
+              s"${jsonString("codegen_fallback")}: " +
+                fallbacks.mkString("[", ", ", "]"))).mkString(", ")
           Some(s"  ${jsonString(q)}: {$body}")
       }
     }

@@ -542,6 +542,23 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(dist.toSeq == got.toSeq)
   }
 
+  test("mmrDiversify: a zero-vector candidate does not fail the driver-side loop") {
+    // its cosine to every pick is 0/0 = NaN; Spark's round passes NaN
+    // through, so the driver replay must too (BigDecimal(NaN) throws)
+    val pool = Seq(
+      (1L, Array(1.0f, 0.0f), 0.9),
+      (2L, Array(1.0f, 0.01f), 0.89),
+      (3L, Array(0.0f, 1.0f), 0.8),
+      (4L, Array(0.0f, 0.0f), 0.5))
+      .toDF("vec_id", "embedding", "rel")
+    val got = Similarity.mmrDiversify(pool, col("vec_id"), col("embedding"),
+      col("rel"), select = 4)
+      .as[(Long, Long, Double, Double)].collect()
+    // NaN similarity keeps id 4 at "no selected neighbour yet": λ·rel
+    assert(got.map(_._2).toSeq == Seq(1L, 3L, 2L, 4L), got.toSeq)
+    assert(got(3)._4 == 0.375)
+  }
+
   test("mmrDiversify: driver-side and distributed paths are bit-identical") {
     // 40 deterministic pseudo-random vectors — both execution paths must
     // produce the same picks AND the same IEEE-exact scores (the driver

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, expr, lit, map}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -90,7 +90,10 @@ class SqlSurfaceParitySpec extends AnyFunSuite with SparkSpec {
     "token_match_count" -> ("token_match_count(t, array('the', 'fox'))",
       GF.token_match_count(col("t"), Seq("the", "fox"))),
     "script_counts" -> ("script_counts(t)", GF.script_counts(col("t"))),
-    "mtld_factors" -> ("mtld_factors(t)", GF.mtld_factors(col("t"))))
+    "mtld_factors" -> ("mtld_factors(t)", GF.mtld_factors(col("t"))),
+    "map_value_sum" -> ("map_value_sum(map('a', CAST(x AS INT), 'b', CAST(y AS INT)), true)",
+      GF.map_value_sum(map(lit("a"), col("x").cast("int"), lit("b"), col("y").cast("int")),
+        skipNulls = true)))
 
   test("every registered SQL function round-trips against its Column twin") {
     import spark.implicits._

@@ -10,7 +10,9 @@
 # cross-run absolute comparisons (measured this round: the same code
 # drifted 1.4x between sessions while interleaved pairs stayed
 # consistent). A change is adjudicated REAL only when its direction
-# agrees at BOTH positions; disagreement = wash (epoch noise).
+# agrees at BOTH positions; disagreement = wash (epoch noise). Each
+# query's dead band is its own same-code spread, max(0.02, |A1/A2 - 1|),
+# and is written into the receipt as "band".
 #
 # Usage: tools/bench_paired.sh <sf_dir> <out.json> <classesA> <classesB> <q1,q2,...>
 # Env: SPARK_GRAFT_REPEATS (default 3), SPARK_GRAFT_HEAVY_EXTRA (default 1)
@@ -44,20 +46,22 @@ for q in qs:
         for pos in "12":
             d = json.load(open(f"{tmp}/{q}_{side}{pos}.json"))
             cell[f"{side}{pos}"] = d["queries"][q]
-    # Dead band (ADVICE r17): a single sample per position can land
-    # hair-thin same-direction ratios from pure noise; require a minimum
-    # effect size at BOTH positions before adjudicating a direction.
-    BAND = 0.02
+    # Dead band: a single sample per position can land same-direction
+    # ratios from pure noise, so a direction needs an effect larger than
+    # the query's own A-vs-A spread (at least 2%) at BOTH positions.
+    band = max(0.02, abs(cell["A1"] / cell["A2"] - 1)) if cell["A2"] > 0 \
+        else float("inf")
     r1 = cell["B1"] / cell["A1"] if cell["A1"] > 0 else float("inf")
     r2 = cell["B2"] / cell["A2"] if cell["A2"] > 0 else float("inf")
-    if r1 < 1 - BAND and r2 < 1 - BAND:
+    if r1 < 1 - band and r2 < 1 - band:
         verdict = "improved"
-    elif r1 > 1 + BAND and r2 > 1 + BAND:
+    elif r1 > 1 + band and r2 > 1 + band:
         verdict = "regressed"
     else:
         verdict = "wash"
     cell["ratio_pos1"] = round(r1, 4)
     cell["ratio_pos2"] = round(r2, 4)
+    cell["band"] = round(band, 4)
     cell["ratio_minmin"] = round(min(cell["B1"], cell["B2"]) /
                                  min(cell["A1"], cell["A2"]), 4)
     cell["verdict"] = verdict
@@ -66,6 +70,7 @@ with open(out, "w") as f:
     json.dump(res, f, indent=1)
 for q, c in res["queries"].items():
     print(f"{q}: A={c['A1']:.2f}/{c['A2']:.2f} B={c['B1']:.2f}/{c['B2']:.2f} "
-          f"ratios={c['ratio_pos1']}/{c['ratio_pos2']} -> {c['verdict']}")
+          f"ratios={c['ratio_pos1']}/{c['ratio_pos2']} band={c['band']} "
+          f"-> {c['verdict']}")
 print(f"[bench_paired] wrote {out}")
 PY

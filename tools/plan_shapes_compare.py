@@ -5,10 +5,13 @@ snapshots (bench/plan_shapes_r{N}.json) and flag STRUCTURAL regressions
 shows up statically as "exchanges/scans jumped", which this catches
 without any timing noise.
 
-Exit code 1 on any regression (count increased on a watched family, or
-a cartesian product appeared where the baseline had none). Improvements
-and additions are reported but pass; a baseline that deliberately
-carries a bounded cartesian stays green unless its count grows.
+Exit code 1 on any regression (count increased on a watched family,
+a cartesian product appeared where the baseline had none, or more
+operators hold a CodegenFallback expression — `codegen_fallback_ops`).
+Improvements and additions are reported but pass; a baseline that
+deliberately carries a bounded cartesian stays green unless its count
+grows. A baseline snapshot without `codegen_fallback_ops` gives one
+note, not a failure.
 
 Usage: plan_shapes_compare.py <old.json> <new.json>
 """
@@ -20,6 +23,8 @@ WATCHED = ["exchanges", "broadcasts", "sorts", "smj", "bhj", "shj",
            "generates"]
 # families where an INCREASE is a regression signal (others informational)
 REGRESSING = ["exchanges", "sorts", "scans", "cartesian", "bnlj"]
+# operators a CodegenFallback expression keeps out of whole-stage codegen
+FALLBACK = "codegen_fallback_ops"
 
 
 def _rt_rows(shape):
@@ -35,6 +40,7 @@ def main(old_path, new_path):
     old = json.load(open(old_path))
     new = json.load(open(new_path))
     regressions, improvements, infos = [], [], []
+    unbaselined = 0
     for q in sorted(new):
         if q not in old:
             infos.append(f"NEW      {q}: no baseline shape")
@@ -56,6 +62,17 @@ def main(old_path, new_path):
                 improvements.append("IMPROVED  " + line)
             else:
                 infos.append(f"CHANGED  {line}")
+        if FALLBACK in o and FALLBACK in n:
+            ov, nv = o[FALLBACK], n[FALLBACK]
+            if nv > ov:
+                exprs = sorted({e for f in n.get("codegen_fallback", [])
+                                for e in f["exprs"]})
+                regressions.append(f"REGRESSED {q}: {FALLBACK} {ov} -> {nv} "
+                                   f"({', '.join(exprs)})")
+            elif nv < ov:
+                improvements.append(f"IMPROVED  {q}: {FALLBACK} {ov} -> {nv}")
+        elif FALLBACK in n:
+            unbaselined += 1
         # Cartesian INTRODUCTIONS/increases on baselined queries are
         # already caught by the REGRESSING loop above (nv > ov); a
         # baseline that deliberately carries one stays green.
@@ -76,6 +93,9 @@ def main(old_path, new_path):
                 f"IMPROVED  {q}: rt_rows_read {orr} -> {nrr}")
     for q in sorted(set(old) - set(new)):
         infos.append(f"DROPPED  {q}: not in new snapshot")
+    if unbaselined:
+        infos.append(f"NOTE     baseline has no {FALLBACK} for {unbaselined} "
+                     f"queries; their fallback counts are not compared")
     for line in regressions + improvements + infos:
         print(line)
     print(f"\n{len(regressions)} regression(s), {len(improvements)} "
