@@ -41,7 +41,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
+      .map(SparkEntry.select(_).toSet)
     // Sharded self-fork (r10 harness lesson, SCALE.md): one long JVM
     // deterministically slows late queries via JIT profile pollution —
     // the 151-query surface measured a 1.16×→1.32× first-to-last-third

@@ -8,20 +8,9 @@ import graft.sources.ApiEnvelope.jsonString
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names (dev-only fast rerun).
-    // Unknown names are a hard error BEFORE any Spark work: a typo that
-    // selected nothing would otherwise produce a fully green run that
-    // verified nothing (empty manifest, empty oracle set — the parity
-    // gate has no way to tell it from an honest empty selection).
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    only.foreach { sel =>
-      val unknown = sel -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-        sys.exit(2)
-      }
-    }
+    // optional 3rd arg: comma-separated query names (dev-only fast rerun);
+    // SparkEntry.select fails on an unknown name before any Spark work
+    val only: Option[Set[String]] = args.lift(2).map(SparkEntry.select(_).toSet)
     def isSelected(name: String): Boolean = only.forall(_.contains(name))
     val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")

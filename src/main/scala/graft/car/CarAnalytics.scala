@@ -92,20 +92,23 @@ object CarAnalytics {
 
   /** B6 — fetch_consumer_preferences (ref: backend/app.py:132-164):
     * share of total registrations per car_type, with the 新能源→电动汽车
-    * recode BEFORE grouping (:149-151). Empty input → empty result
-    * (the reference's total==0 guard :142-143 falls out naturally). */
-  def consumerPreferences(carData: DataFrame): DataFrame = {
-    val recoded = carData
-      .withColumn(
-        "type_recoded",
-        when(col("car_type") === "新能源", "电动汽车").otherwise(col("car_type")))
-      .withColumn("row_reg", rowRegistrations)
-    Relational.shareOfTotal(recoded, col("type_recoded"), sum(col("row_reg")))
+    * recode BEFORE grouping (:149-151). The reference's guard
+    * `total == 0 → []` (:142-143) runs before any share is divided out,
+    * so a table whose registrations total 0 (every map null or empty)
+    * replies empty instead of dividing by zero; an empty table groups to
+    * no row. The total is a window over the per-type rows, as in
+    * `Relational.shareOfTotal`. */
+  def consumerPreferences(carData: DataFrame): DataFrame =
+    carData
+      .groupBy(
+        when(col("car_type") === "新能源", "电动汽车").otherwise(col("car_type")).as("type"))
+      .agg(sum(rowRegistrations).as("registrations"))
+      .withColumn("total", sum("registrations").over(Window.partitionBy()))
+      .filter(!(col("total") <=> 0L))
       .select(
-        col("group_key").as("type"),
-        col("share").as("preference"))
+        col("type"),
+        (col("registrations").cast("double") / col("total")).as("preference"))
       .orderBy("type")
-  }
 
   /** B7 — get_brands (ref: backend/app.py:282-286). */
   def brands(carData: DataFrame): DataFrame =
@@ -137,7 +140,11 @@ object CarAnalytics {
   }
 
   /** B11 — get_recommendations (ref: backend/app.py:332-374): optional
-    * conjuncts incl. the min_price range (:348-352), sort attention desc. */
+    * conjuncts incl. the min_price range (:348-352), sort attention desc.
+    * `id` (brand_model) is shared by many rows, so every reply column
+    * breaks the remaining ties: the reply, and the rows `ApiEnvelope.read`
+    * keeps at its row cap, depend only on the table's rows, never on
+    * their file order. */
   def recommendations(
       carData: DataFrame,
       brand: Option[String] = None,
@@ -154,8 +161,9 @@ object CarAnalytics {
       minHorsepower.map(col("horsepower") >= _),
       doors.map(col("doors") === _),
       carType.map(col("car_type") === _)))
-      .orderBy(col("attention").desc, col("id"))
       .select("id", "brand", "model", "guide_price", "min_price", "attention", "car_type")
+      .orderBy(col("attention").desc, col("id"), col("brand"), col("model"),
+        col("guide_price"), col("min_price"), col("car_type"))
   }
 
   /** B12 — market_overview (ref: backend/app.py:377-401): global sums,

@@ -846,8 +846,9 @@ object Similarity {
   }
 
   /** Driver-side greedy MMR over a ≤`driverPoolLimit` pool collected
-    * once. msim = Double.NaN encodes "no selected item yet" (the null
-    * of the distributed path); scoring treats it as 0 — λ·rel alone. */
+    * once. msim = Double.NaN encodes "no selected neighbour yet" (the
+    * null of the distributed path); scoring treats it as 0 — λ·rel alone.
+    * A NaN cosine (a zero vector on either side) never updates it. */
   private def mmrGreedyLocal(
       slim: DataFrame, select: Int, lambda: Double):
       Seq[(Long, Long, Double, Double)] = {
@@ -918,10 +919,13 @@ object Similarity {
         picks += ((r.toLong, pid, row.getDouble(row.fieldIndex("rel")),
           row.getDouble(row.fieldIndex("score"))))
         val pLit = array(pvec.map(lit(_)): _*)
+        // greatest skips nulls: true max over selected. A NaN cosine (a
+        // zero vector) is no neighbour, as in the driver loop, so it
+        // enters as null rather than as Spark's greatest double.
         remaining = remaining
           .filter(col("id") =!= pid)
-          .withColumn("msim", // greatest skips nulls: true max over selected
-            greatest(col("msim"), round(cosine(col("v"), pLit), 6)))
+          .withColumn("msim", greatest(col("msim"),
+            nanvl(round(cosine(col("v"), pLit), 6), lit(null).cast("double"))))
         if (r % 8 == 0) remaining = Checkpointing.cut(remaining)
       }
     }

@@ -16,10 +16,11 @@ object ExplainDump {
     require(args.length == 4,
       "usage: ExplainDump <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, qlist) = args
+    val names = graft.SparkEntry.select(qlist)
     val spark = graft.Session.local(shufflePartitions = Some(32))
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    try qlist.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
+    try names.foreach { q =>
       val df = graft.SparkEntry.queries(q)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -154,7 +154,7 @@ object PlanShapes {
     val dir = args(0)
     val out = args(1)
     val names =
-      if (args.length > 2) args(2).split(",").map(_.trim).toSeq
+      if (args.length > 2) graft.SparkEntry.select(args(2))
       else DefaultQueries
     // the core count never affects plan shape (shuffle.partitions is
     // pinned); SPARK_GRAFT_CPUS only speeds up the rt=all full-surface
@@ -179,72 +179,67 @@ object PlanShapes {
       "windows" -> Seq("WindowExec", "WindowGroupLimitExec"),
       "generates" -> Seq("GenerateExec"))
 
-    val entries = names.sorted.flatMap { q =>
-      graft.SparkEntry.queries.get(q) match {
-        case None =>
-          System.err.println(s"[plan-shapes] unknown query: $q"); None
-        case Some(f) =>
-          val plan = f(spark, dir).queryExecution.executedPlan
-          val counts = shape(plan)
-          val fam = families.map { case (label, classes) =>
-            label -> classes.map(c => counts.getOrElse(c, 0)).sum
-          }
-          // runtime skipping profile (layout queries only): execute the
-          // SAME plan instance so its scan nodes' SQL metrics populate,
-          // then read rows/files actually produced per scan. AQE is off,
-          // so executedPlan is final — no re-plan between the static
-          // snapshot and this execution.
-          val rtScans: Seq[(Long, Long)] =
-            if (!rtAll && !RuntimeGated.contains(q)) Seq.empty
-            else {
-              plan.execute().count()
-              // same traversal as scanFacts (cached subtrees included)
-              // so the zip below stays index-aligned
-              val rts = collectFileScans(plan).map { s =>
-                (s.metrics.get("numOutputRows").map(_.value).getOrElse(-1L),
-                  s.metrics.get("numFiles").map(_.value).getOrElse(-1L))
-              }
-              // full-surface executions leave per-query artifacts
-              // (persisted proxies, checkpoint blocks) — the Bench
-              // hygiene sweep, so 278 executions don't tax each other
-              graft.Session.release(spark)
-              rts
-            }
-          val scans = scanFacts(plan).zipWithIndex.map { case (sf, i) =>
-            val rt = rtScans.lift(i)
-            val fields = Seq(
-              "partition_filters" ->
-                sf.partitionFilters.map(jsonString).mkString("[", ",", "]"),
-              "pushed_filters" -> jsonString(sf.pushedFilters),
-              "partitions_selected" ->
-                sf.partitionsSelected.map(_.toString).getOrElse("null"),
-              "files_scanned" ->
-                sf.filesScanned.map(_.toString).getOrElse("null"),
-              "files_total" ->
-                sf.filesTotal.map(_.toString).getOrElse("null"),
-              "buckets_selected" ->
-                sf.bucketsSelected.map(_.toString).getOrElse("null"),
-              "buckets_total" ->
-                sf.bucketsTotal.map(_.toString).getOrElse("null"),
-              "rt_rows_read" ->
-                rt.map(_._1.toString).getOrElse("null"),
-              "rt_files_read" ->
-                rt.map(_._2.toString).getOrElse("null"))
-            fields.map { case (k, v) => s"${jsonString(k)}: $v" }
-              .mkString("{", ", ", "}")
-          }
-          val fallbacks = codegenFallbacks(plan).map { case (op, exprs) =>
-            s"{${jsonString("op")}: ${jsonString(op)}, ${jsonString("exprs")}: " +
-              exprs.map(jsonString).mkString("[", ", ", "]") + "}"
-          }
-          val body =
-            (fam.map { case (k, v) => s"${jsonString(k)}: $v" } ++ Seq(
-              s"${jsonString("scan_details")}: " + scans.mkString("[", ", ", "]"),
-              s"${jsonString("codegen_fallback_ops")}: ${fallbacks.size}",
-              s"${jsonString("codegen_fallback")}: " +
-                fallbacks.mkString("[", ", ", "]"))).mkString(", ")
-          Some(s"  ${jsonString(q)}: {$body}")
+    val entries = names.sorted.map { q =>
+      val plan = graft.SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      val counts = shape(plan)
+      val fam = families.map { case (label, classes) =>
+        label -> classes.map(c => counts.getOrElse(c, 0)).sum
       }
+      // runtime skipping profile (layout queries only): execute the
+      // SAME plan instance so its scan nodes' SQL metrics populate,
+      // then read rows/files actually produced per scan. AQE is off,
+      // so executedPlan is final — no re-plan between the static
+      // snapshot and this execution.
+      val rtScans: Seq[(Long, Long)] =
+        if (!rtAll && !RuntimeGated.contains(q)) Seq.empty
+        else {
+          plan.execute().count()
+          // same traversal as scanFacts (cached subtrees included)
+          // so the zip below stays index-aligned
+          val rts = collectFileScans(plan).map { s =>
+            (s.metrics.get("numOutputRows").map(_.value).getOrElse(-1L),
+              s.metrics.get("numFiles").map(_.value).getOrElse(-1L))
+          }
+          // full-surface executions leave per-query artifacts
+          // (persisted proxies, checkpoint blocks) — the Bench
+          // hygiene sweep, so 278 executions don't tax each other
+          graft.Session.release(spark)
+          rts
+        }
+      val scans = scanFacts(plan).zipWithIndex.map { case (sf, i) =>
+        val rt = rtScans.lift(i)
+        val fields = Seq(
+          "partition_filters" ->
+            sf.partitionFilters.map(jsonString).mkString("[", ",", "]"),
+          "pushed_filters" -> jsonString(sf.pushedFilters),
+          "partitions_selected" ->
+            sf.partitionsSelected.map(_.toString).getOrElse("null"),
+          "files_scanned" ->
+            sf.filesScanned.map(_.toString).getOrElse("null"),
+          "files_total" ->
+            sf.filesTotal.map(_.toString).getOrElse("null"),
+          "buckets_selected" ->
+            sf.bucketsSelected.map(_.toString).getOrElse("null"),
+          "buckets_total" ->
+            sf.bucketsTotal.map(_.toString).getOrElse("null"),
+          "rt_rows_read" ->
+            rt.map(_._1.toString).getOrElse("null"),
+          "rt_files_read" ->
+            rt.map(_._2.toString).getOrElse("null"))
+        fields.map { case (k, v) => s"${jsonString(k)}: $v" }
+          .mkString("{", ", ", "}")
+      }
+      val fallbacks = codegenFallbacks(plan).map { case (op, exprs) =>
+        s"{${jsonString("op")}: ${jsonString(op)}, ${jsonString("exprs")}: " +
+          exprs.map(jsonString).mkString("[", ", ", "]") + "}"
+      }
+      val body =
+        (fam.map { case (k, v) => s"${jsonString(k)}: $v" } ++ Seq(
+          s"${jsonString("scan_details")}: " + scans.mkString("[", ", ", "]"),
+          s"${jsonString("codegen_fallback_ops")}: ${fallbacks.size}",
+          s"${jsonString("codegen_fallback")}: " +
+            fallbacks.mkString("[", ", ", "]"))).mkString(", ")
+      s"  ${jsonString(q)}: {$body}"
     }
     val json = entries.mkString("{\n", ",\n", "\n}\n")
     java.nio.file.Files.write(

@@ -129,6 +129,25 @@ class CarAnalyticsSpec extends AnyFunSuite with SparkSpec {
       s"$k\n  got      $json\n  expected ${CarAnalyticsSpec.Goldens(k)}" }.mkString("\n"))
   }
 
+  test("recommendations reply the same envelope whatever the table's file order") {
+    // two rows per tie on (attention, id), told apart only by the other
+    // reply columns, written as one file in each order
+    val rows = CarFixture.df(spark).collect().toSeq
+    val tied = rows ++ rows.map(r => org.apache.spark.sql.Row.fromSeq(
+      r.toSeq.updated(r.fieldIndex("manufacturer_suggested_price"),
+        r.getAs[java.math.BigDecimal]("manufacturer_suggested_price")
+          .add(java.math.BigDecimal.ONE))))
+    val root = java.nio.file.Files.createTempDirectory("car-order")
+    val replies = Seq(tied, tied.reverse).zipWithIndex.map { case (order, i) =>
+      val dir = root.resolve(s"car_data_$i").toString
+      spark.createDataFrame(spark.sparkContext.parallelize(order, 1), CarSchema.schema)
+        .write.parquet(dir)
+      CarEdgeCases.reply(CarAnalytics.recommendations(spark.read.parquet(dir)))
+    }
+    assert(replies.head.contains("\"guide_price\""))
+    assert(replies(0) == replies(1))
+  }
+
   test("no endpoint plan holds a CodegenFallback expression, AQE final plan included") {
     // read back from parquet, as the API reads: over the in-memory fixture
     // the optimizer folds every projection into the LocalRelation
@@ -185,10 +204,11 @@ class CarAnalyticsSpec extends AnyFunSuite with SparkSpec {
 object CarAnalyticsSpec {
   /** `ApiEnvelope.read` of every (case, endpoint) in [[CarEdgeCases]],
     * recorded from the endpoints as they were before they moved onto
-    * generated code (HOF folds, three-scan market overview). The two
-    * `DIVIDE_BY_ZERO`s are a standing defect, pinned so that a change to
-    * it is seen: when every map is null, `consumerPreferences` divides
-    * each type's 0 registrations by a 0 total under ANSI. */
+    * generated code (HOF folds, three-scan market overview). When every
+    * map is null the registrations total 0, and `consumerPreferences`
+    * (also behind `preferencesByDimension("type")`) replies empty — the
+    * reference's `total == 0 → []` guard; it used to fail with
+    * `DIVIDE_BY_ZERO`. */
   val Goldens: Map[(String, String), String] = Map(
     ("empty", "fetchCarData") ->
       """{"status":"success","data":[],"message":"成功从表 'car_data' 读取 0 行数据"}""",
@@ -225,7 +245,7 @@ object CarAnalyticsSpec {
     ("null maps", "marketTrends") ->
       """{"status":"success","data":[{"date":"2020","registrations":0,"attention":75,"avg_price":90000.0}],"message":"成功从表 'car_data' 读取 1 行数据"}""",
     ("null maps", "consumerPreferences") ->
-      """error: DIVIDE_BY_ZERO""",
+      """{"status":"success","data":[],"message":"成功从表 'car_data' 读取 0 行数据"}""",
     ("null maps", "brands") ->
       """{"status":"success","data":[{"brand":"Brand1"},{"brand":"Brand2"}],"message":"成功从表 'car_data' 读取 2 行数据"}""",
     ("null maps", "brandModels") ->
@@ -245,7 +265,7 @@ object CarAnalyticsSpec {
     ("null maps", "priceDistribution") ->
       """{"status":"success","data":[{"range":"0万-10万","count":1,"avg_attention":75.0},{"range":"10万-20万","count":0,"avg_attention":0.0},{"range":"20万-30万","count":1,"avg_attention":80.0},{"range":"30万-50万","count":0,"avg_attention":0.0},{"range":"50万以上","count":0,"avg_attention":0.0}],"message":"成功从表 'car_data' 读取 5 行数据"}""",
     ("null maps", "preferencesByDimension") ->
-      """error: DIVIDE_BY_ZERO""",
+      """{"status":"success","data":[],"message":"成功从表 'car_data' 读取 0 行数据"}""",
     ("null map values", "fetchCarData") ->
       """{"status":"success","data":[{"brand":"Brand1","model":"Model1","guide_price":90000.00,"horsepower":150,"doors":4,"min_price":81000.00,"attention":70,"discount":5.00,"car_type":"SUV","city_license_plates":{"CityA":null,"CityB":25},"manufacture_year":2020,"history_prices":[{"date":"2023-01"},{"date":"2023-02","price":88000}],"id":"Brand1_Model1","model_id":"Brand1_Model1"},{"brand":"Brand1","model":"Model2","guide_price":120000.00,"horsepower":150,"doors":4,"min_price":108000.00,"attention":60,"discount":5.00,"car_type":"SUV","city_license_plates":{"CityA":40},"manufacture_year":2020,"history_prices":[{"date":"2023-01","price":100}],"id":"Brand1_Model2","model_id":"Brand1_Model2"},{"brand":"Brand2","model":"Model1","guide_price":310000.00,"horsepower":150,"doors":4,"min_price":279000.00,"attention":50,"discount":5.00,"car_type":"新能源","city_license_plates":{},"manufacture_year":2021,"history_prices":[],"id":"Brand2_Model1","model_id":"Brand2_Model1"},{"brand":"Brand2","model":"Model2","guide_price":420000.00,"horsepower":150,"doors":4,"min_price":378000.00,"attention":40,"discount":5.00,"car_type":"Sedan","city_license_plates":{"CityC":null},"manufacture_year":2021,"history_prices":[{"date":"2023-01","price":7}],"id":"Brand2_Model2","model_id":"Brand2_Model2"},{"brand":"Brand3","model":"Model1","guide_price":650000.00,"horsepower":150,"doors":4,"min_price":585000.00,"attention":30,"discount":5.00,"car_type":"Sedan","city_license_plates":{"CityD":2147483647,"CityE":2147483647},"manufacture_year":2022,"history_prices":[],"id":"Brand3_Model1","model_id":"Brand3_Model1"}],"message":"成功从表 'car_data' 读取 5 行数据"}""",
     ("null map values", "cityRegistrations") ->

@@ -551,12 +551,17 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       (3L, Array(0.0f, 1.0f), 0.8),
       (4L, Array(0.0f, 0.0f), 0.5))
       .toDF("vec_id", "embedding", "rel")
-    val got = Similarity.mmrDiversify(pool, col("vec_id"), col("embedding"),
-      col("rel"), select = 4)
-      .as[(Long, Long, Double, Double)].collect()
-    // NaN similarity keeps id 4 at "no selected neighbour yet": λ·rel
-    assert(got.map(_._2).toSeq == Seq(1L, 3L, 2L, 4L), got.toSeq)
-    assert(got(3)._4 == 0.375)
+    // both paths: the driver loop and (driverPoolLimit = 0) the
+    // distributed one, whose greatest() must not take NaN as the max
+    for (limit <- Seq(65536L, 0L)) {
+      val got = Similarity.mmrDiversify(pool, col("vec_id"), col("embedding"),
+        col("rel"), select = 4, driverPoolLimit = limit)
+        .as[(Long, Long, Double, Double)].collect()
+      // NaN similarity keeps id 4 at "no selected neighbour yet": λ·rel
+      assert(got.map(_._2).toSeq == Seq(1L, 3L, 2L, 4L), s"$limit: ${got.toSeq}")
+      assert(got.map(_._4).toSeq == Seq(0.675, 0.6, 0.417512, 0.375),
+        s"$limit: ${got.toSeq}")
+    }
   }
 
   test("mmrDiversify: driver-side and distributed paths are bit-identical") {

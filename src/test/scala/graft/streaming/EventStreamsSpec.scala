@@ -536,7 +536,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
         .collect()
         .map(r => r.getAs[Long]("purchase_id") -> r.getAs[Long]("n")).toMap
       // batch twin (the ext_interval_join contract query), matched rows only
-      val batch = graft.ExtQueries.queries("ext_interval_join")(
+      val batch = graft.SparkEntry.queries("ext_interval_join")(
         spark, "/root/testdata/sf0.001")
         .collect()
         .map(r => r.getAs[Long]("purchase_id") ->
