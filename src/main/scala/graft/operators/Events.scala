@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import java.util.concurrent.atomic.AtomicLong
 
@@ -389,7 +390,10 @@ object Events {
     * 100 TB shape: one user-keyed conditional aggregate (map-side
     * combine), then exactQuantiles' range-bucketed selection over the
     * |converted users| lag table; counters ride the same aggregates;
-    * final row assembled from 1-row broadcasts.
+    * final row assembled from 1-row broadcasts. When the per-user table
+    * is small enough to broadcast ([[Checkpointing.toDriverIfSmall]])
+    * each user's lag is collected once and the row is folded on the
+    * driver with the same rank rule ([[Relational.pickQuantiles]]).
     *
     * Output: ONE row — (n_from_users, n_converted, p50_lag_s,
     * p90_lag_s, p99_lag_s); zero conversions → NULL quantiles (no lag
@@ -398,36 +402,55 @@ object Events {
       events: DataFrame,
       fromType: String = "click",
       toType: String = "purchase"): DataFrame = {
-    // r18b: cut the per-user firsts table — it feeds the counts
-    // aggregate AND the lag table that exactQuantiles evaluates three
-    // times (split sample, pass-1 collect, pass-2 pick), so uncut the
-    // event scan + user shuffle ran ~4× per action. |users|×3
-    // columns, never event rows.
-    val per = Checkpointing.cut(events
+    val perPlan = events
       .groupBy("user_id")
       .agg(
         min(when(col("event_type") === fromType, col("ts"))).as("t_from"),
         min(when(col("event_type") === toType, col("ts"))).as("t_to"))
-      .filter(col("t_from").isNotNull))
-    val lags = per
-      .filter(col("t_to").isNotNull &&
-        col("t_to").cast("long") >= col("t_from").cast("long"))
-      .select((col("t_to").cast("long") - col("t_from").cast("long"))
-        .as("lag_s"))
-    val counts = per.agg(
-      count(lit(1)).as("n_from_users"),
-      sum(when(col("t_to").isNotNull &&
-        col("t_to").cast("long") >= col("t_from").cast("long"), 1L)
-        .otherwise(0L)).as("n_converted"))
-    val q = Relational.exactQuantiles(
-        lags, lit(0), col("lag_s"), Seq(0.5, 0.9, 0.99))
-      .select(col("p50").as("p50_lag_s"), col("p90").as("p90_lag_s"),
-        col("p99").as("p99_lag_s"))
-    // zero-conversion edge: exactQuantiles returns an EMPTY frame — a
-    // left cross via a constant key keeps the counts row visible
-    counts.withColumn("_k", lit(1))
-      .join(broadcast(q.withColumn("_k", lit(1))), Seq("_k"), "left")
-      .drop("_k")
+      .filter(col("t_from").isNotNull)
+    val converts = col("t_to").isNotNull &&
+      col("t_to").cast("long") >= col("t_from").cast("long")
+    val lag = (col("t_to").cast("long") - col("t_from").cast("long")).as("lag_s")
+    val ps = Seq(0.5, 0.9, 0.99)
+    // small: one collect of each user's lag (null when the user did not
+    // convert), counted and rank-picked on the driver
+    Checkpointing.toDriverIfSmall(perPlan.select(when(converts, lag))) match {
+      case Some(rows) =>
+        val lags = rows.filterNot(_.isNullAt(0))
+          .map(r => java.lang.Long.valueOf(r.getLong(0)): AnyRef)
+        val picks =
+          if (lags.isEmpty) ps.map(_ => null)
+          else Relational.pickQuantiles(lags, LongType, ps)
+        // sum() over no users is NULL, as the distributed aggregate's
+        Relational.localFrame(events.sparkSession, StructType(Seq(
+            StructField("n_from_users", LongType, nullable = false),
+            StructField("n_converted", LongType),
+            StructField("p50_lag_s", LongType),
+            StructField("p90_lag_s", LongType),
+            StructField("p99_lag_s", LongType))),
+          Seq(Row.fromSeq(Seq(rows.length.toLong,
+            if (rows.isEmpty) null else lags.length.toLong) ++ picks)))
+      case None =>
+        // r18b: cut the per-user firsts table — it feeds the counts
+        // aggregate AND the lag table that exactQuantiles evaluates three
+        // times (split sample, pass-1 collect, pass-2 pick), so uncut the
+        // event scan + user shuffle ran ~4× per action. |users|×3
+        // columns, never event rows.
+        val per = Checkpointing.cut(perPlan)
+        val lags = per.filter(converts).select(lag)
+        val counts = per.agg(
+          count(lit(1)).as("n_from_users"),
+          sum(when(converts, 1L).otherwise(0L)).as("n_converted"))
+        val q = Relational.exactQuantiles(
+            lags, lit(0), col("lag_s"), ps)
+          .select(col("p50").as("p50_lag_s"), col("p90").as("p90_lag_s"),
+            col("p99").as("p99_lag_s"))
+        // zero-conversion edge: exactQuantiles returns an EMPTY frame — a
+        // left cross via a constant key keeps the counts row visible
+        counts.withColumn("_k", lit(1))
+          .join(broadcast(q.withColumn("_k", lit(1))), Seq("_k"), "left")
+          .drop("_k")
+    }
   }
 
   /** Top-k per group via ranked window — the distributed replacement for

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, StructField, StructType}
+
+import graft.functions.expressions.HashExpressions
 
 /** [EXT] Graph centrality over edge tables — the operator family a
   * pipeline needs once corpus structure (token co-occurrence, link
@@ -48,6 +53,12 @@ object Graph {
     * broadcast single-row cross join (the B12/corpus-N pattern), never
     * a driver collect.
     *
+    * That shape is for an edge table Spark would not broadcast. Below
+    * the bound ([[Checkpointing.toDriverIfSmall]] on the projected edge
+    * list) the rounds run on the driver from one collect, replaying the
+    * distributed arithmetic step for step ([[pageRankOnDriver]]), and
+    * the result is a local relation with the same rows.
+    *
     * Output: (node, pr, out_w) with pr rounded to 6dp. */
   def pageRank(
       edges: DataFrame,
@@ -59,6 +70,100 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val e0 = edges.select(src.as("src"), dst.as("dst"), weight.cast("double").as("w"))
+    val Array(srcField, dstField, _) = e0.schema.fields
+    val nodeType = srcField.dataType
+    val small =
+      if (nodeType == dstField.dataType && Checkpointing.driverKeyable(nodeType))
+        Checkpointing.toDriverIfSmall(e0)
+      else None
+    small.flatMap(rows => pageRankOnDriver(e0.sparkSession, rows,
+        StructField("node", nodeType, srcField.nullable || dstField.nullable),
+        iterations, damping))
+      .getOrElse(distributedPageRank(e0, iterations, damping))
+  }
+
+  /** [[pageRank]] over the collected (src, dst, w) rows, or `None` when a
+    * value leaves the range the replay reproduces exactly: a NaN or
+    * infinite weight, a zero out-weight, or a contribution too large
+    * for DECIMAL(28,12) — the distributed path then gives Spark's own
+    * answer or error. Each step is the distributed expression's:
+    *  - out_w: each weight cast to DECIMAL(28,6), an exact decimal sum,
+    *    then `Decimal.toDouble`; share = w / out_w, one IEEE divide;
+    *  - per round, each edge's contribution (1/N · share in round 1,
+    *    (base + d · in_sum(src)) · share after it) cast to
+    *    DECIMAL(28,12) by Spark's `Cast` (HALF_UP), summed exactly per
+    *    dst, and read back with `Decimal.toDouble`; a null share adds
+    *    nothing, as `sum` skips nulls;
+    *  - pr = base + d · in_sum, rounded as Spark's `round(_, 6)`.
+    * Null keys follow the joins: an edge with a null src is dropped, a
+    * null dst is a node that no in-sum ever joins. */
+  private def pageRankOnDriver(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: Array[InternalRow],
+      nodeField: StructField,
+      iterations: Int,
+      damping: Double): Option[DataFrame] = {
+    val nt = nodeField.dataType
+    val es = rows.filterNot(_.isNullAt(0))
+    val srcs = es.map(r => r.get(0, nt))
+    val dsts = es.map(r => if (r.isNullAt(1)) null else r.get(1, nt))
+    val ws = es.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2)))
+    // |x| < 1e15 keeps every cast clear of DECIMAL(28,12)'s 1e16 bound
+    def replayable(x: Double): Boolean = math.abs(x) < 1e15
+    if (!ws.flatten.forall(replayable)) return None
+    def toDecimal(scale: Int): Double => java.math.BigDecimal = {
+      val cast = Cast(BoundReference(0, DoubleType, nullable = false),
+        DecimalType(28, scale))
+      val row = new GenericInternalRow(1)
+      x => { row.update(0, x); cast.eval(row).asInstanceOf[Decimal].toJavaBigDecimal }
+    }
+    val toDec6 = toDecimal(6)
+    val toDec12 = toDecimal(12)
+    // per non-null key: the exact decimal sum as a double, None when
+    // every term is null (a null key is never joined, so never summed)
+    def sumTo(keys: Array[Any], xs: Array[Option[java.math.BigDecimal]])
+        : Map[Any, Option[Double]] =
+      keys.indices.filter(keys(_) != null).groupBy(keys(_)).map { case (k, is) =>
+        val present = is.flatMap(xs(_))
+        k -> (if (present.isEmpty) None
+          else Some(Decimal(present.reduce(_ add _)).toDouble))
+      }
+    val outW = sumTo(srcs, ws.map(_.map(toDec6)))
+    val shares = es.indices.map { i =>
+      for (w <- ws(i); o <- outW(srcs(i))) yield (w, o)
+    }
+    if (shares.exists(_.exists(_._2 == 0.0))) return None
+    val share = shares.map(_.map { case (w, o) => w / o }).toArray
+    val nodes = (srcs ++ dsts).distinct
+    val n = nodes.length.toDouble
+    val base = (1.0 - damping) / n
+    def round(prior: Int => Double): Option[Map[Any, Option[Double]]] = {
+      val cs = share.indices.map(i => share(i).map(_ * prior(i)))
+      if (!cs.flatten.forall(replayable)) None
+      else Some(sumTo(dsts, cs.map(_.map(toDec12)).toArray))
+    }
+    var inSum = round(_ => 1.0 / n)
+    (2 to iterations).foreach { _ =>
+      inSum = inSum.flatMap { prev =>
+        round(i => base + damping * prev.get(srcs(i)).flatten.getOrElse(0.0))
+      }
+    }
+    inSum.map { last =>
+      val toNode = CatalystTypeConverters.createToScalaConverter(nt)
+      val out = nodes.map { v =>
+        val in = if (v == null) None else last.get(v).flatten
+        Row(toNode(v), HashExpressions.round6(base + damping * in.getOrElse(0.0)),
+          (if (v == null) None else outW.get(v).flatten).getOrElse(0.0))
+      }
+      Relational.localFrame(spark, StructType(Seq(nodeField,
+        StructField("pr", DoubleType),
+        StructField("out_w", DoubleType, nullable = false))), out.toSeq)
+    }
+  }
+
+  /** [[pageRank]]'s distributed path over the projected edge list. */
+  private def distributedPageRank(
+      e0: DataFrame, iterations: Int, damping: Double): DataFrame = {
     // out-weight via a window over the src partition: ONE scan + one
     // shuffle (the groupBy+self-join spelling scanned the upstream
     // twice), and the cut RDD keeps hashpartitioning(src) + src order,

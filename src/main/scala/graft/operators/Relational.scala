@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Generic relational operators re-expressing the reference's Python
   * dataflow layer (SURVEY.md §2.B) as lazy, Catalyst-optimizable
@@ -12,7 +15,9 @@ import org.apache.spark.sql.functions._
   * parquet scan, partial aggregation happens map-side, and whole-stage
   * codegen covers the hot path. The only collect()s are
   * exactQuantiles's bounded index-build pulls (G split arrays + G·B
-  * count rows — see its scaladoc).
+  * count rows — see its scaladoc) and the driver finishes of
+  * exactQuantiles and keySkewProfile, taken only when their state is
+  * small enough to broadcast ([[Checkpointing.toDriverIfSmall]]).
   *
   * Scale notes (100 TB / 1000 executors):
   *  - group-by operators shuffle on their grouping keys only after
@@ -174,7 +179,16 @@ object Relational {
     * is the parallelism dial (default = shuffle partitions): cell
     * size is n/B regardless of group cardinality. For ultra-high-
     * cardinality group keys (G ≫ driver budget) use the g9
-    * approx_percentile path — sketches, no exact ranks, no pulls. */
+    * approx_percentile path — sketches, no exact ranks, no pulls.
+    *
+    * That shape holds above the bound. Below it
+    * ([[Checkpointing.toDriverIfSmall]]: the (group, value) frame is
+    * small enough for Spark to broadcast) the whole
+    * selection is one collect and a driver sort per group, with
+    * Catalyst's ordering for the value's type and the same ⌈p·n⌉ rule
+    * ([[quantileRank]]); the result is a local relation with the same
+    * rows and schema. A null group key yields no row on both paths
+    * (pass 2's equi-join is null-unsafe). */
   def exactQuantiles(
       df: DataFrame, group: Column, value: Column, ps: Seq[Double],
       bucketsPerGroup: Int = 0, materialize: Boolean = false,
@@ -185,12 +199,76 @@ object Relational {
     // count(*) aggregate onto the quantiles pays one extra full
     // evaluation of `df` for a number this pass computed and threw away.
     require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0))
-    import scala.jdk.CollectionConverters._
-    val spark = df.sparkSession
-    val nB = if (bucketsPerGroup > 0) bucketsPerGroup
-      else spark.sessionState.conf.numShufflePartitions
     val base = df.select(group.as("group_key"), value.as("v"))
       .filter(col("v").isNotNull)
+    val Array(groupField, valueField) = base.schema.fields
+    val small =
+      if (Checkpointing.driverKeyable(groupField.dataType))
+        Checkpointing.toDriverIfSmall(base)
+      else None
+    small match {
+      case Some(rows) =>
+        val schema = StructType(groupField +:
+          ((if (emitN) Seq(StructField("n", LongType, nullable = false)) else Nil) ++
+            ps.map(p => StructField(s"p${math.round(p * 100)}",
+              valueField.dataType, nullable = true))))
+        val gType = groupField.dataType
+        val groups = scala.collection.mutable.LinkedHashMap
+          .empty[Any, scala.collection.mutable.ArrayBuffer[AnyRef]]
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) groups.getOrElseUpdate(r.get(0, gType),
+            scala.collection.mutable.ArrayBuffer.empty[AnyRef]) +=
+            r.get(1, valueField.dataType).asInstanceOf[AnyRef]
+        }
+        val toG = CatalystTypeConverters.createToScalaConverter(gType)
+        val toV = CatalystTypeConverters.createToScalaConverter(valueField.dataType)
+        localFrame(df.sparkSession, schema, groups.iterator.map { case (g, vs) =>
+          val picks = pickQuantiles(vs.toArray, valueField.dataType, ps).map(toV)
+          Row.fromSeq(toG(g) +:
+            ((if (emitN) Seq(vs.length.toLong) else Nil) ++ picks))
+        }.toSeq)
+      case None =>
+        distributedQuantiles(base, groupField, ps, bucketsPerGroup,
+          materialize, emitN)
+    }
+  }
+
+  /** The 1-based rank the p-quantile picks among n sorted values: ⌈p·n⌉,
+    * the same IEEE p·n and ceil as any engine. One rule for the
+    * distributed pass-1 fold and every driver finish. */
+  private[operators] def quantileRank(p: Double, n: Long): Long =
+    math.ceil(p * n).toLong
+
+  /** Driver finish of a rank pick: sorts `values` (internal values of
+    * type `dt`, no nulls) in place by Catalyst's ordering for `dt` — the
+    * order the distributed window sorts by — and returns, per p, the
+    * value at [[quantileRank]], or null when the rank is outside 1..n. */
+  private[operators] def pickQuantiles(
+      values: Array[AnyRef], dt: DataType, ps: Seq[Double]): Seq[Any] = {
+    java.util.Arrays.sort(values, TypeUtils.getInterpretedOrdering(dt))
+    ps.map { p =>
+      val r = quantileRank(p, values.length.toLong)
+      if (r >= 1 && r <= values.length) values((r - 1).toInt) else null
+    }
+  }
+
+  /** A driver finish's result: `rows` as a local relation of `schema`. */
+  private[operators] def localFrame(
+      spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** [[exactQuantiles]]' distributed path: the three passes of its
+    * scaladoc over `base` (group_key, v), v never null. */
+  private def distributedQuantiles(
+      base: DataFrame, groupField: StructField, ps: Seq[Double],
+      bucketsPerGroup: Int, materialize: Boolean,
+      emitN: Boolean): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val spark = base.sparkSession
+    val nB = if (bucketsPerGroup > 0) bucketsPerGroup
+      else spark.sessionState.conf.numShufflePartitions
     // pass 0: per-group split points (collected once — see scaladoc),
     // from a 1% SAMPLE: boundary quality affects only cell balance,
     // never the answer, and a full-corpus percentile sketch was the
@@ -230,7 +308,6 @@ object Relational {
     // pass 1: per-(group, bucket) counts → exclusive offsets + targets
     val countRows = bucketed.groupBy("group_key", "bucket")
       .agg(count(lit(1)).as("c")).collect() // ≤ G·B rows
-    val groupField = base.schema.fields.head
     val groupNs = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     val targetRows: Seq[org.apache.spark.sql.Row] =
@@ -241,7 +318,7 @@ object Relational {
         var acc = 0L
         val offs = cells.map { case (b, c) => val o = acc; acc += c; (b, o, c) }
         ps.zipWithIndex.flatMap { case (p, i) =>
-          val r = math.ceil(p * n).toLong // same IEEE p·n + ceil as any engine
+          val r = quantileRank(p, n)
           offs.find(t => t._2 < r && r <= t._2 + t._3)
             .map(t => org.apache.spark.sql.Row(g, t._1, r - t._2, i))
         }
@@ -768,32 +845,71 @@ object Relational {
       .orderBy("group_key")
   }
 
+  /** Key-skew profile of `key` (cast to string, nulls dropped): one row
+    * (n_keys, n_rows, top_key, top_n, top_share, p50_n, p90_n, p99_n,
+    * skew_ratio) — the cardinality, the hottest key (ties to the least
+    * key), the exact ⌈p·n⌉ count quantiles and max/mean; no row when no
+    * key is non-null. When the per-key count table is small enough to
+    * broadcast ([[Checkpointing.toDriverIfSmall]]) it is collected once
+    * and the readout is folded on the driver; the two ratios are then
+    * the same Spark expressions over a one-row local relation. */
   def keySkewProfile(df: DataFrame, key: Column): DataFrame = {
-    // r18b: cut the per-key count table. It feeds the stats
-    // aggregate, the top-1 pull AND exactQuantiles — which itself
-    // evaluates its input three times (split-point sample, pass-1
-    // count collect, pass-2 rank pick) — so uncut the full corpus
-    // scan + key shuffle ran ~5× per action. |keys| rows of
-    // (string, long), never corpus rows.
-    val counts = Checkpointing.cut(df.select(key.cast("string").as("k"))
-      .filter(col("k").isNotNull)
-      .groupBy("k").agg(count(lit(1)).as("n")))
-    val stats = counts.agg(
-      count(lit(1)).as("n_keys"), sum("n").as("n_rows"))
-    val top = counts.orderBy(col("n").desc, col("k"))
-      .limit(1).select(col("k").as("top_key"), col("n").as("top_n"))
-    val qs = exactQuantiles(counts, lit(0), col("n"),
-        Seq(0.5, 0.9, 0.99))
-      .select(col("p50").as("p50_n"), col("p90").as("p90_n"),
-        col("p99").as("p99_n"))
-    stats.crossJoin(broadcast(top)).crossJoin(broadcast(qs))
-      .select(col("n_keys"), col("n_rows"), col("top_key"), col("top_n"),
-        (col("top_n").cast("double") / col("n_rows").cast("double"))
-          .as("top_share"),
-        col("p50_n"), col("p90_n"), col("p99_n"),
-        ((col("top_n").cast("decimal(38,0)") * col("n_keys")).cast("double") /
-          col("n_rows").cast("double")).as("skew_ratio"))
+    val keys = df.select(key.cast("string").as("k"))
+    val countsPlan = keys.filter(col("k").isNotNull)
+      .groupBy("k").agg(count(lit(1)).as("n"))
+    val ratios = Seq(col("n_keys"), col("n_rows"), col("top_key"), col("top_n"),
+      (col("top_n").cast("double") / col("n_rows").cast("double"))
+        .as("top_share"),
+      col("p50_n"), col("p90_n"), col("p99_n"),
+      ((col("top_n").cast("decimal(38,0)") * col("n_keys")).cast("double") /
+        col("n_rows").cast("double")).as("skew_ratio"))
+    Checkpointing.toDriverIfSmall(countsPlan) match {
+      case Some(rows) =>
+        val kType = countsPlan.schema("k").dataType
+        val ordK = TypeUtils.getInterpretedOrdering(kType)
+        // the hottest key: n DESC, then k ascending
+        val top = rows.reduceOption { (a, b) =>
+          val byN = java.lang.Long.compare(b.getLong(1), a.getLong(1))
+          if (byN > 0 || (byN == 0 && ordK.lt(b.get(0, kType), a.get(0, kType)))) b
+          else a
+        }
+        val folded = top.toSeq.map { t =>
+          val ns = rows.map(r => java.lang.Long.valueOf(r.getLong(1)): AnyRef)
+          Row.fromSeq(Seq(ns.length.toLong,
+            rows.foldLeft(0L)((acc, r) => Math.addExact(acc, r.getLong(1))),
+            t.getUTF8String(0).toString, t.getLong(1)) ++
+            pickQuantiles(ns, LongType, Seq(0.5, 0.9, 0.99)))
+        }
+        localFrame(df.sparkSession, StructType(Seq(
+          StructField("n_keys", LongType, nullable = false),
+          StructField("n_rows", LongType),
+          StructField("top_key", kType, keys.schema.head.nullable),
+          StructField("top_n", LongType, nullable = false),
+          StructField("p50_n", LongType),
+          StructField("p90_n", LongType),
+          StructField("p99_n", LongType))), folded)
+          .select(ratios: _*)
+      case None =>
+        // r18b: cut the per-key count table. It feeds the stats
+        // aggregate, the top-1 pull AND exactQuantiles — which itself
+        // evaluates its input three times (split-point sample, pass-1
+        // count collect, pass-2 rank pick) — so uncut the full corpus
+        // scan + key shuffle ran ~5× per action. |keys| rows of
+        // (string, long), never corpus rows.
+        val counts = Checkpointing.cut(countsPlan)
+        val stats = counts.agg(
+          count(lit(1)).as("n_keys"), sum("n").as("n_rows"))
+        val top = counts.orderBy(col("n").desc, col("k"))
+          .limit(1).select(col("k").as("top_key"), col("n").as("top_n"))
+        val qs = exactQuantiles(counts, lit(0), col("n"),
+            Seq(0.5, 0.9, 0.99))
+          .select(col("p50").as("p50_n"), col("p90").as("p90_n"),
+            col("p99").as("p99_n"))
+        stats.crossJoin(broadcast(top)).crossJoin(broadcast(qs))
+          .select(ratios: _*)
+    }
   }
+
   /** Exact WEIGHTED quantiles per group: the smallest value whose
     * cumulative weight reaches q·W — the weighted median (p50) and
     * friends, where every row counts `weight` times. The readout a

@@ -380,22 +380,26 @@ object GraphQueries {
         .orderBy("node"),
       // k-core replay: same simple-graph CTE, then the 5 peeling rounds
       // unrolled mechanically (degree count → keep set → two-sided
-      // semi-join), matching the engine's fixed-round contract.
+      // semi-join), matching the engine's fixed-round contract. The
+      // edge and keep sets are MATERIALIZED: each round reads the last
+      // round's edges three times, and an inlined CTE re-expands every
+      // round before it (about 3^5 copies; 344 s at sf0.001, 0.05 s
+      // materialized).
       {
         val base =
           s"""WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
             |${tokenPairs(1)},
             |raw AS (SELECT p['a'] AS a, p['b'] AS b
             |        FROM (SELECT unnest(ps) AS p FROM pl)),
-            |e0 AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
+            |e0 AS MATERIALIZED (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
             |       FROM raw WHERE a <> b)""".stripMargin
         val rounds = (1 to 5).map { r =>
           s""",
              |d$r AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
              |  SELECT u AS node FROM e${r - 1}
              |  UNION ALL SELECT v FROM e${r - 1}) GROUP BY 1),
-             |k$r AS (SELECT node FROM d$r WHERE degree >= 3),
-             |e$r AS (SELECT e.u, e.v FROM e${r - 1} e
+             |k$r AS MATERIALIZED (SELECT node FROM d$r WHERE degree >= 3),
+             |e$r AS MATERIALIZED (SELECT e.u, e.v FROM e${r - 1} e
              |  JOIN k$r ku ON ku.node = e.u
              |  JOIN k$r kv ON kv.node = e.v)""".stripMargin
         }.mkString

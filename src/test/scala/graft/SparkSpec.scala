@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** One shared local session for the whole test run. */
 trait SparkSpec {
@@ -13,6 +14,45 @@ trait SparkSpec {
   def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
+
+  /** `body` with the broadcast threshold at -1, which sends every
+    * operator with a driver finish down its distributed path
+    * ([[graft.operators.Checkpointing.toDriverIfSmall]]). */
+  def distributed[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Rows in a comparable form: doubles by their bits, sorted. */
+  def bitRows(rows: Seq[Row]): Seq[String] = rows.map(_.toSeq.map {
+    case d: Double => s"d:${java.lang.Double.doubleToRawLongBits(d)}"
+    case x => String.valueOf(x)
+  }.mkString("|")).sorted
+
+  /** Builds an operator's frame twice — at the session's threshold, where
+    * a small input takes the driver finish, and [[distributed]] — and
+    * asserts the two have the same schema and rows (doubles bit for
+    * bit). Unless `degenerate` (an empty input may plan to a local
+    * relation on either path) it also asserts that the first took the
+    * driver finish, whose result is a local relation. Returns the rows. */
+  def onBothPaths(build: => DataFrame, degenerate: Boolean = false): Seq[Row] = {
+    val driver = build
+    val rows = driver.collect().toSeq
+    val (schema, distRows) = distributed {
+      val d = build
+      (d.schema, d.collect().toSeq)
+    }
+    if (!degenerate) {
+      assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        "a small input must take the driver finish")
+    }
+    assert(driver.schema == schema, s"${driver.schema} vs $schema")
+    assert(bitRows(rows) == bitRows(distRows),
+      s"driver ${rows.mkString(", ")} vs distributed ${distRows.mkString(", ")}")
+    rows
+  }
 }
 
 object SparkSpec {

@@ -493,7 +493,7 @@ class EventsSpec extends AnyFunSuite with SparkSpec {
           (7L, "purchase", ts(0)), (7L, "click", ts(100)),
           (8L, "purchase", ts(0)))
     val events = rows.toDF("user_id", "event_type", "ts")
-    val got = Events.conversionLag(events).collect().head
+    val Seq(got) = onBothPaths(Events.conversionLag(events))
     assert(got.getAs[Long]("n_from_users") == 7L)
     assert(got.getAs[Long]("n_converted") == 5L)
     // ceil(.5·5)=3rd, ceil(.9·5)=5th, ceil(.99·5)=5th of (10,20,30,40,50)
@@ -501,12 +501,21 @@ class EventsSpec extends AnyFunSuite with SparkSpec {
     assert(got.getAs[Long]("p90_lag_s") == 50L)
     assert(got.getAs[Long]("p99_lag_s") == 50L)
     // zero conversions: counts survive, quantiles NULL
-    val none = Events.conversionLag(
-      Seq((1L, "click", ts(0))).toDF("user_id", "event_type", "ts"))
-      .collect().head
+    val Seq(none) = onBothPaths(Events.conversionLag(
+      Seq((1L, "click", ts(0))).toDF("user_id", "event_type", "ts")))
     assert(none.getAs[Long]("n_from_users") == 1L)
     assert(none.getAs[Long]("n_converted") == 0L)
     assert(none.isNullAt(none.fieldIndex("p50_lag_s")))
+    // one converting user: every quantile is its lag
+    val Seq(one) = onBothPaths(Events.conversionLag(Seq(
+        (1L, "click", ts(3)), (1L, "purchase", ts(8)))
+      .toDF("user_id", "event_type", "ts")))
+    assert(one.toSeq == Seq(1L, 1L, 5L, 5L, 5L))
+    // no event at all: one row, n_converted NULL (sum over no users)
+    val Seq(empty) = onBothPaths(Events.conversionLag(
+      Seq.empty[(Long, String, java.sql.Timestamp)]
+        .toDF("user_id", "event_type", "ts")), degenerate = true)
+    assert(empty.toSeq == Seq(0L, null, null, null, null))
   }
 
   test("ewmaSmooth: integer halving weights over the odd mass, exact quotients") {

@@ -37,10 +37,11 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       BigDecimal(p).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
   }
 
+  // each input on both paths: the driver finish and the distributed rounds
   private def run(edges: Seq[(String, String, Long)]): Map[String, Double] =
-    Graph.pageRank(edges.toDF("src", "dst", "w"),
-        col("src"), col("dst"), col("w"))
-      .select("node", "pr").as[(String, Double)].collect().toMap
+    onBothPaths(Graph.pageRank(edges.toDF("src", "dst", "w"),
+        col("src"), col("dst"), col("w")))
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   test("two-node cycle stays uniform at exactly 1/2 each") {
     val got = run(Seq(("a", "b", 1L), ("b", "a", 1L)))
@@ -127,11 +128,66 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val edges = (1 to 40).map(i => (s"n${i % 7}", s"n${(i * 3) % 7}", (i % 4 + 1).toLong))
       .groupBy(e => (e._1, e._2)).map { case ((s, d), es) => (s, d, es.map(_._3).sum) }.toSeq
     val df = edges.toDF("src", "dst", "w")
-    val a = Graph.pageRank(df, col("src"), col("dst"), col("w"))
-      .select("node", "pr").as[(String, Double)].collect().toMap
-    val b = Graph.pageRank(df.repartition(13), col("src"), col("dst"), col("w"))
-      .select("node", "pr").as[(String, Double)].collect().toMap
-    assert(a == b)
+    val a = onBothPaths(Graph.pageRank(df, col("src"), col("dst"), col("w")))
+    val b = distributed(Graph.pageRank(df.repartition(13), col("src"), col("dst"), col("w"))
+      .collect().toSeq)
+    assert(bitRows(a) == bitRows(b))
+  }
+
+  test("pageRank: seeded random graphs — driver finish equals the distributed rounds") {
+    // ties, zero and null weights, null src and dst, parallel edges,
+    // dangling nodes, self-loops, fractional weights (decimal rounding)
+    val rnd = new scala.util.Random(77031L)
+    (1 to 8).foreach { trial =>
+      val nodes = (0 until 2 + rnd.nextInt(10)).map(i => s"n$i")
+      def node(): String = nodes(rnd.nextInt(nodes.size))
+      val drawn = (1 to 3 + rnd.nextInt(40)).map { _ =>
+        val w = rnd.nextInt(7) match {
+          case 0 => None
+          case 1 => Some(0.0)
+          case 2 => Some(1.0)
+          case _ => Some(rnd.nextInt(1000) / 7.0)
+        }
+        (if (rnd.nextInt(20) == 0) null else node(),
+          if (rnd.nextInt(12) == 0) null else node(), w)
+      }
+      // a source whose non-null weights sum to 0 is Spark's DIVIDE_BY_ZERO
+      // (the next test); give each such source one unit self-loop
+      val zeroSum = drawn.groupBy(_._1).collect {
+        case (s, es) if s != null && es.exists(_._3.isDefined) &&
+          es.flatMap(_._3).sum == 0.0 => (s, s, Some(1.0))
+      }
+      val edges = (drawn ++ zeroSum).toDF("src", "dst", "w")
+      val iterations = 1 + rnd.nextInt(6)
+      val damping = if (rnd.nextBoolean()) 0.85 else 0.5
+      val rows = onBothPaths(Graph.pageRank(edges, col("src"), col("dst"),
+        col("w"), iterations, damping))
+      assert(rows.nonEmpty, s"trial $trial")
+    }
+  }
+
+  test("pageRank: a zero out-weight fails with Spark's error on both paths") {
+    val edges = Seq(("a", "b", 0.0), ("b", "a", 1.0)).toDF("src", "dst", "w")
+    def fails() = intercept[ArithmeticException](
+      Graph.pageRank(edges, col("src"), col("dst"), col("w")).collect())
+      .getMessage
+    assert(fails().contains("DIVIDE_BY_ZERO"))
+    assert(distributed(fails()).contains("DIVIDE_BY_ZERO"))
+  }
+
+  test("pageRank: empty, all-null-weight and null-dst-only inputs on both paths") {
+    val empty = Seq.empty[(String, String, Option[Double])].toDF("src", "dst", "w")
+    assert(onBothPaths(Graph.pageRank(empty, col("src"), col("dst"), col("w")),
+      degenerate = true).isEmpty)
+    val nullW = Seq(("a", "b", None), ("b", "c", Option.empty[Double]))
+      .toDF("src", "dst", "w")
+    val got = onBothPaths(Graph.pageRank(nullW, col("src"), col("dst"), col("w")))
+    // no share is defined, so every node keeps the teleport floor
+    assert(got.map(_.getDouble(1)).distinct == Seq(0.05))
+    val nullDst = Seq(("a", null: String, Some(2.0))).toDF("src", "dst", "w")
+    assert(onBothPaths(Graph.pageRank(nullDst, col("src"), col("dst"), col("w")))
+      .map(r => (Option(r.getString(0)), r.getDouble(2))).toSet ==
+      Set((Some("a"), 2.0), (None, 0.0)))
   }
 
   test("durable cuts under a checkpoint dir: files written, results bit-identical") {

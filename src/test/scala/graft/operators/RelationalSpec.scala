@@ -63,9 +63,8 @@ class RelationalSpec extends AnyFunSuite with SparkSpec {
     // p75 = rank ceil(2.25)=3 → 3
     val df = ((1 to 10).map(i => ("a", i * 10.0)) ++
       Seq(("b", 1.0), ("b", 2.0), ("b", 3.0))).toDF("g", "v")
-    val got = Relational.exactQuantiles(
-      df, col("g"), col("v"), Seq(0.25, 0.50, 0.75))
-      .orderBy("group_key").collect()
+    val got = onBothPaths(Relational.exactQuantiles(
+      df, col("g"), col("v"), Seq(0.25, 0.50, 0.75))).sortBy(_.getString(0))
     assert(got.map(r => (r.getString(0), r.getDouble(1), r.getDouble(2),
       r.getDouble(3))).toSeq ==
       Seq(("a", 30.0, 50.0, 80.0), ("b", 1.0, 2.0, 3.0)))
@@ -76,24 +75,23 @@ class RelationalSpec extends AnyFunSuite with SparkSpec {
     // a given rank is the same value whatever the tie order
     val dup = (Seq.fill(50)(("a", 5.0)) ++ Seq.fill(49)(("a", 9.0)) ++
       Seq(("a", 1.0))).toDF("g", "v")
-    val gotDup = Relational.exactQuantiles(
-      dup, col("g"), col("v"), Seq(0.01, 0.50, 1.0), bucketsPerGroup = 8)
-      .collect().head
+    val gotDup = onBothPaths(Relational.exactQuantiles(
+      dup, col("g"), col("v"), Seq(0.01, 0.50, 1.0), bucketsPerGroup = 8)).head
     // sorted: 1.0, then 50×5.0 (ranks 2..51), then 49×9.0 (ranks 52..100)
     assert((gotDup.getDouble(1), gotDup.getDouble(2), gotDup.getDouble(3)) ==
       (1.0, 5.0, 9.0)) // rank 1, rank 50, rank 100
     // groups far smaller than the bucket count: most cells empty
     val tiny = Seq(("x", 7.0), ("y", 3.0), ("y", 4.0)).toDF("g", "v")
-    val gotTiny = Relational.exactQuantiles(
-      tiny, col("g"), col("v"), Seq(0.5), bucketsPerGroup = 64)
-      .orderBy("group_key").collect()
+    val gotTiny = onBothPaths(Relational.exactQuantiles(
+      tiny, col("g"), col("v"), Seq(0.5), bucketsPerGroup = 64))
+      .sortBy(_.getString(0))
     assert(gotTiny.map(r => (r.getString(0), r.getDouble(1))).toSeq ==
       Seq(("x", 7.0), ("y", 3.0)))
     // null values are excluded from the rank space
     val withNull = Seq(("a", Some(1.0)), ("a", None), ("a", Some(3.0)))
       .toDF("g", "v")
-    val gotNull = Relational.exactQuantiles(
-      withNull, col("g"), col("v"), Seq(1.0)).collect().head
+    val gotNull = onBothPaths(Relational.exactQuantiles(
+      withNull, col("g"), col("v"), Seq(1.0))).head
     assert(gotNull.getDouble(1) == 3.0) // n = 2, rank 2 → 3.0
   }
 
@@ -181,15 +179,44 @@ class RelationalSpec extends AnyFunSuite with SparkSpec {
     // p50 = rank ceil(2.5)=3 -> 1; p90 = rank ceil(4.5)=5 -> 5; p99 -> 5
     val keys = Seq.fill(5)("a") ++ Seq.fill(2)("b") ++ Seq("c", "d", "e") :+
       null.asInstanceOf[String]
-    val got = Relational.keySkewProfile(keys.toDF("k"), col("k"))
-      .as[(Long, Long, String, Long, Double, Long, Long, Long, Double)]
-      .collect().head
-    assert(got == ((5L, 10L, "a", 5L, 0.5, 1L, 5L, 5L, 2.5)))
+    val got = onBothPaths(Relational.keySkewProfile(keys.toDF("k"), col("k")))
+    assert(got.map(_.toSeq) == Seq(Seq(5L, 10L, "a", 5L, 0.5, 1L, 5L, 5L, 2.5)))
     // hot-key tie breaks lexicographically
     val tie = Seq("y", "y", "x", "x").toDF("k")
-    assert(Relational.keySkewProfile(tie, col("k"))
-      .as[(Long, Long, String, Long, Double, Long, Long, Long, Double)]
-      .collect().head._3 == "x")
+    assert(onBothPaths(Relational.keySkewProfile(tie, col("k")))
+      .head.getString(2) == "x")
+  }
+
+  test("exactQuantiles on degenerate inputs: both paths, with and without n") {
+    val cases: Seq[(String, Seq[(String, Option[Double])], Seq[Seq[Any]])] = Seq(
+      ("empty", Nil, Nil),
+      ("single row", Seq(("a", Some(2.5))), Seq(Seq("a", 1L, 2.5, 2.5))),
+      ("all-null values", Seq(("a", None), ("b", None)), Nil),
+      // a null group key yields no row (pass 2's equi-join is null-unsafe)
+      ("null group key", Seq((null, Some(1.0)), (null, Some(3.0)), ("a", Some(2.0))),
+        Seq(Seq("a", 1L, 2.0, 2.0))),
+      // 1..7: p50 = rank ceil(3.5) = 4
+      ("one group", (1 to 7).map(i => ("a", Some(i.toDouble))),
+        Seq(Seq("a", 7L, 4.0, 7.0))))
+    for ((name, rows, want) <- cases; emitN <- Seq(false, true)) {
+      val got = onBothPaths(Relational.exactQuantiles(rows.toDF("g", "v"),
+          col("g"), col("v"), Seq(0.5, 1.0), emitN = emitN),
+        degenerate = want.isEmpty)
+      assert(got.map(_.toSeq) ==
+        want.map(w => if (emitN) w else w.patch(1, Nil, 1)), s"$name, emitN=$emitN")
+    }
+  }
+
+  test("keySkewProfile on degenerate inputs: both paths") {
+    val none = Seq.empty[String].toDF("k")
+    assert(onBothPaths(Relational.keySkewProfile(none, col("k")),
+      degenerate = true).isEmpty)
+    val nulls = Seq(Option.empty[String], None).toDF("k")
+    assert(onBothPaths(Relational.keySkewProfile(nulls, col("k")),
+      degenerate = true).isEmpty)
+    val one = Seq(42L).toDF("k")
+    assert(onBothPaths(Relational.keySkewProfile(one, col("k"))).map(_.toSeq) ==
+      Seq(Seq(1L, 1L, "42", 1L, 1.0, 1L, 1L, 1L, 1.0)))
   }
 
   test("aggState/mergeAggStates: split-merge equals one-shot, any split, any order") {

@@ -20,13 +20,19 @@ class ReleaseContractSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(s: Long) = new java.sql.Timestamp(1700000000000L + s * 1000L)
 
-  // every operator that materializes an intermediate its result reads
+  private def skew = Relational.keySkewProfile(
+    Seq("a", "a", "a", "b", "b", "c").toDF("k"), col("k"))
+  private def lag = Events.conversionLag((1 to 5).flatMap(u => Seq(
+    (u.toLong, "click", ts(0)), (u.toLong, "purchase", ts(u * 10L))))
+    .toDF("user_id", "event_type", "ts"))
+
+  // every operator that materializes an intermediate its result reads;
+  // an operator with a driver finish runs on both paths
   private val operators: Seq[(String, () => DataFrame)] = Seq(
-    "keySkewProfile" -> (() => Relational.keySkewProfile(
-      Seq("a", "a", "a", "b", "b", "c").toDF("k"), col("k"))),
-    "conversionLag" -> (() => Events.conversionLag((1 to 5).flatMap(u => Seq(
-      (u.toLong, "click", ts(0)), (u.toLong, "purchase", ts(u * 10L))))
-      .toDF("user_id", "event_type", "ts"))),
+    "keySkewProfile" -> (() => skew),
+    "keySkewProfile, distributed" -> (() => distributed(skew)),
+    "conversionLag" -> (() => lag),
+    "conversionLag, distributed" -> (() => distributed(lag)),
     "conformalCoverage" -> (() => Eval.conformalCoverage(
       (1 to 20).map(i => (s"g${i % 2}", i.toDouble)).toDF("g", "y"),
       (1 to 10).map(i => (s"g${i % 2}", i.toDouble)).toDF("g", "y"),

@@ -5,7 +5,8 @@ Runs AFTER `sbt "runMain graft.Verify <sfDir> <outDir>"`:
   - registers each testdata parquet as a DuckDB view named like the table,
   - runs every oracle_sql.json entry,
   - loads the Spark-written result parquet,
-  - compares columns (sorted by name), row counts, and cell values.
+  - compares columns (sorted by name), row counts, and cell values,
+  - prints each oracle's wall time on its line and the slowest five last.
 
 Dev-only tool (driver-side python deps); not part of the Scala library.
 Usage: python3 tools/check_parity.py <sfDir> <outDir>
@@ -13,6 +14,7 @@ Usage: python3 tools/check_parity.py <sfDir> <outDir>
 import json
 import math
 import sys
+import time
 
 import duckdb
 
@@ -50,8 +52,10 @@ def main(sf_dir, out_dir):
         oracles = json.load(f)
 
     n_pass = n_fail = 0
+    oracle_s = {}
     for name in sorted(oracles):
         sql = oracles[name]
+        t0 = time.perf_counter()
         try:
             want = con.sql(sql)
             want_cols = [c.lower() for c in want.columns]
@@ -72,6 +76,9 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: oracle SQL error: {e}")
             n_fail += 1
             continue
+        finally:
+            oracle_s[name] = time.perf_counter() - t0
+        took = f" [oracle {oracle_s[name]:.2f} s]"
         try:
             got = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
             got_cols = [c.lower() for c in got.columns]
@@ -82,11 +89,11 @@ def main(sf_dir, out_dir):
             continue
 
         if sorted(want_cols) != sorted(got_cols):
-            print(f"FAIL {name}: columns want={sorted(want_cols)} got={sorted(got_cols)}")
+            print(f"FAIL {name}: columns want={sorted(want_cols)} got={sorted(got_cols)}{took}")
             n_fail += 1
             continue
         if len(want_rows) != len(got_rows):
-            print(f"FAIL {name}: rows want={len(want_rows)} got={len(got_rows)}")
+            print(f"FAIL {name}: rows want={len(want_rows)} got={len(got_rows)}{took}")
             n_fail += 1
             continue
         # align column order by name
@@ -105,11 +112,11 @@ def main(sf_dir, out_dir):
         if bad:
             ri, c, w, g = bad
             print(f"FAIL {name}: first diff row={ri} col={c} want={w!r} got={g!r} "
-                  f"(maxdiff={maxdiff})")
+                  f"(maxdiff={maxdiff}){took}")
             n_fail += 1
         else:
             extra = f" (maxfloatdiff={maxdiff})" if maxdiff else ""
-            print(f"PASS {name}: {len(got_rows)} rows{extra}")
+            print(f"PASS {name}: {len(got_rows)} rows{extra}{took}")
             n_pass += 1
 
     # Declared-vs-emitted coverage: every query SparkEntry declares must
@@ -140,6 +147,9 @@ def main(sf_dir, out_dir):
             except Exception as e:
                 print(f"ROWS-ONLY {d}: unreadable: {e}")
 
+    slowest = sorted(oracle_s.items(), key=lambda kv: -kv[1])[:5]
+    print("\nslowest oracles: " + ", ".join(f"{n} {s:.2f} s" for n, s in slowest))
+    print(f"oracle time: {sum(oracle_s.values()):.1f} s")
     print(f"\n{n_pass} pass / {n_fail} fail / {len(oracles)} oracles")
     return 1 if n_fail else 0
 
