@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** The one way an operator materializes an intermediate that its
@@ -23,15 +24,17 @@ import org.apache.spark.sql.types._
   * results are the same under either (pinned by GraphSpec).
   *
   * To the driver when small: [[toDriverIfSmall]] returns a frame's rows
-  * only when Spark itself would broadcast the frame — its optimized
-  * plan's size estimate is at most `spark.sql.autoBroadcastJoinThreshold`
-  * — and the collect stays under [[rowCap]]. An operator whose state is
-  * that small finishes on the driver from one collect and returns a
-  * local relation, instead of running its distributed rounds (a dozen
-  * or more Spark jobs over a few thousand rows). Above the bound, or at
-  * a threshold of -1, the operator takes its distributed path with its
-  * cuts unchanged. A frame that is already a local relation is held on
-  * the driver, so [[cut]] returns it as it is.
+  * only when Spark itself would broadcast the frame ([[broadcastable]]:
+  * its optimized plan's size estimate is at most
+  * `spark.sql.autoBroadcastJoinThreshold`) and the collect stays under
+  * [[rowCap]]; the same test decides [[graft.plans.SmallSort]]. An
+  * operator whose state is that small finishes on the driver from one
+  * collect and returns a local relation, instead of running its
+  * distributed rounds (a dozen or more Spark jobs over a few thousand
+  * rows). Above the bound, or at a threshold of -1, the operator takes
+  * its distributed path with its cuts unchanged. A frame that is
+  * already a local relation is held on the driver, so [[cut]] returns
+  * it as it is.
   *
   * Release contract: a cut registers nothing in the CacheManager. Its
   * blocks are held only by the frame that reads them, so the context
@@ -58,6 +61,16 @@ object Checkpointing {
   def rowCap(threshold: Long): Int =
     math.min(threshold / 16, Int.MaxValue - 1L).toInt
 
+  /** Whether Spark would broadcast a relation of `plan`'s size, the
+    * test its join planning makes: the size estimate of `plan` (an
+    * optimized plan) is at most `spark.sql.autoBroadcastJoinThreshold`,
+    * and a threshold of -1 says never. `plan` is only evaluated when
+    * the threshold is not -1. */
+  def broadcastable(plan: => LogicalPlan, conf: SQLConf): Boolean = {
+    val threshold = conf.autoBroadcastJoinThreshold
+    threshold >= 0 && plan.stats.sizeInBytes <= threshold
+  }
+
   /** The rows of `df` on the driver, in one Spark job, when Spark would
     * broadcast `df` (the same size test as its join planning) and there
     * are at most [[rowCap]] of them; otherwise `None` and the caller
@@ -65,11 +78,10 @@ object Checkpointing {
     * so an estimate that was too low cannot flood the driver. Rows are
     * Catalyst internal rows, in `df`'s column order. */
   def toDriverIfSmall(df: DataFrame): Option[Array[InternalRow]] = {
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold < 0 ||
-        df.queryExecution.optimizedPlan.stats.sizeInBytes > threshold) None
+    val conf = df.sparkSession.sessionState.conf
+    if (!broadcastable(df.queryExecution.optimizedPlan, conf)) None
     else {
-      val cap = rowCap(threshold)
+      val cap = rowCap(conf.autoBroadcastJoinThreshold)
       val rows = df.queryExecution.toRdd
         .mapPartitions(_.take(cap + 1).map(_.copy())).collect()
       if (rows.length > cap) None else Some(rows)

@@ -573,12 +573,18 @@ object CoreQueries {
     //    deterministic fact the oracle can state (rsd 0.02 ⇒ 5% is
     //    2.5σ). The row emits the exact count and the bound verdict;
     //    a sketch drifting out of spec flips within_bound → hash red.
+    //    The (rf, partkey) pairs are deduplicated first: HLL++ registers
+    //    depend only on the set of values hashed, so the estimate is the
+    //    same, count over distinct non-null keys is countDistinct, and no
+    //    HLL buffer is kept per (rf, partkey) group.
     Query("g3_approx_distinct", (s, dir) => {
       t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag").as("rf"))
+        .select(col("l_returnflag").as("rf"), col("l_partkey"))
+        .distinct()
+        .groupBy(col("rf"))
         .agg(
           approx_count_distinct(col("l_partkey"), 0.02).as("approx"),
-          countDistinct(col("l_partkey")).as("exact_parts"))
+          count(col("l_partkey")).as("exact_parts"))
         .select(col("rf"), col("exact_parts"),
           (abs(col("approx") - col("exact_parts")).cast("double")
             <= lit(0.05) * col("exact_parts").cast("double")).as("within_bound"))

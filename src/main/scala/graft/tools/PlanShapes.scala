@@ -78,17 +78,20 @@ object PlanShapes {
     names.groupBy(identity).map { case (k, v) => k -> v.size }
   }
 
+  /** Every operator of `plan`, with adaptive and query-stage wrappers
+    * unwrapped, so an AQE final plan is searched whole, and subqueries
+    * searched too. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+  }
+
   /** Operators that an expression keeps out of whole-stage codegen —
     * those holding a non-leaf `CodegenFallback` expression, Spark's
     * `CollapseCodegenStages` rule — each with the offending expression
-    * classes. Adaptive and query-stage wrappers are unwrapped, so an AQE
-    * final plan is searched whole; subqueries are searched too. */
-  def codegenFallbacks(plan: SparkPlan): Seq[(String, Seq[String])] = {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
-    }
+    * classes, searched over [[nodes]]. */
+  def codegenFallbacks(plan: SparkPlan): Seq[(String, Seq[String])] =
     nodes(plan).flatMap { op =>
       val exprs = op.expressions.flatMap(_.collect {
         case e: CodegenFallback if !e.isInstanceOf[LeafExpression] =>
@@ -96,7 +99,6 @@ object PlanShapes {
       }).distinct.sorted
       if (exprs.isEmpty) None else Some(op.nodeName -> exprs)
     }
-  }
 
   /** File-scan leaves of `plan`, DESCENDING into cached subtrees
     * (ADVICE r17 #2): a persisted subtree's parquet scans sit under

@@ -60,6 +60,13 @@ class SparkEntrySpec extends AnyFunSuite with SparkSpec {
       .agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"))
       .collect().map(r => r.getAs[String]("rf") -> r.getAs[Long]("approx_parts")).toMap
     assert(approx.keySet == exact.keySet)
+    // g3 sketches the deduplicated (rf, partkey) pairs: HLL++ registers
+    // depend only on the set of values, so the estimate is the same
+    val deduped = graft.Tables(spark, sf, "lineitem")
+      .select(col("l_returnflag").as("rf"), col("l_partkey")).distinct()
+      .groupBy("rf").agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"))
+      .collect().map(r => r.getAs[String]("rf") -> r.getAs[Long]("approx_parts")).toMap
+    assert(deduped == approx)
     approx.foreach { case (rf, est) =>
       val truth = exact(rf).toDouble
       val relErr = math.abs(est - truth) / truth

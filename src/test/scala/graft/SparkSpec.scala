@@ -25,11 +25,14 @@ trait SparkSpec {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Rows in a comparable form: doubles by their bits, sorted. */
-  def bitRows(rows: Seq[Row]): Seq[String] = rows.map(_.toSeq.map {
+  /** A row in a comparable form: doubles by their bits. */
+  def bitRow(row: Row): String = row.toSeq.map {
     case d: Double => s"d:${java.lang.Double.doubleToRawLongBits(d)}"
     case x => String.valueOf(x)
-  }.mkString("|")).sorted
+  }.mkString("|")
+
+  /** Rows in a comparable form ([[bitRow]]), sorted. */
+  def bitRows(rows: Seq[Row]): Seq[String] = rows.map(bitRow).sorted
 
   /** Builds an operator's frame twice — at the session's threshold, where
     * a small input takes the driver finish, and [[distributed]] — and
