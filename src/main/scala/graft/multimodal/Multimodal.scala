@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -210,27 +210,35 @@ object Multimodal {
     * isn't decodable 16-bit PCM are dropped (pair with a count upstream
     * when the drop rate matters). */
   def audioStats(media: DataFrame): Dataset[AudioStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(col("kind") === "audio")
+    import media.sparkSession.implicits._
+    decodedRows(media, "audio", decodeAudio) { case (id, payload, (fmt, samples)) =>
+      var peak = 0L; var sumsq = 0L
+      var i = 0
+      while (i < samples.length) {
+        val s = samples(i).toLong
+        if (math.abs(s) > peak) peak = math.abs(s)
+        sumsq += s * s
+        i += 1
+      }
+      val nFrames = samples.length.toLong / math.max(1, fmt.getChannels)
+      AudioStats(id, payload.length.toLong, fmt.getSampleRate.toInt,
+        fmt.getChannels, nFrames, peak, sumsq,
+        math.sqrt(sumsq.toDouble / math.max(1, samples.length)))
+    }
+  }
+
+  /** Per-partition decode of the `kind` rows: each (media_id, payload)
+    * that `decode` accepts becomes `f`'s row, the rest are dropped.
+    * ImageIO decodes in memory, with no temp-file cache. */
+  private def decodedRows[D, T: Encoder](
+      media: DataFrame, kind: String, decode: Array[Byte] => Option[D])(
+      f: (Long, Array[Byte], D) => T): Dataset[T] = {
+    import media.sparkSession.implicits._
+    media.filter(col("kind") === kind)
       .select("media_id", "payload").as[(Long, Array[Byte])]
       .mapPartitions { rows =>
-        rows.flatMap { case (id, payload) =>
-          decodeAudio(payload).map { case (fmt, samples) =>
-            var peak = 0L; var sumsq = 0L
-            var i = 0
-            while (i < samples.length) {
-              val s = samples(i).toLong
-              if (math.abs(s) > peak) peak = math.abs(s)
-              sumsq += s * s
-              i += 1
-            }
-            val nFrames = samples.length.toLong / math.max(1, fmt.getChannels)
-            AudioStats(id, payload.length.toLong, fmt.getSampleRate.toInt,
-              fmt.getChannels, nFrames, peak, sumsq,
-              math.sqrt(sumsq.toDouble / math.max(1, samples.length)))
-          }
-        }
+        javax.imageio.ImageIO.setUseCache(false)
+        rows.flatMap { case (id, payload) => decode(payload).map(f(id, payload, _)) }
       }
   }
 
@@ -239,21 +247,13 @@ object Multimodal {
     * whose payload no reader recognizes are dropped (pair with a count
     * upstream when the drop rate matters). */
   def imageStats(media: DataFrame): Dataset[ImageStats] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(col("kind") === "image")
-      .select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { case (id, payload) =>
-          decodeImage(payload).map { img =>
-            val (sr, sg, sb) = channelSums(img)
-            val n = img.getWidth.toLong * img.getHeight
-            ImageStats(id, payload.length.toLong, img.getWidth, img.getHeight,
-              sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
-          }
-        }
-      }
+    import media.sparkSession.implicits._
+    decodedRows(media, "image", decodeImage) { (id, payload, img) =>
+      val (sr, sg, sb) = channelSums(img)
+      val n = img.getWidth.toLong * img.getHeight
+      ImageStats(id, payload.length.toLong, img.getWidth, img.getHeight,
+        sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+    }
   }
 
   /** Perceptual image hash (pooled dHash): decode, pool luminance into a
@@ -276,52 +276,44 @@ object Multimodal {
   def imagePHash(media: DataFrame, gx: Int = 5, gy: Int = 4): DataFrame = {
     require(gx >= 2 && gy >= 1 && (gx - 1) * gy <= 64,
       s"grid ($gx x $gy) must fit 64 comparison bits")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(col("kind") === "image")
-      .select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { case (id, payload) =>
-          decodeImage(payload).filter(i => i.getWidth >= gx && i.getHeight >= gy)
-            .map { img =>
-              val w = img.getWidth; val h = img.getHeight
-              val sums = Array.ofDim[Long](gx * gy)
-              val cnts = Array.ofDim[Long](gx * gy)
-              var y = 0
-              while (y < h) {
-                val cy = y * gy / h
-                var x = 0
-                while (x < w) {
-                  val cx = x * gx / w
-                  val p = img.getRGB(x, y)
-                  val lum = (((p >> 16) & 0xff) * 299 +
-                    ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114) / 1000
-                  sums(cy * gx + cx) += lum
-                  cnts(cy * gx + cx) += 1
-                  x += 1
-                }
-                y += 1
-              }
-              var hash = 0L
-              var cy = 0
-              while (cy < gy) {
-                var cx = 0
-                while (cx < gx - 1) {
-                  val l = cy * gx + cx; val r = l + 1
-                  // mean(r) > mean(l) without division: exact in Long
-                  // (sums ≤ 255·w·h, counts ≤ w·h — far inside 63 bits)
-                  if (sums(r) * cnts(l) > sums(l) * cnts(r))
-                    hash |= 1L << (cy * (gx - 1) + cx)
-                  cx += 1
-                }
-                cy += 1
-              }
-              (id, w, h, hash)
-            }
+    import media.sparkSession.implicits._
+    val gridSized = (p: Array[Byte]) =>
+      decodeImage(p).filter(i => i.getWidth >= gx && i.getHeight >= gy)
+    decodedRows(media, "image", gridSized) { (id, _, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      val sums = Array.ofDim[Long](gx * gy)
+      val cnts = Array.ofDim[Long](gx * gy)
+      var y = 0
+      while (y < h) {
+        val cy = y * gy / h
+        var x = 0
+        while (x < w) {
+          val cx = x * gx / w
+          val p = img.getRGB(x, y)
+          val lum = (((p >> 16) & 0xff) * 299 +
+            ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114) / 1000
+          sums(cy * gx + cx) += lum
+          cnts(cy * gx + cx) += 1
+          x += 1
         }
+        y += 1
       }
-      .toDF("media_id", "w", "h", "phash")
+      var hash = 0L
+      var cy = 0
+      while (cy < gy) {
+        var cx = 0
+        while (cx < gx - 1) {
+          val l = cy * gx + cx; val r = l + 1
+          // mean(r) > mean(l) without division: exact in Long
+          // (sums ≤ 255·w·h, counts ≤ w·h — far inside 63 bits)
+          if (sums(r) * cnts(l) > sums(l) * cnts(r))
+            hash |= 1L << (cy * (gx - 1) + cx)
+          cx += 1
+        }
+        cy += 1
+      }
+      (id, w, h, hash)
+    }.toDF("media_id", "w", "h", "phash")
   }
 
   /** Shared pigeonhole chunk-blocked Hamming-pair machinery for the
@@ -446,40 +438,33 @@ object Multimodal {
   def audioEnergyFingerprint(media: DataFrame, windows: Int = 33): Dataset[AudioFp] = {
     require(windows >= 2 && windows <= 65,
       s"windows must be in [2, 65] (bits fit a long), got $windows")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(col("kind") === "audio")
-      .select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, payload) =>
-          decodeAudio(payload).filter(_._2.length >= windows).map {
-            case (_, samples) =>
-              val n = samples.length
-              val energy = new Array[Long](windows)
-              var w = 0
-              while (w < windows) {
-                val from = (w.toLong * n / windows).toInt
-                val until = ((w + 1).toLong * n / windows).toInt
-                var e = 0L
-                var i = from
-                while (i < until) {
-                  val s = samples(i).toLong
-                  e += s * s
-                  i += 1
-                }
-                energy(w) = e
-                w += 1
-              }
-              var fp = 0L
-              var b = 0
-              while (b < windows - 1) {
-                if (energy(b + 1) > energy(b)) fp |= (1L << b)
-                b += 1
-              }
-              AudioFp(id, fp, n.toLong)
-          }
+    import media.sparkSession.implicits._
+    val longEnough = (p: Array[Byte]) => decodeAudio(p).filter(_._2.length >= windows)
+    decodedRows(media, "audio", longEnough) { case (id, _, (_, samples)) =>
+      val n = samples.length
+      val energy = new Array[Long](windows)
+      var w = 0
+      while (w < windows) {
+        val from = (w.toLong * n / windows).toInt
+        val until = ((w + 1).toLong * n / windows).toInt
+        var e = 0L
+        var i = from
+        while (i < until) {
+          val s = samples(i).toLong
+          e += s * s
+          i += 1
         }
+        energy(w) = e
+        w += 1
       }
+      var fp = 0L
+      var b = 0
+      while (b < windows - 1) {
+        if (energy(b + 1) > energy(b)) fp |= (1L << b)
+        b += 1
+      }
+      AudioFp(id, fp, n.toLong)
+    }
   }
 
   /** Audio near-dup pairs by fingerprint Hamming distance, pigeonhole
@@ -516,17 +501,23 @@ object Multimodal {
     * each twin is a planted near-duplicate of its base at Hamming ≤ 2,
     * derivable by an oracle from the formulas alone. */
   def syntheticWavsPerturbed(
-      spark: SparkSession, n: Int, idOffset: Long): DataFrame = {
+      spark: SparkSession, n: Int, idOffset: Long): DataFrame =
+    wavs(spark, n, idOffset, perturbed = true)
+
+  /** The WAV fixtures: clip i gets id `idOffset` + i, and with
+    * `perturbed` its sample (i·37) mod n is 12345. */
+  private def wavs(
+      spark: SparkSession, n: Int, idOffset: Long, perturbed: Boolean): DataFrame = {
     val rows = (0 until n).map { i =>
       val nSamples = 800 + (i % 5) * 160
-      val t0 = (i * 37) % nSamples
+      val t0 = if (perturbed) (i * 37) % nSamples else -1
       val data = new Array[Byte](nSamples * 2)
       var t = 0
       while (t < nSamples) {
         val s =
           if (t == t0) 12345
           else ((t * 31 + i * 97) * 509) % 65536 - 32768
-        data(2 * t) = (s & 0xff).toByte
+        data(2 * t) = (s & 0xff).toByte // little-endian
         data(2 * t + 1) = ((s >> 8) & 0xff).toByte
         t += 1
       }
@@ -541,6 +532,7 @@ object Multimodal {
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), mediaSchema)
   }
+
 
   /** [[syntheticImages]] with shifted ids and ONE perturbed pixel: the
     * blue channel of pixel (0, 0) gets +`delta` (mod 256). Paired with
@@ -607,31 +599,8 @@ object Multimodal {
     * with the JDK PNG writer. PNG is lossless and these images carry no
     * color profile, so bytes→pixels decode recovers the formula EXACTLY
     * — which is what lets a SQL oracle replay the decoded values. */
-  def syntheticImages(spark: SparkSession, n: Int): DataFrame = {
-    javax.imageio.ImageIO.setUseCache(false)
-    val rows = (0 until n).map { i =>
-      val w = 8 + i % 5
-      val h = 6 + i % 4
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val r = (x * 3 + y * 5 + i * 7) % 256
-          val g = (x * 11 + y * 13 + i * 17) % 256
-          val b = (x * 19 + y * 23 + i * 29) % 256
-          img.setRGB(x, y, (r << 16) | (g << 8) | b)
-          x += 1
-        }
-        y += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      Row(i.toLong, "image", Row(w, h, null, "png"), bos.toByteArray)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), mediaSchema)
-  }
+  def syntheticImages(spark: SparkSession, n: Int): DataFrame =
+    syntheticImagesPerturbed(spark, n, 0L, delta = 0)
 
   /** Deterministic REAL-WAV fixture: clip i is mono 16-bit PCM at
     * 8 kHz with 800 + (i%5)·160 samples, sample(i, t) =
@@ -639,28 +608,8 @@ object Multimodal {
     * and WAV PCM is lossless, so bytes→samples decode recovers the
     * formula EXACTLY, which is what lets a SQL oracle replay the
     * decoded statistics (same construction as [[syntheticImages]]). */
-  def syntheticWavs(spark: SparkSession, n: Int): DataFrame = {
-    val rows = (0 until n).map { i =>
-      val nSamples = 800 + (i % 5) * 160
-      val data = new Array[Byte](nSamples * 2)
-      var t = 0
-      while (t < nSamples) {
-        val s = ((t * 31 + i * 97) * 509) % 65536 - 32768
-        data(2 * t) = (s & 0xff).toByte // little-endian
-        data(2 * t + 1) = ((s >> 8) & 0xff).toByte
-        t += 1
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(
-        new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(data), fmt, nSamples.toLong),
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      Row(i.toLong, "audio", Row(null, null, nSamples * 1000 / 8000, "wav"),
-        bos.toByteArray)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), mediaSchema)
-  }
+  def syntheticWavs(spark: SparkSession, n: Int): DataFrame =
+    wavs(spark, n, 0L, perturbed = false)
 
   /** Synthetic media fixture (deterministic) for tests/demos. */
   def syntheticMedia(spark: SparkSession, n: Int): DataFrame = {

@@ -133,12 +133,9 @@ object Drift {
       quantize: Option[Int] = None,
       maxDistinct: Long = 10000000L): DataFrame = {
     require(critical > 0, s"critical must be positive, got $critical")
-    def counts(df: DataFrame, name: String) = {
-      val vRaw = value.cast("double")
-      val v = quantize.map(round(vRaw, _)).getOrElse(vRaw)
-      df.select(v.as("v")).filter(col("v").isNotNull)
+    def counts(df: DataFrame, name: String) =
+      df.select(Eval.quantized(value, quantize).as("v")).filter(col("v").isNotNull)
         .groupBy("v").agg(count(lit(1)).as(name))
-    }
     val joined = counts(a, "ca").join(counts(b, "cb"), Seq("v"), "full_outer")
       .na.fill(0L, Seq("ca", "cb"))
     val w = Window.orderBy("v")
@@ -570,8 +567,7 @@ object Drift {
       value: Column): DataFrame = {
     val daily = events.filter(ts.isNotNull)
       .select(group.as("group_key"),
-        (unix_millis(date_trunc("day", ts)) / lit(86400000L))
-          .cast("long").as("di"),
+        Events.dayIndex(ts).as("di"),
         round(value.cast("double"), 6).as("x"))
       .groupBy("group_key", "di")
       .agg(coalesce(sum(col("x").cast("decimal(28,6)")),
@@ -762,20 +758,8 @@ object Drift {
       events: DataFrame,
       group: Column,
       ts: Column): DataFrame = {
-    val days = events.filter(ts.isNotNull)
-      .select(group.as("group_key"),
-        (unix_millis(date_trunc("day", ts)) / lit(86400000L))
-          .cast("long").as("di"))
-      .groupBy("group_key", "di")
-      .agg(count(lit(1)).as("cnt"))
-    val spine = days.agg(min("di").as("lo"), max("di").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("di"))
-    val filled = days.select("group_key").distinct()
-      .crossJoin(broadcast(spine))
-      .join(days, Seq("group_key", "di"), "left")
-      .select(col("group_key"), col("di"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"),
-        pmod(col("di"), lit(7L)).cast("long").as("dow"))
+    val filled = Events.dailyCounts(events, group, ts)
+      .withColumn("dow", pmod(col("di"), lit(7L)).cast("long"))
     val wDow = Window.partitionBy("group_key", "dow")
       .orderBy("di")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -827,20 +811,8 @@ object Drift {
     * trend/remainder NULL on the 3-day edges, ordered (group_key, di). */
   def seasonalDecompose(
       events: DataFrame, group: Column, ts: Column): DataFrame = {
-    val days = events.filter(ts.isNotNull)
-      .select(group.as("group_key"),
-        (unix_millis(date_trunc("day", ts)) / lit(86400000L))
-          .cast("long").as("di"))
-      .groupBy("group_key", "di")
-      .agg(count(lit(1)).as("cnt"))
-    val spine = days.agg(min("di").as("lo"), max("di").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("di"))
-    val filled = days.select("group_key").distinct()
-      .crossJoin(broadcast(spine))
-      .join(days, Seq("group_key", "di"), "left")
-      .select(col("group_key"), col("di"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"),
-        pmod(col("di"), lit(7L)).cast("long").as("dow"))
+    val filled = Events.dailyCounts(events, group, ts)
+      .withColumn("dow", pmod(col("di"), lit(7L)).cast("long"))
     val wTrend = Window.partitionBy("group_key").orderBy("di")
       .rowsBetween(-3, 3)
     val trended = filled
@@ -918,19 +890,9 @@ object Drift {
     require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1,
       s"alpha/beta in (0,1): $alpha $beta")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    val days = events.filter(ts.isNotNull && group.isNotNull)
-      .select(group.cast("string").as("group_key"),
-        (unix_millis(date_trunc("day", ts)) / lit(86400000L))
-          .cast("long").as("di"))
-      .groupBy("group_key", "di")
-      .agg(count(lit(1)).as("cnt"))
-    val spine = days.agg(min("di").as("lo"), max("di").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("di"))
-    val series = days.select("group_key").distinct()
-      .crossJoin(broadcast(spine))
-      .join(days, Seq("group_key", "di"), "left")
-      .select(col("group_key"), col("di"),
-        coalesce(col("cnt"), lit(0L)).cast("double").as("x"))
+    val series = Events.dailyCounts(
+        events.filter(group.isNotNull), group.cast("string"), ts)
+      .select(col("group_key"), col("di"), col("cnt").cast("double").as("x"))
       .groupBy("group_key")
       .agg(transform(array_sort(collect_list(struct(col("di"), col("x")))),
         e => e.getField("x")).as("xs"))

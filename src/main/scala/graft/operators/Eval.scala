@@ -328,14 +328,7 @@ object Eval {
   def rocAuc(scored: DataFrame, score: Column, label: Column,
       quantize: Option[Int] = None,
       maxDistinct: Long = 10000000L): DataFrame = {
-    val sRaw = score.cast("double")
-    val s = quantize.map(d => round(sRaw, d)).getOrElse(sRaw)
-    val perScore = scored
-      .select(s.as("s"),
-        when(coalesce(label, lit(false)), 1L).otherwise(0L).as("y"))
-      .filter(col("s").isNotNull)
-      .groupBy("s")
-      .agg(count(lit(1)).as("n"), sum("y").as("np"))
+    val perScore = labelCounts(scored, score, label, quantize)
       .withColumn("nn", col("n") - col("np"))
     val w = Window.orderBy("s")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -352,6 +345,31 @@ object Eval {
             (col("n_pos").cast("decimal(38,0)") * col("n_neg") * 2)
               .cast("double")).as("auc"))
   }
+
+  /** Per distinct (optionally `quantize`d) score `s`: the row count
+    * `n` and the positive count `np` (a NULL label is negative); NULL
+    * scores are dropped. The curve metrics' one data-sized aggregate. */
+  private def labelCounts(scored: DataFrame, score: Column, label: Column,
+      quantize: Option[Int]): DataFrame =
+    scored
+      .select(quantized(score, quantize).as("s"),
+        when(coalesce(label, lit(false)), 1L).otherwise(0L).as("y"))
+      .filter(col("s").isNotNull)
+      .groupBy("s")
+      .agg(count(lit(1)).as("n"), sum("y").as("np"))
+
+  /** `c` as a double, rounded to `quantize` decimals when given. */
+  private[operators] def quantized(c: Column, quantize: Option[Int]): Column = {
+    val d = c.cast("double")
+    quantize.map(round(d, _)).getOrElse(d)
+  }
+
+  /** The non-NULL (va, vb) pairs of `a` and `b`, each [[quantized]]:
+    * the input both rank correlations read. */
+  private def quantizedPairs(df: DataFrame, a: Column, b: Column,
+      quantize: Option[Int]): DataFrame =
+    df.select(quantized(a, quantize).as("va"), quantized(b, quantize).as("vb"))
+      .filter(col("va").isNotNull && col("vb").isNotNull)
 
   /** PR-AUC (average precision), the [[rocAuc]] companion for the
     * imbalanced case every quality-classifier eval lives in: with 1%
@@ -379,14 +397,7 @@ object Eval {
   def prAuc(scored: DataFrame, score: Column, label: Column,
       quantize: Option[Int] = None,
       maxDistinct: Long = 10000000L): DataFrame = {
-    val sRaw = score.cast("double")
-    val s = quantize.map(d => round(sRaw, d)).getOrElse(sRaw)
-    val perScore = scored
-      .select(s.as("s"),
-        when(coalesce(label, lit(false)), 1L).otherwise(0L).as("y"))
-      .filter(col("s").isNotNull)
-      .groupBy("s")
-      .agg(count(lit(1)).as("n"), sum("y").as("np"))
+    val perScore = labelCounts(scored, score, label, quantize)
     val wDesc = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy(col("s").desc)
@@ -703,12 +714,7 @@ object Eval {
   def kendallTau(df: DataFrame, a: Column, b: Column,
       quantize: Option[Int] = None,
       maxCells: Long = 10000L): DataFrame = {
-    def q(c: Column): Column = {
-      val d = c.cast("double")
-      quantize.map(round(d, _)).getOrElse(d)
-    }
-    val rows = df.select(q(a).as("va"), q(b).as("vb"))
-      .filter(col("va").isNotNull && col("vb").isNotNull)
+    val rows = quantizedPairs(df, a, b, quantize)
     val cells = rows.groupBy("va", "vb").agg(count(lit(1)).as("n"))
     val nRow = cells.agg(sum("n").as("n_rows"))
     def tiePairs(vc: String, out: String): DataFrame =
@@ -907,12 +913,7 @@ object Eval {
   def spearman(df: DataFrame, a: Column, b: Column,
       quantize: Option[Int] = None,
       maxDistinct: Long = 10000000L): DataFrame = {
-    def q(c: Column): Column = {
-      val d = c.cast("double")
-      quantize.map(round(d, _)).getOrElse(d)
-    }
-    val rows = df.select(q(a).as("va"), q(b).as("vb"))
-      .filter(col("va").isNotNull && col("vb").isNotNull)
+    val rows = quantizedPairs(df, a, b, quantize)
     def rank2(vc: String, out: String): DataFrame = {
       val w = Window.orderBy(col(vc))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1326,8 +1327,7 @@ object Eval {
       .filter(keep)
       .select((arm.map(_.as("__arm")).toSeq ++ Seq(
         ts.as("__ts"), id.as("__id"),
-        (unix_millis(date_trunc("day", ts)) / lit(86400000L))
-          .cast("long").as("__di"),
+        Events.dayIndex(ts).as("__di"),
         when(success, lit(1L)).otherwise(lit(0L)).as("x"),
         when(success, l1).otherwise(l0).as("term"))): _*)
     // rank + Λ-prefix inside each (arm, day) window: parallelism is

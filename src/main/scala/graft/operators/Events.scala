@@ -20,16 +20,11 @@ object Events {
   /** Tumbling-window aggregate. In batch, date_trunc IS the tumbling
     * window assignment (window($"ts","1 hour").start == date_trunc):
     * a pure map-side expression followed by one partial-aggregated
-    * shuffle on (window, key) — the canonical scalable shape. */
+    * shuffle on (window, key) — the canonical scalable shape. Rows come
+    * in no particular order, like the streaming twin's. */
   def tumblingAgg(events: DataFrame, unit: String): DataFrame =
-    events
-      .groupBy(
-        date_format(date_trunc(unit, col("ts")), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-      .orderBy("window_start", "event_type")
+    windowTotals(events,
+      date_format(date_trunc(unit, col("ts")), "yyyy-MM-dd HH:mm:ss").as("window_start"))
 
   /** Sliding (hopping) window aggregate: each event lands in
     * size/slide overlapping windows. window() is a map-side generator —
@@ -39,20 +34,49 @@ object Events {
     * multiple of `slideSec` (the only alignment with a closed-form
     * window assignment — same rule Structured Streaming enforces).
     * Window starts are epoch-aligned, matching `(t div slide - k) ×
-    * slide` for k in [0, size/slide). */
+    * slide` for k in [0, size/slide). Rows come in no particular order. */
   def slidingAgg(events: DataFrame, sizeSec: Long, slideSec: Long): DataFrame = {
     require(sizeSec % slideSec == 0, "window size must be a multiple of slide")
-    events
-      .groupBy(
-        window(col("ts"), s"$sizeSec seconds", s"$slideSec seconds"),
-        col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
+    windowTotals(events, window(col("ts"), s"$sizeSec seconds", s"$slideSec seconds"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
-      .orderBy("window_start", "event_type")
+  }
+
+  /** The windowed aggregate the batch operators and their streaming
+    * twins (graft.streaming.EventStreams) share: per (`window`,
+    * event_type), the event count `n` and the DECIMAL(18,6)-summed
+    * `total_value`. */
+  private[graft] def windowTotals(events: DataFrame, window: Column): DataFrame =
+    events
+      .groupBy(window, col("event_type"))
+      .agg(
+        count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
+
+  /** Whole days since the epoch of `ts`'s calendar day. */
+  private[operators] def dayIndex(ts: Column): Column =
+    (unix_millis(date_trunc("day", ts)) / lit(86400000L)).cast("long")
+
+  /** Per-(group_key, di) event counts `cnt` over every day from the
+    * first to the last active day of the whole frame: days with no
+    * events count 0 (a missing day is a real zero of the series, and
+    * skipping it would splice non-adjacent days together). Rows with a
+    * NULL `ts` are dropped. The events collapse to (group, day) counts
+    * in one map-side-combining aggregate; the day spine is broadcast. */
+  private[operators] def dailyCounts(
+      events: DataFrame, group: Column, ts: Column): DataFrame = {
+    val days = events.filter(ts.isNotNull)
+      .select(group.as("group_key"), dayIndex(ts).as("di"))
+      .groupBy("group_key", "di")
+      .agg(count(lit(1)).as("cnt"))
+    val spine = days.agg(min("di").as("lo"), max("di").as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"))).as("di"))
+    days.select("group_key").distinct()
+      .crossJoin(broadcast(spine))
+      .join(days, Seq("group_key", "di"), "left")
+      .select(col("group_key"), col("di"),
+        coalesce(col("cnt"), lit(0L)).as("cnt"))
   }
 
   /** Lag-L AUTOCORRELATION of daily event counts — the seasonality
@@ -86,22 +110,10 @@ object Events {
       ts: Column,
       lagDays: Int = 7): DataFrame = {
     require(lagDays >= 1, s"lagDays must be >= 1, got $lagDays")
-    val days = events.filter(ts.isNotNull)
-      .select(group.as("group_key"),
-        (unix_millis(date_trunc("day", ts)) / lit(86400000L))
-          .cast("long").as("di"))
-      .groupBy("group_key", "di")
-      .agg(count(lit(1)).as("x"))
-    val spine = days.agg(min("di").as("lo"), max("di").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("di"))
-    val filled = days.select("group_key").distinct()
-      .crossJoin(broadcast(spine))
-      .join(days, Seq("group_key", "di"), "left")
-      .select(col("group_key"), col("di"),
-        coalesce(col("x"), lit(0L)).as("x"))
-    val a = filled.select(col("group_key"), col("di"), col("x").as("xa"))
+    val filled = dailyCounts(events, group, ts)
+    val a = filled.select(col("group_key"), col("di"), col("cnt").as("xa"))
     val b = filled.select(col("group_key"),
-      (col("di") - lagDays).as("di"), col("x").as("xb"))
+      (col("di") - lagDays).as("di"), col("cnt").as("xb"))
     def dec(c: Column): Column = c.cast("decimal(19,0)")
     val m = a.join(b, Seq("group_key", "di"))
       .groupBy("group_key")
@@ -776,9 +788,7 @@ object Events {
       .filter(col("event_type").isNotNull && col("ts").isNotNull &&
         col("event_id").isNotNull)
       .select(col("event_type"), col("ts"), col("event_id"),
-        unix_millis(col("ts")).as("ms"),
-        (unix_millis(date_trunc("day", col("ts"))) / lit(86400000L))
-          .cast("long").as("di"))
+        unix_millis(col("ts")).as("ms"), dayIndex(col("ts")).as("di"))
     val wDay = Window.partitionBy("event_type", "di")
       .orderBy(col("ts"), col("event_id"))
     // per-(type, day) boundary: the day's LAST arrival in the same
@@ -812,6 +822,12 @@ object Events {
       .orderBy("group_key")
   }
 
+  /** (user_id, di) for every event with a user and a timestamp: the
+    * per-user day rows the activity family counts or deduplicates. */
+  private def eventDays(events: DataFrame): DataFrame =
+    events.filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("user_id"), dayIndex(col("ts")).as("di"))
+
   /** Per-day ACTIVITY CONCENTRATION — is today's volume real, or one
     * account? Per day: the Herfindahl index of per-user event shares,
     * its inverse (the EFFECTIVE number of equally-active users — 500
@@ -831,11 +847,7 @@ object Events {
     * Output: (di, n_events, n_users, top_share, hhi, eff_users), one
     * row per active day, ordered by di. */
   def activityConcentration(events: DataFrame): DataFrame = {
-    val perUser = events
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"),
-        (unix_millis(date_trunc("day", col("ts"))) / lit(86400000L))
-          .cast("long").as("di"))
+    val perUser = eventDays(events)
       .groupBy("di", "user_id")
       .agg(count(lit(1)).as("c"))
     perUser.groupBy("di").agg(
@@ -1018,12 +1030,7 @@ object Events {
     * Output: (user_id, n_active_days, n_streaks, longest_streak,
     * ending_streak), ordered by user_id. */
   def activityStreaks(events: DataFrame): DataFrame = {
-    val userDays = events
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"),
-        (unix_millis(date_trunc("day", col("ts"))) / lit(86400000L))
-          .cast("long").as("di"))
-      .distinct()
+    val userDays = eventDays(events).distinct()
     val w = Window.partitionBy("user_id").orderBy("di")
     val islands = userDays
       .withColumn("island", col("di") - row_number().over(w))
@@ -1067,12 +1074,7 @@ object Events {
     * Output: (di, n_active, n_new, n_retained, n_resurrected,
     * n_churned), one row per day in the observed range. */
   def growthAccounting(events: DataFrame): DataFrame = {
-    val userDays = events
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"),
-        (unix_millis(date_trunc("day", col("ts"))) / lit(86400000L))
-          .cast("long").as("di"))
-      .distinct()
+    val userDays = eventDays(events).distinct()
     val w = Window.partitionBy("user_id").orderBy("di")
     val lagged = userDays
       .withColumn("prev_di", lag("di", 1).over(w))
@@ -1133,12 +1135,7 @@ object Events {
     * Output: (di, dau, wau, mau, stickiness = dau/mau 6dp), one row
     * per observed-range day. */
   def stickiness(events: DataFrame): DataFrame = {
-    val userDays = events
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("user_id"),
-        (unix_millis(date_trunc("day", col("ts"))) / lit(86400000L))
-          .cast("long").as("di"))
-      .distinct()
+    val userDays = eventDays(events).distinct()
     val bounds = userDays.agg(min("di").as("lo"), max("di").as("hi"))
     val spine = bounds
       .select(explode(sequence(col("lo"), col("hi"))).as("di"))
@@ -1340,23 +1337,9 @@ object Events {
     * d_events, c_censored, s_km 6dp), ordered by t_days. */
   def kaplanMeier(
       events: DataFrame, target: Column): DataFrame = {
-    val perUser = survivalDurations(events, target)
-      .select("t_days", "observed")
-    val life = perUser
-      .groupBy("t_days")
-      .agg(
-        sum(when(col("observed"), 1L).otherwise(0L)).as("d_events"),
-        sum(when(col("observed"), 0L).otherwise(1L)).as("c_censored"))
-    val ord = Window.orderBy("t_days")
-    val before = ord.rowsBetween(Window.unboundedPreceding, -1)
-    val upto = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    life
-      .withColumn("n_risk",
-        sum(col("d_events") + col("c_censored")).over(
-          ord.rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)) -
-          coalesce(sum(col("d_events") + col("c_censored")).over(before),
-            lit(0L)))
+    val upto = Window.orderBy("t_days")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    lifeTable(events, target)
       .withColumn("ln_term",
         when(col("d_events") < col("n_risk"),
           log(lit(1.0) - col("d_events").cast("double") /
@@ -1394,6 +1377,26 @@ object Events {
           .cast("long").as("t_days"),
         col("event_d").isNotNull.as("observed"))
 
+  /** The right-censored life table [[kaplanMeier]] and [[nelsonAalen]]
+    * read: per distinct duration t_days, the observed `d_events`, the
+    * censored `c_censored` and `n_risk`, the users whose duration is
+    * ≥ t_days (all users minus those that left at an earlier
+    * duration). */
+  private def lifeTable(events: DataFrame, target: Column): DataFrame = {
+    val ord = Window.orderBy("t_days")
+    survivalDurations(events, target)
+      .groupBy("t_days")
+      .agg(
+        sum(when(col("observed"), 1L).otherwise(0L)).as("d_events"),
+        sum(when(col("observed"), 0L).otherwise(1L)).as("c_censored"))
+      .withColumn("n_risk",
+        sum(col("d_events") + col("c_censored")).over(
+          ord.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)) -
+          coalesce(sum(col("d_events") + col("c_censored")).over(
+            ord.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+  }
+
   /** Nelson–Aalen cumulative-hazard estimate (Nelson '72, Aalen '78)
     * over the same right-censored life table as [[kaplanMeier]]:
     * H(t) = Σ_{t_i ≤ t} d_i/n_i. The additive twin of KM's product —
@@ -1414,21 +1417,9 @@ object Events {
     * Output: one row per distinct duration — (t_days, n_risk,
     * d_events, c_censored, h_na 6dp, var_na 6dp), ordered by t_days. */
   def nelsonAalen(events: DataFrame, target: Column): DataFrame = {
-    val life = survivalDurations(events, target)
-      .groupBy("t_days")
-      .agg(
-        sum(when(col("observed"), 1L).otherwise(0L)).as("d_events"),
-        sum(when(col("observed"), 0L).otherwise(1L)).as("c_censored"))
-    val ord = Window.orderBy("t_days")
-    val before = ord.rowsBetween(Window.unboundedPreceding, -1)
-    val upto = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    life
-      .withColumn("n_risk",
-        sum(col("d_events") + col("c_censored")).over(
-          ord.rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)) -
-          coalesce(sum(col("d_events") + col("c_censored")).over(before),
-            lit(0L)))
+    val upto = Window.orderBy("t_days")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    lifeTable(events, target)
       .withColumn("h_term",
         (col("d_events").cast("double") / col("n_risk").cast("double"))
           .cast("decimal(18,6)"))

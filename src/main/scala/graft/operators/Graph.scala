@@ -403,15 +403,7 @@ object Graph {
       rounds: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = Checkpointing.cut(
-      edges.select(a.as("a"), b.as("b"))
-        .filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("u"),
-          greatest(col("a"), col("b")).as("v"))
-        .distinct())
-    def degrees(ed: DataFrame): DataFrame = ed
-      .select(col("u").as("node")).union(ed.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
+    var e = Checkpointing.cut(simpleEdges(edges, a, b))
     (1 to rounds).foreach { _ =>
       // r18 note: cutting the survivor set (it feeds both semi-joins)
       // was measured and REJECTED — wash at sf0.1 (0.99/1.03) and
@@ -428,6 +420,20 @@ object Graph {
     }
     degrees(e)
   }
+
+  /** The undirected simple graph of `edges`: self-loops dropped, each
+    * pair once as (u, v) with u < v. */
+  private def simpleEdges(edges: DataFrame, a: Column, b: Column): DataFrame =
+    edges.select(a.as("a"), b.as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("u"),
+        greatest(col("a"), col("b")).as("v"))
+      .distinct()
+
+  /** (node, degree) over a (u, v) simple edge list. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("degree"))
 
   /** Multi-source BFS hop distance, `maxHops` fixed expansion rounds:
     * every node reachable from the seed set within `maxHops` undirected
@@ -533,16 +539,8 @@ object Graph {
     // r18: the simple-graph edge list and the degree table are each cut
     // once — the old lazy spelling replayed the upstream scan 4× (deg
     // twice inside the orientation build, e once, deg again at output)
-    val e = Checkpointing.cut(
-      edges.select(a.as("a"), b.as("b"))
-        .filter(col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("u"),
-          greatest(col("a"), col("b")).as("v"))
-        .distinct())
-    val deg = Checkpointing.cut(
-      e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("degree")))
+    val e = Checkpointing.cut(simpleEdges(edges, a, b))
+    val deg = Checkpointing.cut(degrees(e))
     // orient from the (deg, id)-smaller endpoint; carry the head's
     // (deg, id) key so the wedge self-join can order far endpoints
     // without a third deg lookup. Cut repartitioned+sorted on src: the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -86,15 +86,25 @@ object Similarity {
       probes: DataFrame, // (query_id, query_vec)
       corpus: DataFrame, // (vec_id, embedding)
       k: Int): DataFrame = {
-    val scored = corpus
+    exactTopK(corpus
       .crossJoin(broadcast(probes)) // |probes| rows → map-side replicate, no shuffle
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
-      .select("query_id", "vec_id", "sim") // slim before any shuffle
-    topKPerQuery(scored, k, Seq(col("sim").desc, col("vec_id")))
+      .filter(col("query_id") =!= col("vec_id")), k)
+  }
+
+  /** A candidate pair's exact cosine, 6dp. */
+  private def exactSim: Column = round(cosine(col("query_vec"), col("embedding")), 6)
+
+  /** The exact top-k every cosine path ends in: candidate pairs
+    * carrying (query_id, vec_id, query_vec, embedding) get their
+    * [[exactSim]], slim to (query_id, vec_id, sim) before any shuffle,
+    * and keep `k` per query by (sim DESC, vec_id) through
+    * [[topKPerQuery]]. Output (query_id, vec_id, sim, rank), ordered by
+    * (query_id, rank). */
+  private def exactTopK(pairs: DataFrame, k: Int): DataFrame =
+    topKPerQuery(pairs.withColumn("sim", exactSim).select("query_id", "vec_id", "sim"),
+      k, Seq(col("sim").desc, col("vec_id")))
       .select(col("query_id"), col("vec_id"), col("sim"), col("rank").cast("long").as("rank"))
       .orderBy("query_id", "rank")
-  }
 
   /** Truncated-dimension (Matryoshka) top-k: exact brute-force cosine
     * over only the FIRST `dims` components of every vector — the
@@ -172,7 +182,7 @@ object Similarity {
     * DECIMAL(18,6) sum per (query, doc), top-k with doc_id tie break. */
   private def exactMaxSim(pairs: DataFrame, k: Int): DataFrame = {
     val scored = pairs
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
+      .withColumn("sim", exactSim)
       .select("query_id", "doc_id", "q_token", "sim")
     val summed = scored
       .groupBy("query_id", "doc_id", "q_token")
@@ -349,13 +359,8 @@ object Similarity {
     val cellsFor = cells.get // corpus keeps 1 cell, probes nprobe
     val assigned = corpus.withColumn("cell", element_at(cellsFor(col("embedding"), 1), 1))
     val probed = probes.withColumn("cell", explode(cellsFor(col("query_vec"), nprobe)))
-    val scored = assigned.join(broadcast(probed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
-      .select("query_id", "vec_id", "sim") // slim before any shuffle
-    topKPerQuery(scored, k, Seq(col("sim").desc, col("vec_id")))
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rank").cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+    exactTopK(assigned.join(broadcast(probed), Seq("cell"))
+      .filter(col("query_id") =!= col("vec_id")), k)
   }
 
   /** The IVF cell ranking shared by [[ivfTopK]] and [[ivfNprobeSweep]]:
@@ -434,7 +439,7 @@ object Similarity {
     // mined ONCE at maxProbe; every sweep point is a filter over this
     val scored = assigned.join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
+      .withColumn("sim", exactSim)
       .select("query_id", "vec_id", "sim", "cell_rank")
     val cands = scored
       .withColumn("nprobe",
@@ -542,7 +547,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
     candidates
       .join(corpus, Seq("vec_id")) // id-join: floats fetched for candidates only
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
+      .withColumn("sim", exactSim)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id"), col("sim"), col("rank").cast("long").as("rank"))
@@ -642,12 +647,7 @@ object Similarity {
       .filter(col("query_id") =!= col("vec_id"))
       .select("query_id", "query_vec", "vec_id", "embedding")
       .dropDuplicates("query_id", "vec_id") // same pair can share several bands
-    val scored = candidates
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
-      .select("query_id", "vec_id", "sim") // slim before any shuffle
-    topKPerQuery(scored, k, Seq(col("sim").desc, col("vec_id")))
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rank").cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+    exactTopK(candidates, k)
   }
 
   /** Product-quantization ANN (Jégou et al., "Product Quantization for
@@ -748,14 +748,9 @@ object Similarity {
     val cand = topKPerQuery(coarse, refine, Seq(col("qsim").desc, col("vec_id")))
       .select("query_id", "vec_id")
     // exact re-rank: rehydrate only the refine candidates per probe
-    val rer = cand
+    exactTopK(cand
       .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(probes.select(col("query_id"), col("query_vec")), Seq("query_id"))
-      .withColumn("sim", round(cosine(col("query_vec"), col("embedding")), 6))
-      .select("query_id", "vec_id", "sim")
-    topKPerQuery(rer, k, Seq(col("sim").desc, col("vec_id")))
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rank").cast("long").as("rank"))
-      .orderBy("query_id", "rank")
+      .join(probes.select(col("query_id"), col("query_vec")), Seq("query_id")), k)
   }
 
   /** Maximal-Marginal-Relevance diversification (Carbonell & Goldstein
@@ -1028,8 +1023,6 @@ object Similarity {
       vec: Column,
       zThreshold: Double = 3.0): DataFrame = {
     require(zThreshold > 0, s"zThreshold must be positive, got $zThreshold")
-    def q9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     val all = df.select(id.as("vec_id"), vec.cast("array<double>").as("x"))
     val first = all.filter(col("x").isNotNull).limit(1).collect()
     if (first.isEmpty)
@@ -1038,15 +1031,7 @@ object Similarity {
         lit(null).cast("double").as("zscore"), lit(true).as("is_outlier"))
     val d = first.head.getSeq[Double](1).length
     val ok = col("x").isNotNull && size(col("x")) === d
-    val meanRows = all.filter(ok)
-      .select(posexplode(col("x")))
-      .groupBy("pos")
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("col"), 9).cast("decimal(28,9)")).as("sx"))
-      .collect()
-    val n = meanRows.head.getLong(1)
-    val m = Array.ofDim[Double](d)
-    meanRows.foreach(r => m(r.getInt(0)) = q9(r.getDecimal(2).doubleValue() / n))
+    val m = coordMeans(all.filter(ok), d)._2.map(q9)
     val mLit = array(m.toIndexedSeq.map(lit(_)): _*)
     val dist2 = round(aggregate(
       zip_with(col("x"), mLit, (xi, mi) => (xi - mi) * (xi - mi)),
@@ -1114,10 +1099,6 @@ object Similarity {
     * component. Ragged rows (length ≠ d of the first row) are dropped. */
   def pcaPower(df: DataFrame, vec: Column, iters: Int = 5,
       gramDimLimit: Int = 128): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    def q9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     val all = df.select(vec.cast("array<double>").as("x"))
       .filter(col("x").isNotNull)
     val first = all.limit(1).collect()
@@ -1127,17 +1108,8 @@ object Similarity {
     val wk = all.filter(size(col("x")) === d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val meanRows = wk.select(posexplode(col("x")))
-        .groupBy("pos")
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("col"), 9).cast("decimal(28,9)")).as("sx"))
-        .collect()
-      val n = meanRows.head.getLong(1)
-      val m = Array.ofDim[Double](d)
-      meanRows.foreach(r => m(r.getInt(0)) = r.getDecimal(2).doubleValue() / n)
-      var v = Array.fill(d)(q9(1.0 / math.sqrt(d.toDouble)))
-      var lambda = 0.0
-      for (_ <- 1 to iters) {
+      val (n, m) = coordMeans(wk, d)
+      powerIterate(df.sparkSession, d, n, iters) { v =>
         val c = (0 until d).foldLeft(0.0)((acc, j) => acc + m(j) * v(j))
         val sCol = dot(col("x"), array(v.map(lit).toIndexedSeq: _*)) - lit(c)
         val rows = wk.select(sCol.as("s"), posexplode(col("x")))
@@ -1152,15 +1124,8 @@ object Similarity {
           aj(r.getInt(0)) = r.getDecimal(1).doubleValue()
           sS = r.getDecimal(2).doubleValue()
         }
-        val w = Array.tabulate(d)(j => aj(j) - sS * m(j))
-        val nrm = math.sqrt((0 until d).foldLeft(0.0)((acc, j) => acc + w(j) * w(j)))
-        require(nrm > 0.0,
-          "pcaPower: degenerate (zero-variance) corpus — no principal direction")
-        v = w.map(x => q9(x / nrm))
-        lambda = nrm / n
+        Array.tabulate(d)(j => aj(j) - sS * m(j))
       }
-      (0 until d).map(j => (j.toLong, v(j), lambda))
-        .toDF("dim", "loading", "lambda")
     } finally wk.unpersist(blocking = false)
   }
 
@@ -1194,8 +1159,6 @@ object Similarity {
   private def pcaPowerGram(all: DataFrame, d: Int, iters: Int): DataFrame = {
     val spark = all.sparkSession
     import spark.implicits._
-    def q9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     // 9dp HALF_UP tick (value·10⁹ as an exact long) — the same quantum
     // Spark's round(·, 9) + DECIMAL(28,9) sums produce, so summing
     // ticks in longs IS the decimal sum (exact, overflow→addExact
@@ -1263,16 +1226,45 @@ object Similarity {
     val n = math.round(G(0)(0)) // Σ round(1·1, 9) = exact row count
     val u = Array.tabulate(d)(j => G(0)(j + 1))
     val m = Array.tabulate(d)(j => u(j) / n)
-    var v = Array.fill(d)(q9(1.0 / math.sqrt(d.toDouble)))
-    var lambda = 0.0
-    for (_ <- 1 to iters) {
+    powerIterate(spark, d, n, iters) { v =>
       val c = (0 until d).foldLeft(0.0)((acc, j) => acc + m(j) * v(j))
       val sS =
         (0 until d).foldLeft(0.0)((acc, k) => acc + u(k) * v(k)) - c * n
-      val w = Array.tabulate(d) { j =>
+      Array.tabulate(d) { j =>
         ((0 until d).foldLeft(0.0)((acc, k) => acc + G(j + 1)(k + 1) * v(k)) -
           c * u(j)) - sS * m(j)
       }
+    }
+  }
+
+  private def q9(x: Double): Double =
+    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Per-coordinate means of the width-`d` vectors in column `x`, with
+    * the row count: one posexplode aggregate, 9dp-quantized coordinates
+    * summed in DECIMAL(28,9). */
+  private def coordMeans(rows: DataFrame, d: Int): (Long, Array[Double]) = {
+    val meanRows = rows.select(posexplode(col("x")))
+      .groupBy("pos")
+      .agg(count(lit(1)).as("n"),
+        sum(round(col("col"), 9).cast("decimal(28,9)")).as("sx"))
+      .collect()
+    val n = meanRows.head.getLong(1)
+    val m = Array.ofDim[Double](d)
+    meanRows.foreach(r => m(r.getInt(0)) = r.getDecimal(2).doubleValue() / n)
+    (n, m)
+  }
+
+  /** The rounds both [[pcaPower]] paths run: from v = q9(1/√d), each
+    * of `iters` rounds takes w = `step`(v), then v ← q9(w/‖w‖) and
+    * λ = ‖w‖/n. Output d rows (dim, loading, lambda). */
+  private def powerIterate(spark: SparkSession, d: Int, n: Long, iters: Int)(
+      step: Array[Double] => Array[Double]): DataFrame = {
+    import spark.implicits._
+    var v = Array.fill(d)(q9(1.0 / math.sqrt(d.toDouble)))
+    var lambda = 0.0
+    for (_ <- 1 to iters) {
+      val w = step(v)
       val nrm = math.sqrt((0 until d).foldLeft(0.0)((acc, j) => acc + w(j) * w(j)))
       require(nrm > 0.0,
         "pcaPower: degenerate (zero-variance) corpus — no principal direction")

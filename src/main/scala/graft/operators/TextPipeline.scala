@@ -52,9 +52,17 @@ object TextPipeline {
     // the (vast) non-matching majority of corpus grams, so the only
     // shuffle is the per-doc distinct-overlap count of MATCHING grams —
     // a corpus-wide pre-distinct would shuffle every gram of every doc
-    val overlap = corpus
+    overlapPerDoc(corpus, id, corpus
       .select(id.as("doc_id"), explode(GraftFunctions.word_ngrams(text, n)).as("gram"))
-      .join(broadcast(evalGrams), Seq("gram"))
+      .join(broadcast(evalGrams), Seq("gram")))
+  }
+
+  /** The contamination readout over `matched` (doc_id, gram) rows:
+    * every corpus doc with its distinct matched-gram count (0 when
+    * none) and `contaminated`. */
+  private def overlapPerDoc(
+      corpus: DataFrame, id: Column, matched: DataFrame): DataFrame = {
+    val overlap = matched
       .groupBy("doc_id")
       .agg(count_distinct(col("gram")).as("n_overlap"))
     corpus.select(id.as("doc_id"))
@@ -196,15 +204,8 @@ object TextPipeline {
         explode(GraftFunctions.word_ngrams(text, n)).as("gram"))
       .where(GraftFunctions.bloom_might_contain(
         col("gram"), gramBloom(evalGrams, expectedGrams, fpp)))
-    val overlap = survivors
-      .join(evalGrams, Seq("gram"), "left_semi") // exact verify: fpp → 0
-      .groupBy("doc_id")
-      .agg(count_distinct(col("gram")).as("n_overlap"))
-    corpus.select(id.as("doc_id"))
-      .join(overlap, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-      .withColumn("contaminated", col("n_overlap") > 0)
+    overlapPerDoc(corpus, id,
+      survivors.join(evalGrams, Seq("gram"), "left_semi")) // exact verify: fpp → 0
   }
 
   /** Distributed bloom build over a one-column gram frame, serialized
@@ -434,26 +435,8 @@ object TextPipeline {
       // a literal "2.25" parsed by another engine is bit-identical to the
       // k1+1 computed here (1.2 would land the sum on a round-half tie).
       k1: Double = 1.25, b: Double = 0.75): DataFrame = {
-    val lengths = docs.select(id.as("doc_id"),
-      TextFunctions.tokenCount(text).as("dl"))
-    val toks = docs.select(id.as("doc_id"), explode(split(text, " ")).as("term"))
-      .filter(col("term").isin(terms: _*)) // pushed below the shuffle
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = docs.agg(
-      count(lit(1)).as("n_docs"),
-      sum(TextFunctions.tokenCount(text)).as("total_tokens"))
-    val scored = tf
-      .join(lengths, Seq("doc_id")) // tf side is small: only matching docs
-      .join(broadcast(df), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("avgdl",
-        col("total_tokens").cast("double") / col("n_docs"))
-      .withColumn("term_score",
-        (col("n_docs").cast("double") / col("df")) *
-          (col("tf").cast("double") * lit(k1 + 1.0) /
-            (col("tf").cast("double") +
-              lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))))
+    val scored = bm25TermScores(docs, id, text, k1, b)(
+      _.filter(col("term").isin(terms: _*))) // pushed below the shuffle
     scored.groupBy("doc_id")
       .agg(sum(col("term_score").cast("decimal(18,6)")).cast("double").as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -482,18 +465,37 @@ object TextPipeline {
       k: Int,
       k1: Double = 1.25, b: Double = 0.75): DataFrame = {
     val q = queries.select(col("query_id"), col("term")).distinct()
+    val scored = bm25TermScores(docs, id, text, k1, b)(
+      _.join(broadcast(q.select("term").distinct()), Seq("term"), "left_semi"),
+      _.join(broadcast(q), Seq("term"))) // fan out postings per asking query
+    scored.groupBy("query_id", "doc_id")
+      .agg(sum(col("term_score").cast("decimal(18,6)")).cast("double").as("score"))
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy("query_id")
+          .orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** The BM25 scoring [[bm25]] and [[bm25ForQueries]] share: the
+    * corpus tokens `keep` passes become per-(doc, term) `tf`, per-term
+    * `df` and the corpus scalars (N, avgdl); `perQuery` fans the tf
+    * rows out before they meet the doc lengths, then each row gets its
+    * `term_score`. */
+  private def bm25TermScores(
+      docs: DataFrame, id: Column, text: Column, k1: Double, b: Double)(
+      keep: DataFrame => DataFrame,
+      perQuery: DataFrame => DataFrame = identity): DataFrame = {
     val lengths = docs.select(id.as("doc_id"),
       TextFunctions.tokenCount(text).as("dl"))
-    val toks = docs.select(id.as("doc_id"), explode(split(text, " ")).as("term"))
-      .join(broadcast(q.select("term").distinct()), Seq("term"), "left_semi")
+    val toks = keep(docs.select(id.as("doc_id"), explode(split(text, " ")).as("term")))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = docs.agg(
       count(lit(1)).as("n_docs"),
       sum(TextFunctions.tokenCount(text)).as("total_tokens"))
-    val scored = tf
-      .join(broadcast(q), Seq("term")) // fan out postings per asking query
-      .join(lengths, Seq("doc_id"))
+    perQuery(tf)
+      .join(lengths, Seq("doc_id")) // tf side is small: only matching docs
       .join(broadcast(df), Seq("term"))
       .crossJoin(broadcast(stats))
       .withColumn("avgdl",
@@ -503,13 +505,6 @@ object TextPipeline {
           (col("tf").cast("double") * lit(k1 + 1.0) /
             (col("tf").cast("double") +
               lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))))
-    scored.groupBy("query_id", "doc_id")
-      .agg(sum(col("term_score").cast("decimal(18,6)")).cast("double").as("score"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id")
-          .orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
-      .filter(col("rank") <= k)
   }
 
   /** Quality-decile bucketing: assign every document a 0-9 bucket by
@@ -738,8 +733,7 @@ object TextPipeline {
       trainFrac: Double = 0.8): DataFrame = {
     require(trainFrac > 0 && trainFrac < 1,
       s"trainFrac must be in (0,1), got $trainFrac")
-    val di = (unix_millis(date_trunc("day", ts)) / lit(86400000L))
-      .cast("long")
+    val di = Events.dayIndex(ts)
     val full = Window.orderBy("di")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val cum = Window.orderBy("di")

@@ -47,7 +47,8 @@ object EventQueries {
   def all: Seq[Query] = Seq(
     // ── Tumbling-window aggregate (batch twin of the streaming op).
     Query("ext_event_tumbling", (s, dir) =>
-      Events.tumblingAgg(t(s, dir, "events"), "hour"),
+      Events.tumblingAgg(t(s, dir, "events"), "hour")
+        .orderBy("window_start", "event_type"),
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
         |       event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
@@ -311,7 +312,8 @@ object EventQueries {
     //    Events.slidingAgg; each event fans out map-side into exactly
     //    size/slide = 2 windows before the one aggregate shuffle.
     Query("ext_event_sliding", (s, dir) =>
-      Events.slidingAgg(t(s, dir, "events"), sizeSec = 3600, slideSec = 1800),
+      Events.slidingAgg(t(s, dir, "events"), sizeSec = 3600, slideSec = 1800)
+        .orderBy("window_start", "event_type"),
       // windows containing t start at (t div 1800 - k) * 1800, k in {0,1}
       // — the closed form of Spark's window(ts, '3600s', '1800s') fan-out
       """WITH e AS (

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -99,15 +99,7 @@ object EventStreams {
     * Events.tumblingAgg). Watermark allows 10 min of lateness; append
     * mode emits each window once, when it finalizes. */
   def tumblingAgg(events: DataFrame, window_ : String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"), col("n"), col("total_value"))
+    windowTotals(events, window(col("ts"), window_))
 
   /** Sliding (hopping) window counts/sums per event type (batch twin:
     * Events.slidingAgg): each event fans out map-side into size/slide
@@ -116,12 +108,12 @@ object EventStreams {
     * holds only the size/slide currently-open windows per key. */
   def slidingAgg(events: DataFrame, size: String = "1 hour",
       slide: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), size, slide), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
+    windowTotals(events, window(col("ts"), size, slide))
+
+  /** The batch twins' windowed aggregate over the watermarked stream,
+    * keyed by the window's start. */
+  private def windowTotals(events: DataFrame, w: Column): DataFrame =
+    graft.operators.Events.windowTotals(events.withWatermark("ts", "10 minutes"), w)
       .select(
         col("window.start").as("window_start"),
         col("event_type"), col("n"), col("total_value"))

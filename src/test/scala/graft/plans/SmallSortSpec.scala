@@ -89,9 +89,8 @@ class SmallSortSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a rewritten query's root sort reads one partition, not a range exchange") {
-    // a sort below the root (ext_trending's tumblingAgg) keeps its own
     val rewrites = outcomes.filter(_.rewritten)
-    val ranged = rewrites.filterNot(o => o.onePartition && o.rangeExchanges <= o.rawRangeExchanges)
+    val ranged = rewrites.filterNot(o => o.onePartition && o.rangeExchanges == 0)
       .map(o => s"${o.name} ${o.rawRangeExchanges}->${o.rangeExchanges}")
     assert(ranged.isEmpty, s"root sort not on one partition: ${ranged.mkString(", ")}")
     val fell = rewrites.count(o => o.rangeExchanges == o.rawRangeExchanges - 1)
